@@ -80,7 +80,7 @@ object RelationalALS {
     * Σ v·f1·f2 per (target row, pos). Shuffle joins — neither factor is
     * assumed broadcastable. Catalyst broadcasts them anyway when small.
     */
-  private def mttkrp(
+  private[graft] def mttkrp(
       coo: DataFrame, targetCol: String,
       f1: DataFrame, f1Col: String,
       f2: DataFrame, f2Col: String): DataFrame =

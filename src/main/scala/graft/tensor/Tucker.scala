@@ -1,7 +1,9 @@
 package graft.tensor
 
 import breeze.linalg.{eigSym, DenseMatrix => BDM}
+import dev.ludovic.netlib.arpack.JavaARPACK
 import org.apache.spark.sql.DataFrame
+import org.netlib.util.{doubleW, intW}
 
 /** Tucker decomposition by truncated HOSVD (De Lathauwer, De Moor &
   * Vandewalle, "A Multilinear Singular Value Decomposition", SIMAX 21(4)
@@ -18,12 +20,19 @@ import org.apache.spark.sql.DataFrame
   *    fiber id, sparse outer products inside each partition (cost
   *    Σ nnz_f² — fibers are sparse), tree-combined I_n² partial arrays.
   *    The tensor itself is never unfolded or densified.
-  *  - G_n eigendecomposes on the driver (breeze eigSym) — I_n² doubles.
-  *    Modes whose dimension exceeds `maxGramDim` switch AUTOMATICALLY to
-  *    the randomized range-finder path (Halko et al. 2011): two fiber
-  *    passes with deterministic per-fiber Gaussians, driver/broadcast
-  *    state d·(r+8) — the same order as the returned factor — instead
-  *    of d².
+  *  - The leading r eigenvectors of G_n are solved on the driver, by
+  *    the mode's dimension d:
+  *    - d <= `exactEigDim` (512): full dsyev (breeze eigSym), about
+  *      0.3 s in pure Java at d = 512.
+  *    - d <= `maxGramDim` (4096): implicitly restarted Lanczos
+  *      (pure-Java ARPACK) on the same Gram. Only the rank-r subspace is
+  *      computed, in O(d²) per matvec — about a hundred matvecs instead
+  *      of dsyev's O(d³), which takes seconds at d = 1500. A solve that
+  *      does not converge logs a WARN and falls back to dsyev.
+  *    - larger d: the Gram is never built. The randomized range finder
+  *      (Halko et al. 2011) makes two fiber passes with deterministic
+  *      per-fiber Gaussians, with driver/broadcast state d·(r+8) — the
+  *      same order as the returned factor — instead of d².
   *  - The core G = X ×₁U₁ᵀ ×₂U₂ᵀ ×₃U₃ᵀ is ONE pass over the nonzeros
   *    with the (small) factors broadcast: R₁R₂R₃ multiply-adds per
   *    nonzero, tree-aggregated. Nothing larger than the core crosses
@@ -76,12 +85,112 @@ object Tucker {
     decompose(coo, ranks, maxGramDim, sweeps = sweeps,
       exactEigDim = DefaultExactEigDim)
 
-  /** Full dsyev stays the exact path while it is seconds-cheap in pure
-    * Java (d <= 512 => ~0.3 s); above it the subspace iteration takes
-    * over (with a Ritz-residual convergence check and exact fallback),
-    * and past maxGramDim the Gram itself is never built.
+  /** Largest mode dimension solved by full dsyev, which stays cheap in
+    * pure Java up to here (~0.3 s at d = 512). Modes up to maxGramDim use
+    * ARPACK Lanczos on the same Gram ([[lanczosEigvecs]]); past
+    * maxGramDim the Gram itself is never built.
     */
   val DefaultExactEigDim = 512
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Restart cap of the production Lanczos solves. */
+  private val LanczosMaxIter = 300
+
+  /** Deterministic sign: first nonzero component positive. */
+  private def signFix(v: Array[Double]): Array[Double] = {
+    val lead = v.find(math.abs(_) > 1e-12).getOrElse(1.0)
+    if (lead < 0) v.map(-_) else v
+  }
+
+  /** Top-r eigenvectors (eigenvalue-descending, sign-fixed) of the
+    * symmetric row-major d×d matrix `g` by full dsyev.
+    */
+  private[graft] def exactEigvecs(g: Array[Double], d: Int, r: Int): Array[Array[Double]] = {
+    // g is symmetric, so its row-major array reads as the same column-major matrix
+    val es = eigSym(new BDM(d, d, g)) // ascending eigenvalues
+    val order = (0 until d).sortBy(p => -es.eigenvalues(p)).take(r)
+    order.map(p => signFix(Array.tabulate(d)(row => es.eigenvectors(row, p)))).toArray
+  }
+
+  /** F2J ARPACK keeps Fortran SAVE state in static fields, so every
+    * dsaupd/dseupd sequence runs under this lock.
+    */
+  private val arpackLock = new Object
+
+  /** Top-r eigenvectors of the symmetric PSD row-major d×d Gram `g` by
+    * implicitly restarted Lanczos (ARPACK dsaupd/dseupd, pure Java) with
+    * `ncv = min(max(2r, r+8), d)` Lanczos vectors, relative tolerance
+    * 1e-10 and at most `maxIter` restarts. Same order and sign rule as
+    * [[exactEigvecs]]. Deterministic: the start vector comes from a fixed
+    * seed, and ARPACK's own restart seed is reset before every solve.
+    *
+    * Returns the vectors and whether Lanczos produced them. When ARPACK
+    * fails or converges fewer than r pairs, a WARN names the mode and the
+    * exact dsyev answers instead. When ncv would reach d (r close to d;
+    * ARPACK needs nev < ncv <= d), dsyev answers directly.
+    */
+  private[graft] def lanczosEigvecs(
+      g: Array[Double], d: Int, r: Int, maxIter: Int,
+      mode: Int): (Array[Array[Double]], Boolean) = {
+    val ncv = math.min(math.max(2 * r, r + 8), d)
+    if (ncv >= d) (exactEigvecs(g, d, r), false)
+    else {
+      val rnd = new java.util.Random(0xA11CEL)
+      val resid = Array.fill(d)(rnd.nextGaussian())
+      val v = new Array[Double](d * ncv)
+      val workd = new Array[Double](3 * d)
+      val workl = new Array[Double](ncv * (ncv + 8))
+      val iparam = new Array[Int](11)
+      iparam(0) = 1 // exact shifts
+      iparam(2) = maxIter
+      iparam(6) = 1 // mode 1: G·x = λ·x
+      val ipntr = new Array[Int](11)
+      val ido = new intW(0)
+      val info = new intW(1) // 1: resid holds the start vector
+      val tol = new doubleW(1e-10)
+      val arpack = JavaARPACK.getInstance()
+      val solved = arpackLock.synchronized {
+        org.netlib.arpack.Dgetv0.inits = true
+        def step(): Unit = arpack.dsaupd(ido, "I", d, "LM", r, tol, resid, ncv, v, d,
+          iparam, ipntr, workd, workl, workl.length, info)
+        step()
+        while (ido.`val` == 1 || ido.`val` == -1) {
+          val (x, y) = (ipntr(0) - 1, ipntr(1) - 1) // workd offsets: y = G·x
+          var i = 0
+          while (i < d) {
+            var acc = 0.0
+            var j = 0
+            while (j < d) { acc += g(i * d + j) * workd(x + j); j += 1 }
+            workd(y + i) = acc
+            i += 1
+          }
+          step()
+        }
+        val nconv = iparam(4)
+        val vals = new Array[Double](r)
+        val z = new Array[Double](d * r)
+        if (info.`val` == 0 && nconv >= r)
+          arpack.dseupd(true, "A", new Array[Boolean](ncv), vals, z, d, 0.0, "I", d, "LM",
+            new intW(r), tol.`val`, resid, ncv, v, d, iparam, ipntr, workd, workl,
+            workl.length, info)
+        if (info.`val` == 0 && nconv >= r) Some((vals, z))
+        else {
+          log.warn(s"Tucker mode $mode: ARPACK Lanczos did not converge (d=$d, r=$r, " +
+            s"nconv=$nconv, info=${info.`val`}, iterations=${iparam(2)} of $maxIter, " +
+            s"matvecs=${iparam(8)}); falling back to exact dsyev")
+          None
+        }
+      }
+      solved match {
+        case Some((vals, z)) =>
+          val order = (0 until r).sortBy(p => -vals(p))
+          (order.map(p => signFix(java.util.Arrays.copyOfRange(z, p * d, p * d + d))).toArray,
+            true)
+        case None => (exactEigvecs(g, d, r), false)
+      }
+    }
+  }
 
   private def decompose(
       coo: DataFrame,
@@ -118,15 +227,19 @@ object Tucker {
       val gramParts = math.max(2, math.min(
         rdd.sparkContext.defaultParallelism.toLong, nnz / 200000L + 1)).toInt
 
+      // Nonzeros keyed by their mode-`mode` fiber (the other two indices),
+      // valued (index along the mode, v).
+      def fibers(mode: Int) = rdd.map {
+        case (i, j, k, v) => mode match {
+          case 0 => ((j.toLong << 32) | (k.toLong & 0xffffffffL), (i, v))
+          case 1 => ((i.toLong << 32) | (k.toLong & 0xffffffffL), (j, v))
+          case _ => ((i.toLong << 32) | (j.toLong & 0xffffffffL), (k, v))
+        }
+      }
+
       // --- per-mode fiber Grams -----------------------------------------
       def gram(mode: Int, d: Int): Array[Double] = {
-        val keyed = rdd.map {
-          case (i, j, k, v) => mode match {
-            case 0 => ((j.toLong << 32) | (k.toLong & 0xffffffffL), (i, v))
-            case 1 => ((i.toLong << 32) | (k.toLong & 0xffffffffL), (j, v))
-            case _ => ((i.toLong << 32) | (j.toLong & 0xffffffffL), (k, v))
-          }
-        }
+        val keyed = fibers(mode)
         keyed.groupByKey(gramParts).mapPartitions { fibers =>
           val g = new Array[Double](d * d)
           fibers.foreach { case (_, entries) =>
@@ -150,24 +263,6 @@ object Tucker {
         }
       }
 
-      def leadingEigvecs(g: Array[Double], d: Int, r: Int): Array[Array[Double]] = {
-        val m = new BDM[Double](d, d)
-        var i = 0
-        while (i < d) {
-          var j = 0
-          while (j < d) { m(i, j) = g(i * d + j); j += 1 }
-          i += 1
-        }
-        val es = eigSym(m) // ascending eigenvalues
-        val order = (0 until d).sortBy(p => -es.eigenvalues(p)).take(r)
-        // deterministic sign: first nonzero component positive
-        order.map { p =>
-          val v = Array.tabulate(d)(row => es.eigenvectors(row, p))
-          val lead = v.find(math.abs(_) > 1e-12).getOrElse(1.0)
-          if (lead < 0) v.map(-_) else v
-        }.toArray
-      }
-
       // --- randomized range-finder for modes beyond the exact-Gram budget
       // (Halko, Martinsson & Tropp, SIAM Rev. 53(2) 2011, via the fiber
       // form: X_(n) = [x_f]_f with sparse fiber columns):
@@ -189,13 +284,7 @@ object Tucker {
           val rnd = new java.util.Random(seedBase ^ (fiber * 0x9E3779B97F4A7C15L))
           Array.fill(s)(rnd.nextGaussian())
         }
-        val keyed = rdd.map {
-          case (i, j, k, v) => mode match {
-            case 0 => ((j.toLong << 32) | (k.toLong & 0xffffffffL), (i, v))
-            case 1 => ((i.toLong << 32) | (k.toLong & 0xffffffffL), (j, v))
-            case _ => ((i.toLong << 32) | (j.toLong & 0xffffffffL), (k, v))
-          }
-        }
+        val keyed = fibers(mode)
         val y = keyed.groupByKey(gramParts).mapPartitions { fibers =>
           val buf = new Array[Double](d * s)
           fibers.foreach { case (fid, entries) =>
@@ -245,7 +334,7 @@ object Tucker {
           a
         }
         bq.destroy()
-        val w = leadingEigvecs(m, s, r) // r × s
+        val w = exactEigvecs(m, s, r) // r × s
         // U = Q · W — project back to d-space, then sign-normalize
         Array.tabulate(r) { p =>
           val u = new Array[Double](d)
@@ -257,81 +346,20 @@ object Tucker {
             u(rr) = acc
             rr += 1
           }
-          val lead = u.find(math.abs(_) > 1e-12).getOrElse(1.0)
-          if (lead < 0) u.map(-_) else u
+          signFix(u)
         }
-      }
-
-      // Leading eigvecs of a (symmetric PSD) Gram by DETERMINISTIC
-      // subspace iteration + Rayleigh–Ritz (Halko et al. 2011 §5.1 —
-      // the power-iterated range finder run on the driver against the
-      // EXACT Gram). Why (r13): this box has no native LAPACK, so
-      // breeze's full dsyev on a d×d Gram is pure-Java O(d³) — measured
-      // 6.7 s for d = 1500, which was ~the ENTIRE tucker bench leg —
-      // while the fit only needs the leading r-dimensional subspace.
-      // 20 sweeps of G·Q + thin QR cost O(20·d²·S) (~0.5 s at d = 1500,
-      // S = r+8) and converge the leading subspace to working precision
-      // under the power-iteration rate ((λ_{S+1}/λ_r)^sweeps); the fit
-      // identity depends only on the SUBSPACES (‖X ×ᵢ Uᵢᵀ‖² is invariant
-      // to rotations within each span), so the model is the HOSVD one.
-      // Deterministic: fixed-seed start, sign-fixed output — no
-      // partition-order dependence (everything here is driver-side).
-      def leadingEigvecsIterated(
-          g: Array[Double], d: Int, r: Int, seed: Long): Array[Array[Double]] = {
-        val s = math.min(d, r + 8)
-        val gm = new BDM[Double](d, d)
-        var i = 0
-        while (i < d) {
-          var j = 0
-          while (j < d) { gm(i, j) = g(i * d + j); j += 1 }
-          i += 1
-        }
-        val rnd = new java.util.Random(seed)
-        var q = breeze.linalg.qr.reduced(
-          BDM.tabulate(d, s)((_, _) => rnd.nextGaussian())).q
-        // Convergence-checked sweeps (r14, ADVICE r13): a fixed sweep
-        // count has no defense against a small spectral gap at rank r
-        // (rate (λ_{S+1}/λ_r)^sweeps). Run sweep batches until every
-        // selected Ritz pair's residual ‖G·u − θ·u‖ ≤ 1e-8·θ_max, up to
-        // 100 sweeps; if the gap is too small even then, fall back to
-        // the exact dsyev — slow but never wrong. Deterministic: fixed
-        // seed, fixed batch schedule, driver-side only.
-        var it = 0
-        var converged = false
-        var ritz: Array[Array[Double]] = null
-        while (!converged && it < 100) {
-          var b = 0
-          while (b < 20) { q = breeze.linalg.qr.reduced(gm * q).q; b += 1 }
-          it += 20
-          val small = q.t * (gm * q) // S×S Rayleigh–Ritz projection
-          val es = eigSym((small + small.t) * 0.5)
-          val order = (0 until s).sortBy(p => -es.eigenvalues(p)).take(r)
-          val u = q * es.eigenvectors // d×S ritz vectors
-          val thetaMax = math.max(math.abs(es.eigenvalues(order.head)), 1e-300)
-          converged = order.forall { p =>
-            val up = u(::, p)
-            val resid = gm * up - up * es.eigenvalues(p)
-            breeze.linalg.norm(resid) <= 1e-8 * thetaMax
-          }
-          ritz = order.map { p =>
-            val v = Array.tabulate(d)(row => u(row, p))
-            val lead = v.find(math.abs(_) > 1e-12).getOrElse(1.0)
-            if (lead < 0) v.map(-_) else v
-          }.toArray
-        }
-        if (converged) ritz else leadingEigvecs(g, d, r)
       }
 
       def basis(mode: Int, d: Int, r: Int): Array[Array[Double]] =
-        if (d <= exactEigDim) leadingEigvecs(gram(mode, d), d, r)
-        else if (d <= maxGramDim)
-          leadingEigvecsIterated(gram(mode, d), d, r, seed = 0xA11CE + mode)
+        if (d <= exactEigDim) exactEigvecs(gram(mode, d), d, r)
+        else if (d <= maxGramDim) lanczosEigvecs(gram(mode, d), d, r, LanczosMaxIter, mode)._1
         else randomizedBasis(mode, d, r)
 
       // The three HOSVD bases are independent Spark jobs over the same
       // persisted RDD — materialize them CONCURRENTLY (the Q161 shared-
       // relation discipline) instead of paying three sequential
-      // shuffle+reduce waits. HOOI's sweeps below stay sequential by
+      // shuffle+reduce waits (their Lanczos solves then take turns on the
+      // ARPACK lock). HOOI's sweeps below stay sequential by
       // definition (each mode refines against the others' CURRENT bases).
       val bases = {
         import scala.concurrent.{Await, Future}
@@ -347,10 +375,6 @@ object Tucker {
       var u3 = bases(2)
 
       // --- HOOI sweeps (sweeps = 0 → plain truncated HOSVD) -------------
-      def signFix(v: Array[Double]): Array[Double] = {
-        val lead = v.find(math.abs(_) > 1e-12).getOrElse(1.0)
-        if (lead < 0) v.map(-_) else v
-      }
       def refineMode(mode: Int, ua: Array[Array[Double]],
           ub: Array[Array[Double]], d: Int, r: Int): Array[Array[Double]] = {
         val ra = ua.length; val rb = ub.length

@@ -152,7 +152,7 @@ class TensorSpec extends SparkSpec {
   }
 
   test("relational MTTKRP equals the direct dense computation") {
-    import graft.tensor.RelationalMTTKRP
+    import graft.tensor.RelationalALS
     import spark.implicits._
     val rng = new scala.util.Random(11)
     val (ni, nj, nk, r) = (5, 4, 3, 2)
@@ -168,9 +168,11 @@ class TensorSpec extends SparkSpec {
         direct(i.toInt)(p) += v * b(j.toInt * r + p) * c(k.toInt * r + p)
     }
     val cooDf = coo.toDF("i", "j", "k", "v")
-    val got = RelationalMTTKRP.mttkrpMode1(cooDf,
-        RelationalMTTKRP.factorRelation(spark, b, nj, r, "j"),
-        RelationalMTTKRP.factorRelation(spark, c, nk, r, "k"))
+    // factor relations (row, pos, val), as RelationalALS keeps them
+    def rel(m: Array[Double], rows: Int, rowCol: String) =
+      (0 until rows).flatMap(x => (0 until r).map(p => (x.toLong, p, m(x * r + p))))
+        .toDF(rowCol, "pos", "val")
+    val got = RelationalALS.mttkrp(cooDf, "i", rel(b, nj, "j"), "j", rel(c, nk, "k"), "k")
       .collect().map(row => ((row.getLong(0), row.getInt(1)), row.getDouble(2))).toMap
     for (i <- 0 until ni; p <- 0 until r; if direct(i)(p) != 0.0 || got.contains((i.toLong, p)))
       assert(math.abs(got.getOrElse((i.toLong, p), 0.0) - direct(i)(p)) < 1e-9,

@@ -5,8 +5,9 @@ import org.apache.spark.sql.types._
 import graft.tensor.Tucker
 
 /** Tucker/HOSVD properties: orthonormal factors, exact reconstruction at
-  * full ranks, energy monotonicity in rank, and the fit identity checked
-  * against an explicit dense reconstruction.
+  * full ranks, energy monotonicity in rank, the fit identity checked
+  * against an explicit dense reconstruction, and the Lanczos eigensolver
+  * on both sides of its exact fallback.
   */
 class TuckerSpec extends SparkSpec {
 
@@ -28,22 +29,110 @@ class TuckerSpec extends SparkSpec {
     } yield (i, j, k, math.rint(rnd.nextDouble() * 100) / 10.0)
   }
 
-  test("subspace-iterated eig path matches exact dsyev fit at d > 512") {
+  /** ‖Uᵀ·V‖²_F of two r-vector orthonormal bases: r when the spans agree. */
+  private def overlap(u: Array[Array[Double]], v: Array[Array[Double]]): Double =
+    (for (a <- u; b <- v) yield math.pow(a.zip(b).map { case (x, y) => x * y }.sum, 2)).sum
+
+  /** Fixed-seed sparse tensor with a planted rank-3 signal plus noise. */
+  private def plantedSparse(dims: (Int, Int, Int), fill: Double, seed: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val (di, dj, dk) = dims
+    val a = Array.fill(3, di)(rnd.nextGaussian())
+    val b = Array.fill(3, dj)(rnd.nextGaussian())
+    val c = Array.fill(3, dk)(rnd.nextGaussian())
+    for {
+      i <- 0 until di; j <- 0 until dj; k <- 0 until dk
+      if rnd.nextDouble() < fill
+    } yield (i, j, k, (0 until 3).map(p => (3 - p) * a(p)(i) * b(p)(j) * c(p)(k)).sum +
+      0.1 * rnd.nextGaussian())
+  }
+
+  /** Row-major d×d Gram AᵀA of a fixed-seed n×d Gaussian A: PSD, rank n. */
+  private def gaussianGram(n: Int, d: Int, seed: Int): Array[Double] = {
+    val rnd = new scala.util.Random(seed)
+    val a = Array.fill(n, d)(rnd.nextGaussian())
+    val g = new Array[Double](d * d)
+    for (p <- 0 until d; q <- 0 to p) {
+      var s = 0.0
+      var m = 0
+      while (m < n) { s += a(m)(p) * a(m)(q); m += 1 }
+      g(p * d + q) = s
+      g(q * d + p) = s
+    }
+    g
+  }
+
+  private def same(u: Array[Array[Double]], v: Array[Array[Double]]): Boolean =
+    u.map(_.toSeq).toSeq == v.map(_.toSeq).toSeq
+
+  test("Lanczos eig path matches the exact dsyev fit and subspace at d > 512") {
     // Mode-0 dim 600 > the 512 exact fence, so the default run takes the
-    // convergence-checked subspace iteration while exactEigDim = 1024
-    // forces full dsyev on the identical Gram — the r13 numerics caveat,
-    // now pinned: fits agree to 1e-4 (VERDICT r13 item 8).
+    // ARPACK Lanczos path while exactEigDim = 1024 forces full dsyev on
+    // the identical Gram.
     val rnd = new scala.util.Random(31)
     val big = for {
       i <- 0 until 600; j <- 0 until 6; k <- 0 until 5
       if rnd.nextDouble() < 0.1
     } yield (i, j, k, math.rint(rnd.nextDouble() * 100) / 10.0)
     val df = cooDf(big)
-    val iterated = Tucker.hosvd(df, (4, 3, 3))
+    val lanczos = Tucker.hosvd(df, (4, 3, 3))
     val exact = Tucker.hosvd(df, (4, 3, 3), exactEigDim = 1024)
-    assert(iterated.fit >= 0.0 && exact.fit >= 0.0)
-    assert(math.abs(iterated.fit - exact.fit) <= 1e-4,
-      s"iterated fit ${iterated.fit} vs exact ${exact.fit}")
+    assert(lanczos.fit >= 0.0 && exact.fit >= 0.0)
+    assert(math.abs(lanczos.fit - exact.fit) <= 1e-4,
+      s"Lanczos fit ${lanczos.fit} vs exact ${exact.fit}")
+    assert(math.abs(lanczos.fit - exact.fit) <= 1e-9,
+      s"Lanczos fit ${lanczos.fit} vs exact ${exact.fit}")
+    val ov = overlap(lanczos.factors(0), exact.factors(0))
+    assert(ov >= 4 - 1e-8, s"mode-0 subspace overlap $ov of 4")
+  }
+
+  test("Lanczos solver matches eigSym when it converges and falls back loudly when capped") {
+    val (d, r) = (600, 4)
+    val g = gaussianGram(40, d, seed = 7)
+    val exact = Tucker.exactEigvecs(g, d, r)
+    val (vecs, ranLanczos) = Tucker.lanczosEigvecs(g, d, r, maxIter = 300, mode = 0)
+    assert(ranLanczos, "ARPACK did not converge within 300 restarts")
+    for (p <- 0 until r; x <- 0 until d)
+      assert(math.abs(vecs(p)(x) - exact(p)(x)) < 1e-8, s"vector $p, component $x")
+    // one restart cannot converge: the WARN-logged dsyev fallback answers
+    val (capped, cappedLanczos) = Tucker.lanczosEigvecs(g, d, r, maxIter = 1, mode = 0)
+    assert(!cappedLanczos, "one restart unexpectedly converged")
+    assert(same(capped, exact))
+    // r close to d: ncv would reach d, so dsyev answers directly
+    val small = gaussianGram(10, 12, seed = 8)
+    val (direct, directLanczos) = Tucker.lanczosEigvecs(small, 12, r, maxIter = 300, mode = 0)
+    assert(!directLanczos)
+    assert(same(direct, Tucker.exactEigvecs(small, 12, r)))
+  }
+
+  test("Lanczos factors are deterministic across calls and under concurrent solves") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // direct solves: concurrent calls on two Grams give the sequential answers bit for bit
+    val grams = Seq(600 -> gaussianGram(40, 600, seed = 7), 550 -> gaussianGram(30, 550, seed = 9))
+    def solve(x: Int) = {
+      val (d, g) = grams(x)
+      Tucker.lanczosEigvecs(g, d, 4, maxIter = 300, mode = x)
+    }
+    val sequential = Seq(0, 1).map(solve)
+    assert(sequential.forall(_._2), "ARPACK did not converge")
+    val concurrent = Seq(0, 1, 0, 1).map(x => Future(solve(x)))
+      .map(f => Await.result(f, Duration.Inf))
+    concurrent.zipWithIndex.foreach { case ((v, _), x) =>
+      assert(same(v, sequential(x % 2)._1), s"concurrent solve $x differs")
+    }
+    // hosvd: two modes above the 512 exact fence solve concurrently. The
+    // Grams come from Spark reduces whose merge order may move their last
+    // bits, so factors are compared to 1e-12 rather than bit for bit.
+    val df = cooDf(plantedSparse((600, 520, 3), fill = 0.02, seed = 5))
+    val first = Tucker.hosvd(df, (3, 3, 2))
+    val second = Tucker.hosvd(df, (3, 3, 2))
+    for (m <- 0 until 3; (u, v) <- first.factors(m).zip(second.factors(m)))
+      assert(u.zip(v).forall { case (p, q) => math.abs(p - q) <= 1e-12 },
+        s"mode-$m factors differ between calls")
+    val exact = Tucker.hosvd(df, (3, 3, 2), exactEigDim = 1024)
+    assert(math.abs(first.fit - exact.fit) <= 1e-9, s"Lanczos ${first.fit} vs exact ${exact.fit}")
   }
 
   test("factors are orthonormal in every mode") {
