@@ -16,7 +16,10 @@ Modes:
   check  <bench.json> <budget.json>
       Exit non-zero if any family exceeds its committed budget — the CI
       tripwire that catches an accidentally super-linear rewrite (the
-      Q99 HOF class of bug) at the seconds-cheap sf0.001 tier.
+      Q99 HOF class of bug) at the seconds-cheap sf0.001 tier. Also exit
+      non-zero if a budgeted family or leg is missing from the run or the
+      run reports failed legs (`n_failed` > 0): a failed leg is left out
+      of the timings, so it would otherwise pass as a fast one.
 
   minmerge <out.json> <bench.json> [bench.json ...]
       Per-query minimum across independent full-session runs. A long GC
@@ -24,6 +27,7 @@ Modes:
       of whichever query it lands on (observed: a 9x one-off on a query
       that re-measures at 1x in the next session and in isolation); the
       cross-session minimum is the standard noise-robust estimator.
+      `failed` / `n_failed` become the union over the runs.
 
 The query -> family mapping is parsed from the operator sources (each
 operators/*.scala registers its own queries), so new gates land in the
@@ -49,6 +53,11 @@ def family_map():
         for q in re.findall(r'"(Q[0-9]+b?)"\s*->', src):
             fams[q] = fam
     return fams
+
+
+def build_legs(bench):
+    """The artifact build legs: every `*_build` key of a bench line."""
+    return [k for k in bench if k.endswith("_build")]
 
 
 def load(path):
@@ -81,9 +90,8 @@ def family_totals(bench):
             v = v.get(field, -1)
         if isinstance(v, (int, float)) and v > 0:
             tot[f"leg:{leg}"] = v
-    for legname in ("derived_build", "tri_build", "neardup_build",
-                    "daily_grid_build", "lpa_build"):
-        if bench.get(legname, -1) > 0:
+    for legname in build_legs(bench):
+        if bench[legname] > 0:
             tot[f"leg:{legname}"] = bench[legname]
     return tot
 
@@ -139,13 +147,15 @@ def cmd_budget(bench_path, budget_path):
 
 
 def cmd_check(bench_path, budget_path):
-    tot = family_totals(load(bench_path))
+    bench = load(bench_path)
+    tot = family_totals(bench)
     budget = load(budget_path)
     bad = []
     for fam, cap in sorted(budget.items()):
         v = tot.get(fam)
         if v is None:
-            print(f"WARN {fam}: in budget but not in bench run", file=sys.stderr)
+            print(f"MISS {fam}: in budget but not in bench run")
+            bad.append(fam)
             continue
         status = "OK" if v <= cap else "OVER"
         print(f"{status:4} {fam}: {v:.2f}s (budget {cap:.2f}s)")
@@ -155,9 +165,14 @@ def cmd_check(bench_path, budget_path):
     if new:
         print(f"WARN: families with no budget yet (re-run budget mode): {new}",
               file=sys.stderr)
+    n_failed = bench.get("n_failed", 0)
+    if n_failed > 0:
+        print(f"FAIL: the run reports {n_failed} failed leg(s): "
+              f"{bench.get('failed', '(see the run log)')}", file=sys.stderr)
     if bad:
         print(f"FAIL: {len(bad)} famil{'y' if len(bad)==1 else 'ies'} over "
-              f"budget: {bad}", file=sys.stderr)
+              f"budget or missing: {bad}", file=sys.stderr)
+    if bad or n_failed > 0:
         sys.exit(1)
     print(f"== {len(budget)} families within budget ==")
 
@@ -178,10 +193,15 @@ def cmd_minmerge(out_path, paths):
         vals = [v for v in vals if isinstance(v, dict) and v.get(field, -1) > 0]
         if vals:
             merged[leg] = min(vals, key=lambda v: v[field])
-    db = [b.get("derived_build", -1) for b in benches]
-    db = [v for v in db if v and v > 0]
-    if db:
-        merged["derived_build"] = min(db)
+    for leg in build_legs(merged):
+        vals = [b.get(leg, -1) for b in benches]
+        vals = [v for v in vals if v and v > 0]
+        merged[leg] = min(vals) if vals else -1
+    failed = []
+    for b in benches:
+        failed += [leg for leg in b.get("failed", []) if leg not in failed]
+    merged["failed"] = failed
+    merged["n_failed"] = len(failed)
     with open(out_path, "w") as f:
         json.dump(merged, f)
         f.write("\n")

@@ -14,6 +14,13 @@ object Bench {
   private def d(pattern: String, v: Double): String =
     String.format(java.util.Locale.ROOT, pattern, Double.box(v))
 
+  /** `Class: message <- Class: message ...` over the whole cause chain: a
+    * Spark failure's outermost exception is usually a wrapper whose
+    * message hides the cause. Bounded, in case a chain loops. */
+  private[graft] def causeChain(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" <- ")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -29,6 +36,20 @@ object Bench {
     }
     var spark = newSession()
 
+    // Every failed leg (query, build or tensor), once each in order of
+    // first failure. A failed leg is left out of the timed sums, so it is
+    // published as `n_failed`/`failed` and can never pass for a fast one.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def fail(leg: String, e: Throwable): Unit = {
+      failed += leg
+      System.err.println(s"[bench] $leg failed: ${causeChain(e)}")
+    }
+    def timeLeg(leg: String)(body: => Unit): Double = {
+      val t0 = System.nanoTime()
+      try { body; (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable => fail(leg, e); -1.0 }
+    }
+
     def materialize(name: String): Double = {
       // Drop any relation an operator cached during a previous run: the
       // cache manager matches canonicalized plans, so a leaked cache would
@@ -43,13 +64,10 @@ object Bench {
       // and in isolation).
       System.gc()
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      val sec =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+      val sec = timeLeg(name) {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
+      }
       // Unpersist the localCheckpoint RDD blocks this run created (r10
       // verdict #2): clearCache() covers DataFrame caches but NOT
       // checkpoint blocks, which otherwise accumulate block-manager debt
@@ -66,52 +84,14 @@ object Bench {
     // Warm-up: JVM/codegen/parquet-footer caches.
     materialize("Q01")
 
-    // Derived artifacts: force a FRESH build and time it as its own leg.
-    // The graph family (Q103/Q106/Q107) then benches as pure consumers of
-    // the bucketed artifact, and stale /tmp state from a previous run can
-    // never flatter the query timings.
-    val derivedBuild =
-      try {
-        val t0 = System.nanoTime()
-        operators.Derived.rebuildCoOrderPairCounts(spark, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-
-    // Triangle-count artifact (Q103/Q145 consume; r13): same protocol.
-    // Runs AFTER derivedBuild — it reads the co-pair artifact.
-    val triBuild =
-      try {
-        val t0 = System.nanoTime()
-        operators.Derived.rebuildTriangleCounts(spark, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-
-    // Near-dup cluster artifact (Q67/Q68/Q187/Q196 consume): same
-    // force-fresh-and-time-separately protocol as the co-order pairs.
-    val nearDupBuild =
-      try {
-        val t0 = System.nanoTime()
-        operators.Derived.rebuildNearDupClusters(spark, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-
-    // Daily-cents-grid artifact (the ~34-gate Stats/Trend/Behavior spine
-    // consumes): same force-fresh-and-time-separately protocol.
-    val dailyGridBuild =
-      try {
-        val t0 = System.nanoTime()
-        operators.Derived.rebuildDailyCentsGrid(spark, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-
-    // LPA community-label artifact (Q156/Q342 consume): same protocol.
-    // Runs AFTER derivedBuild — it reads the co-pair artifact.
-    val lpaBuild =
-      try {
-        val t0 = System.nanoTime()
-        operators.Derived.rebuildLpaLabels(spark, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
+    // Derived artifacts: force a FRESH build of each and time it as its
+    // own leg. The consumers (the graph family, the near-dup gates, the
+    // daily-grid spine) then bench as pure readers of the bucketed
+    // artifacts, and stale /tmp state from a previous run can never
+    // flatter the query timings.
+    val builds = operators.Derived.buildLegs.map { case (leg, artifacts) =>
+      leg -> timeLeg(leg)(artifacts.foreach(_.rebuild(spark, sfDir)))
+    }
 
     // Dev-only subset: `runMain graft.Bench Q102 Q103`, or
     // `runMain graft.Bench tensors` for the tensor legs alone (isolates
@@ -138,7 +118,7 @@ object Bench {
     // carries more than a bounded chunk of debt. The JVM-global codegen
     // class cache survives the restart, so back-to-back runs still hit it;
     // the Derived bucketed artifact re-registers from disk in the fresh
-    // session (Derived.coOrderPairCounts external-table path).
+    // session (the fresh-session path of Derived.Artifact).
     val RECYCLE = 30
     // The first chunk otherwise times its queries in the SAME session
     // that just ran the two derived builds (~17 s of heavy shuffle/GC
@@ -211,7 +191,7 @@ object Bench {
         val total = (System.nanoTime() - t0) / 1e9
         val perIter = total / model.iterations
         s"""{"sec_per_iter":${d("%.4f", perIter)},"iters":${model.iterations},"fit":${d("%.6f", model.finalFit)}}"""
-      } catch { case _: Throwable => """{"sec_per_iter":-1}""" }
+      } catch { case e: Throwable => fail("cpals", e); """{"sec_per_iter":-1}""" }
 
     // Nonnegative CP via HALS on the same tensor (the Q43 values are sums
     // of nonnegative event values, so the NN model is meaningful here).
@@ -226,7 +206,7 @@ object Bench {
         val total = (System.nanoTime() - t0) / 1e9
         val perIter = total / model.iterations
         s"""{"sec_per_iter":${d("%.4f", perIter)},"iters":${model.iterations},"fit":${d("%.6f", model.finalFit)}}"""
-      } catch { case _: Throwable => """{"sec_per_iter":-1}""" }
+      } catch { case e: Throwable => fail("nnhals", e); """{"sec_per_iter":-1}""" }
 
     // Tucker/HOSVD on the same tensor (skipped on dev subset runs).
     val tucker =
@@ -245,7 +225,7 @@ object Bench {
         val m = tensor.Tucker.hosvd(coo, ranks)
         val sec = (System.nanoTime() - t0) / 1e9
         s"""{"sec":${d("%.4f", sec)},"fit":${d("%.6f", m.fit)}}"""
-      } catch { case _: Throwable => """{"sec":-1}""" }
+      } catch { case e: Throwable => fail("tucker", e); """{"sec":-1}""" }
 
     // The driver's bench artifact retains only a ~2000-char stdout tail
     // (with ~85 of that spent on sbt's [success] trailer); the r7 line
@@ -268,15 +248,16 @@ object Bench {
     }
     val allIn = {
       val q = results.map(_._2).filter(_ >= 0).sum
-      val builds = Seq(derivedBuild, triBuild, nearDupBuild, dailyGridBuild,
-        lpaBuild).filter(_ >= 0).sum
+      val buildTotal = builds.map(_._2).filter(_ >= 0).sum
       val cpTotal = math.max(0.0, headlineD(cpals, "sec_per_iter")) *
         math.max(0.0, headlineD(cpals, "iters"))
       val nnTotal = math.max(0.0, headlineD(nnhals, "sec_per_iter")) *
         math.max(0.0, headlineD(nnhals, "iters"))
       val tkTotal = math.max(0.0, headlineD(tucker, "sec"))
-      q + builds + cpTotal + nnTotal + tkTotal
+      q + buildTotal + cpTotal + nnTotal + tkTotal
     }
+    def buildsJson(fmt: Double => String): String =
+      builds.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")
     def line(fmt: Double => String, sf: String, tensorObjects: Boolean): String = {
       val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
       val total = results.map(_._2).filter(_ >= 0).sum
@@ -288,7 +269,7 @@ object Bench {
         if (tensorObjects) (cpals, nnhals, tucker)
         else (headline(cpals, "sec_per_iter"), headline(nnhals, "sec_per_iter"),
           headline(tucker, "sec"))
-      s"""{"metric":"total","value":${fmt(total)},"value_all_in":${fmt(allIn)},"unit":"sec","queries":$qs,"cpals":$cp,"nnhals":$nn,"tucker":$tk,"derived_build":${fmt(derivedBuild)},"tri_build":${fmt(triBuild)},"neardup_build":${fmt(nearDupBuild)},"daily_grid_build":${fmt(dailyGridBuild)},"lpa_build":${fmt(lpaBuild)},"sentinels":$sentinelJson,"sf":"$sf"}"""
+      s"""{"metric":"total","value":${fmt(total)},"value_all_in":${fmt(allIn)},"unit":"sec","queries":$qs,"cpals":$cp,"nnhals":$nn,"tucker":$tk,${buildsJson(fmt)},"n_failed":${failed.size},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sentinels":$sentinelJson,"sf":"$sf"}"""
     }
     // Stdout form: trailing zeros trimmed ("0.10"→"0.1", "3.00"→"3" —
     // still valid JSON numbers) and sf as its basename; every byte helps
@@ -316,7 +297,7 @@ object Bench {
       }
       val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(8)
         .map { case (k, v) => "\"" + k + "\":" + compact(v) }.mkString("{", ",", "}")
-      println(s"""{"metric":"total","value":${compact(total)},"value_all_in":${compact(allIn)},"unit":"sec","n_queries":${results.size},"slowest":$slowest,"cpals":${headline(cpals, "sec_per_iter")},"nnhals":${headline(nnhals, "sec_per_iter")},"tucker":${headline(tucker, "sec")},"derived_build":${compact(derivedBuild)},"tri_build":${compact(triBuild)},"neardup_build":${compact(nearDupBuild)},"daily_grid_build":${compact(dailyGridBuild)},"lpa_build":${compact(lpaBuild)},"sentinels":$sentinelJson,"queries_map":"docs/BENCH_LAST.json","sf":"${sfDir.split('/').last}"}""")
+      println(s"""{"metric":"total","value":${compact(total)},"value_all_in":${compact(allIn)},"unit":"sec","n_queries":${results.size},"slowest":$slowest,"cpals":${headline(cpals, "sec_per_iter")},"nnhals":${headline(nnhals, "sec_per_iter")},"tucker":${headline(tucker, "sec")},${buildsJson(compact)},"n_failed":${failed.size},"sentinels":$sentinelJson,"queries_map":"docs/BENCH_LAST.json","sf":"${sfDir.split('/').last}"}""")
     }
     // Only a full-registry (driver-shaped) run AT THE DRIVER'S SF may
     // refresh the repo copy — a dev subset would clobber it with a partial

@@ -53,6 +53,7 @@ object Sf10Rehearsal {
     })
 
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
     def leg(name: String)(body: => Unit): Unit = {
       spark.catalog.clearCache()
@@ -63,8 +64,10 @@ object Sf10Rehearsal {
       val t0 = System.nanoTime()
       val ok = try { body; true } catch {
         case e: Throwable =>
-          println(s"""{"leg":"$name","error":"${e.getClass.getSimpleName}: ${
-            Option(e.getMessage).getOrElse("").take(120).replace('"', ' ')}"}""")
+          val row = new java.util.LinkedHashMap[String, String]()
+          row.put("leg", name)
+          row.put("error", Bench.causeChain(e))
+          println(json.writeValueAsString(row))
           false
       }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -85,8 +88,9 @@ object Sf10Rehearsal {
     // vocabulary); since r12 the adaptive LSH fallback
     // (TextOps.jaccardFromTokens) makes the same leg complete in ~130 s
     // with ~4 GB scratch — see SCALE.md finding 1 (RESOLVED).
-    val defaultLegs = Seq("derived_build", "tri_build", "daily_grid_build",
-      "lpa_build", "neardup_build", "Q13", "Q05", "Q103", "Q117",
+    val builds = operators.Derived.buildLegs.toMap
+    val buildLegs = operators.Derived.buildLegs.map(_._1)
+    val defaultLegs = buildLegs ++ Seq("Q13", "Q05", "Q103", "Q117",
       "Q145", "Q156", "Q160", "Q161", "Q218", "Q248", "Q334", "Q335",
       "Q345")
     // `all` (r11 verdict item 5): the WHOLE registry, one run per leg,
@@ -97,26 +101,17 @@ object Sf10Rehearsal {
     val heavyTail = Seq("Q334", "Q117", "Q103", "Q145")
     val legs =
       if (args.drop(1).toSeq == Seq("all"))
-        Seq("derived_build", "tri_build", "daily_grid_build", "lpa_build",
-          "neardup_build") ++
+        buildLegs ++
           (SparkEntry.queries.keys.toSeq.sorted.filterNot(heavyTail.contains)
             ++ heavyTail)
       else if (args.length > 1) args.drop(1).toSeq
       else defaultLegs
 
     legs.foreach {
-      case "derived_build" => leg("derived_build") {
-        operators.Derived.rebuildCoOrderPairCounts(spark, dir) }
-      case "tri_build" => leg("tri_build") {
-        operators.Derived.rebuildTriangleCounts(spark, dir) }
-      case "daily_grid_build" => leg("daily_grid_build") {
-        operators.Derived.rebuildDailyCentsGrid(spark, dir) }
-      case "lpa_build" => leg("lpa_build") {
-        operators.Derived.rebuildLpaLabels(spark, dir) }
-      case "neardup_build" => leg("neardup_build") {
-        operators.Derived.rebuildNearDupClusters(spark, dir) }
+      case b if builds.contains(b) => leg(b) {
+        builds(b).foreach(_.rebuild(spark, dir)) }
       case "fastss_build" => leg("fastss_build") {
-        operators.Derived.rebuildFastssSignatures(spark, dir, 2) }
+        operators.Derived.fastssSignatures(2).rebuild(spark, dir) }
       case q => leg(q) {
         SparkEntry.queries(q)(spark, dir)
           .write.mode("overwrite").format("noop").save()

@@ -10,33 +10,35 @@ import org.apache.spark.sql.functions._
   * every consumer from the artifact (the materialized-view mechanism the
   * round-4 verdict named as the engine's last architecture gap).
   *
-  * The first (and so far only) derived relation is the co-order part
-  * graph: Q103 (triangles), Q106 (PageRank), and Q107 (association
-  * rules) all consume the same ~lineitem-squared pair relation, and each
-  * independently re-ran the order-keyed pair expansion + wide distinct
-  * every execution. At 100 TB that edge build dwarfs the per-query
-  * algorithm cost; here it runs once per dataset and lands on disk
-  * bucketed by `a` (sorted by a, b), so consumers that join or aggregate
-  * on the leading edge endpoint start from a co-located, sorted layout
-  * with no exchange under the join (the `ScaleHygieneSpec` bucketed-join
-  * machinery, now applied to a derived relation instead of a base table).
+  * The first derived relation is the co-order part graph: Q103, Q106
+  * and Q107 each re-ran the same ~lineitem-squared pair expansion + wide
+  * distinct every execution; at 100 TB that edge build dwarfs the
+  * per-query algorithm cost. Here it runs once per dataset and lands on
+  * disk bucketed by `a` (sorted by a, b), so consumers that join or
+  * aggregate on the leading edge endpoint start from a co-located, sorted
+  * layout with no exchange under the join.
   *
-  * Artifact lifecycle:
-  *  - Cache key = md5 of the dataset path + the lineitem file listing
-  *    (names, sizes, mtimes) — regenerated data invalidates the artifact;
-  *    a production deployment would version artifacts explicitly.
+  * Artifact lifecycle (one [[Artifact]] per relation):
+  *  - Cache key = md5 of the dataset path, the artifact's source table
+  *    file listing (names, sizes, mtimes) and the artifact's code
+  *    `version`. Regenerated data invalidates the artifact; so does a
+  *    bumped `version`. RULE: bump `version` whenever a change to a build
+  *    (or to anything it calls) can change its output — the key cannot
+  *    see code, so an artifact written by the older build would otherwise
+  *    be served silently.
   *  - Location = `spark.graft.derivedDir` (conf) or
   *    `java.io.tmpdir/graft-derived`; never inside the (read-only)
-  *    dataset directory.
+  *    dataset directory. Table `graft_<name>_<key>`, directory
+  *    `<name>_<key>`.
   *  - Within a session the artifact is a catalog table (so Spark's
-  *    bucketing metadata applies); a fresh session over existing files
-  *    re-registers the same external bucketed table by DDL instead of
-  *    rebuilding.
-  *
-  * Storage is (a, b, n_pairs) — pair counts, NOT just distinct edges:
-  * the count column is free at build time (same shuffle), Q107 needs it,
-  * and Q103/Q106 get their distinct edge list by projection (every
-  * stored pair is distinct by construction of the groupBy).
+  *    bucketing metadata applies). A fresh session over existing files
+  *    (`_SUCCESS` present) re-registers the same EXTERNAL bucketed table
+  *    instead of rebuilding: the column list is read from the written
+  *    parquet files, the bucket spec is the declared one — the files were
+  *    written by the bucketed save with that spec, so the layout matches.
+  *  - `rebuild` drops the table, deletes the directory and gets; the
+  *    bench uses it so each build is timed as its own leg and query
+  *    timings are pure consumers (stale state can never flatter them).
   */
 object Derived {
 
@@ -66,20 +68,17 @@ object Derived {
       .select(col("p.a").as("a"), col("p.b").as("b"))
 
   /** The unmaterialized build: distinct co-order pairs with their
-    * cross-order multiplicity. Exposed for the bench (which times a
-    * forced fresh build) and for tests that pin build == artifact.
+    * cross-order multiplicity. Exposed for tests that pin build ==
+    * artifact.
     */
   def buildCoOrderPairCounts(lineitem: DataFrame): DataFrame =
     pairOccurrences(lineitem)
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_pairs"))
 
-  private def datasetKey(spark: SparkSession, dir: String): String =
-    datasetKeyFor(spark, dir, "lineitem")
-
-  private def datasetKeyFor(spark: SparkSession, dir: String,
-      tableName: String): String = {
-    val src = new Path(s"$dir/$tableName.parquet")
+  private def datasetKeyFor(spark: SparkSession, dir: String, source: String,
+      version: Int): String = {
+    val src = new Path(s"$dir/$source.parquet")
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val listing =
       if (fs.exists(src))
@@ -88,7 +87,7 @@ object Derived {
           .sorted.mkString("|")
       else "missing"
     MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$listing".getBytes("UTF-8"))
+      .digest(s"$dir|$listing|v$version".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
   }
 
@@ -96,67 +95,91 @@ object Derived {
     spark.conf.getOption("spark.graft.derivedDir")
       .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft-derived")
 
-  /** Get-or-build the co-order pair-count artifact for a dataset.
-    * Subsequent calls (same session or a fresh one) read the bucketed
-    * table; the expensive expansion runs at most once per dataset
-    * fingerprint.
+  /** One derived relation: `build` computes it from the dataset, the
+    * artifact stores it under `name`, keyed on the `source` table's files
+    * and `version`, bucketed by `bucketCols` into `buckets` files sorted
+    * by `sortCols`. Calling it gets (or builds) the bucketed table.
     */
-  def coOrderPairCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_pairs_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/co_pairs_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      // Fresh session, artifact already on disk: register the external
-      // bucketed table over the existing files (written by the bucketed
-      // save below, so the bucket-file layout matches the DDL).
-      spark.sql(
-        s"""CREATE TABLE $table (a BIGINT, b BIGINT, n_pairs BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (a) SORTED BY (a, b) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
+  private[graft] final case class Artifact(name: String, source: String,
+      buckets: Int, bucketCols: Seq[String], sortCols: Seq[String],
+      version: Int)(build: (SparkSession, String) => DataFrame) {
+
+    /** (catalog table, directory) for this dataset. */
+    private[graft] def place(spark: SparkSession, dir: String): (String, String) = {
+      val key = datasetKeyFor(spark, dir, source, version)
+      (s"graft_${name}_$key", s"${baseDir(spark)}/${name}_$key")
     }
-    buildCoOrderPairCounts(graft.Catalog(spark, dir).lineitem)
-      .write.mode("overwrite")
-      .bucketBy(8, "a").sortBy("a", "b")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
+
+    /** Get-or-build. The expensive build runs at most once per dataset
+      * key; later calls, in this session or a fresh one, read the
+      * bucketed table.
+      */
+    def apply(spark: SparkSession, dir: String): DataFrame = Derived.synchronized {
+      val (table, loc) = place(spark, dir)
+      if (!spark.catalog.tableExists(table)) {
+        val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(new Path(loc, "_SUCCESS")))
+          spark.sql(
+            s"""CREATE TABLE $table (${spark.read.parquet(loc).schema.toDDL})
+               |USING PARQUET
+               |CLUSTERED BY (${bucketCols.mkString(", ")})
+               |SORTED BY (${sortCols.mkString(", ")}) INTO $buckets BUCKETS
+               |LOCATION '$loc'""".stripMargin)
+        else
+          build(spark, dir).write.mode("overwrite")
+            .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
+            .sortBy(sortCols.head, sortCols.tail: _*)
+            .option("path", loc)
+            .saveAsTable(table)
+      }
+      spark.table(table)
+    }
+
+    /** Forced fresh build: drop the table, delete the files, get. */
+    def rebuild(spark: SparkSession, dir: String): DataFrame = Derived.synchronized {
+      val (table, loc) = place(spark, dir)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      val path = new Path(loc)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(path)) fs.delete(path, true)
+      apply(spark, dir)
+    }
   }
 
-  /** Drop and rebuild the artifact — the bench uses this so the build
-    * cost is timed as its own leg and query timings are pure consumers
-    * (stale /tmp state can never flatter them).
+  /** The co-order pair counts (a, b, n_pairs). Storage keeps pair counts,
+    * NOT just distinct edges: the count column is free at build time
+    * (same shuffle), Q107 needs it, and Q103/Q106 get their distinct edge
+    * list by projection (every stored pair is distinct by construction of
+    * the groupBy).
     */
-  def rebuildCoOrderPairCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_pairs_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/co_pairs_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    coOrderPairCounts(spark, dir)
-  }
+  val coOrderPairCounts: Artifact =
+    Artifact("co_pairs", "lineitem", 8, Seq("a"), Seq("a", "b"), version = 1)(
+      (spark, dir) => buildCoOrderPairCounts(graft.Catalog(spark, dir).lineitem))
 
-  /** Get-or-build the near-dup cluster-assignment artifact: the
-    * (rep, member) connected-components relation over the verified
-    * shingle-Jaccard ≥ 0.6 pair graph (Q67's exact pipeline — PPJoin-
-    * filtered candidate discovery + O(log n) star contraction). Four
-    * gates consume this relation (Q67 cluster listing, Q68 min-id
-    * retention, Q187 size histogram, Q196 quality-aware selection);
-    * before this artifact each re-ran the whole discovery+CC pipeline,
-    * which at 100 TB is the difference between clustering the corpus
-    * once per data drop and four times per report batch. The bench
-    * times the build as its own `neardup_build` leg, so consumer
-    * timings stay honest.
+  /** The per-node triangle counts (node, n_triangles) of the co-order
+    * graph from ONE degree-oriented enumeration (r13). Q103 (top-k
+    * participation) and Q145 (clustering coefficient) both consumed the
+    * FULL enumeration per execution — at 100 TB the enumerated wedge mass
+    * (O(m^1.5), the r12 sweep's 75 GB-spill Q103 leg) is the whole cost,
+    * and it was paid twice per report batch. Reads [[coOrderPairCounts]],
+    * so its bench leg runs after that one.
     */
-  /** Get-or-build the verified shingle-Jaccard ≥ 0.6 pair relation
-    * (doc_lo, doc_hi, jaccard) — the discovery output of the near-dup
-    * pipeline. Q49 (pair listing) and Q166 (cross-source rollup) consume
-    * it directly; [[nearDupClusters]] builds its CC over it. One
-    * discovery pass per data drop instead of one per report.
+  val triangleCounts: Artifact =
+    Artifact("co_tri", "lineitem", 8, Seq("node"), Seq("node"), version = 1) { (spark, dir) =>
+      // r14: the decomposed per-node aggregation (closing edges contribute
+      // their intersection size, apexes explode) — T + 2m aggregation rows
+      // instead of 3T corner rows; identical counts (AnalyticsOpsSpec).
+      Graphs.triangleCountsPerNode(
+          coOrderPairCounts(spark, dir).select(col("a"), col("b")))
+        .select(col("node").cast("long").as("node"),
+          col("n_triangles").cast("long").as("n_triangles"))
+    }
+
+  /** The verified shingle-Jaccard ≥ 0.6 pair relation (doc_lo, doc_hi,
+    * jaccard) — the discovery output of the near-dup pipeline. Q49 (pair
+    * listing) and Q166 (cross-source rollup) consume it directly;
+    * [[nearDupClusters]] builds its CC over it. One discovery pass per
+    * data drop instead of one per report.
     *
     * Build strategy is ADAPTIVE (TextOps.jaccardFromTokens, r11 verdict
     * item 1): exact discovery (direct or PPJoin prefix-filtered join)
@@ -168,160 +191,46 @@ object Derived {
     * so the artifact's gate hashes are byte-identical; LSH-vs-exact set
     * equality at fixture scale is pinned in NearDupSpec.
     */
-  def nearDupPairs(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "documents")
-    val table = s"graft_neardup_pairs_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/neardup_pairs_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (doc_lo BIGINT, doc_hi BIGINT, jaccard DOUBLE)
-           |USING PARQUET
-           |CLUSTERED BY (doc_lo) SORTED BY (doc_lo, doc_hi) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
+  val nearDupPairs: Artifact =
+    Artifact("neardup_pairs", "documents", 8, Seq("doc_lo"), Seq("doc_lo", "doc_hi"),
+        version = 1) { (spark, dir) =>
+      TextOps.jaccardFromTokens(spark, NearDup.shingles(graft.Catalog(spark, dir)), 0.6)
+        .select(col("doc_lo"), col("doc_hi"), col("jaccard"))
     }
-    val c = graft.Catalog(spark, dir)
-    TextOps.jaccardFromTokens(spark, NearDup.shingles(c), 0.6)
-      .select(col("doc_lo"), col("doc_hi"), col("jaccard"))
-      .write.mode("overwrite")
-      .bucketBy(8, "doc_lo").sortBy("doc_lo", "doc_hi")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
 
-  /** Get-or-build the per-node triangle-count artifact of the co-order
-    * graph: (node, n_triangles) from ONE degree-oriented enumeration
-    * (r13). Q103 (top-k participation) and Q145 (clustering
-    * coefficient) both consumed the FULL enumeration per execution —
-    * at 100 TB the enumerated wedge mass (O(m^1.5), the r12 sweep's
-    * 75 GB-spill Q103 leg) is the whole cost, and it was paid twice
-    * per report batch (×3 again under the bench's 3-run protocol).
-    * Same discipline as [[nearDupClusters]]: the expensive shared
-    * relation is built once per dataset drop, bucketed on its join
-    * key, and the bench times the build as its own `tri_build` leg so
-    * consumer timings stay honest.
+  /** The near-dup cluster assignment (rep, member): connected components
+    * over [[nearDupPairs]]. Q67 (cluster listing), Q68 (min-id
+    * retention), Q187 (size histogram) and Q196 (quality-aware selection)
+    * consume it; before these artifacts each re-ran the whole
+    * discovery+CC pipeline per report — at 100 TB the difference between
+    * clustering the corpus once per data drop and four times per report
+    * batch.
     */
-  def triangleCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_tri_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/co_tri_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (node BIGINT, n_triangles BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (node) SORTED BY (node) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
+  val nearDupClusters: Artifact =
+    Artifact("neardup_cc", "documents", 8, Seq("rep"), Seq("rep", "member"),
+        version = 1) { (spark, dir) =>
+      // Adaptive CC (r13): the verified dup-pair graph is a sparse side
+      // output; under the probe budget the driver union-find replaces the
+      // star-contraction loop's 2-jobs-per-round fixpoint — same labels.
+      NearDup.connectedComponentsAdaptive(
+        nearDupPairs(spark, dir).select(col("doc_lo"), col("doc_hi")))
     }
-    // r14: the decomposed per-node aggregation (closing edges contribute
-    // their intersection size, apexes explode) — T + 2m aggregation rows
-    // instead of 3T corner rows; identical counts (AnalyticsOpsSpec).
-    Graphs.triangleCountsPerNode(
-        coOrderPairCounts(spark, dir).select(col("a"), col("b")))
-      .select(col("node").cast("long").as("node"),
-        col("n_triangles").cast("long").as("n_triangles"))
-      .write.mode("overwrite")
-      .bucketBy(8, "node").sortBy("node")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
 
-  /** Forced fresh rebuild of the triangle-count artifact (bench leg).
-    * Runs AFTER [[rebuildCoOrderPairCounts]] — it reads the pair artifact.
+  /** The LPA community labels (node, label): the deterministic 3-round
+    * min-tiebreak label propagation over the support-pruned co-order
+    * graph. Q156 (community listing) and Q342 (modularity scoring)
+    * consume it; before this artifact each re-ran the 3 join+window LPA
+    * rounds per execution. Bucketed by node so Q342's per-endpoint label
+    * joins start co-located.
     */
-  def rebuildTriangleCounts(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_co_tri_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/co_tri_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    triangleCounts(spark, dir)
-  }
-
-  /** Get-or-build the near-dup cluster-assignment artifact: the
-    * (rep, member) connected-components relation over
-    * [[nearDupPairs]] (O(log n) star contraction). Q67/Q68/Q187/Q196
-    * consume this relation; before these artifacts each re-ran the
-    * whole discovery+CC pipeline per report.
-    */
-  def nearDupClusters(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "documents")
-    val table = s"graft_neardup_cc_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/neardup_cc_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (rep BIGINT, member BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (rep) SORTED BY (rep, member) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
+  val lpaLabels: Artifact =
+    Artifact("lpa_labels", "lineitem", 8, Seq("node"), Seq("node"), version = 1) { (spark, dir) =>
+      val edges = coOrderPairCounts(spark, dir)
+        .filter(col("n_pairs") >= 2).select(col("a"), col("b"))
+      Graphs.labelPropagation(edges, Graphs.LpaRounds)
+        .select(col("node").cast("long").as("node"),
+          col("label").cast("long").as("label"))
     }
-    val pairs = nearDupPairs(spark, dir).select(col("doc_lo"), col("doc_hi"))
-    // Adaptive CC (r13): the verified dup-pair graph is a sparse side
-    // output; under the probe budget the driver union-find replaces the
-    // star-contraction loop's 2-jobs-per-round fixpoint — same labels.
-    NearDup.connectedComponentsAdaptive(pairs)
-      .write.mode("overwrite")
-      .bucketBy(8, "rep").sortBy("rep", "member")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
-
-  /** Get-or-build the LPA community-label artifact: the deterministic
-    * 3-round min-tiebreak label-propagation assignment (node, label)
-    * over the support-pruned co-order graph. Q156 (community listing)
-    * and Q342 (modularity scoring) consume it; before this artifact
-    * each re-ran the 3 join+window LPA rounds per execution — at
-    * 100 TB, two full passes of the iteration for one deterministic
-    * relation per data drop. Bucketed by node so Q342's per-endpoint
-    * label joins start co-located.
-    */
-  def lpaLabels(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_lpa_labels_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/lpa_labels_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (node BIGINT, label BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (node) SORTED BY (node) INTO 8 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    val edges = coOrderPairCounts(spark, dir)
-      .filter(col("n_pairs") >= 2).select(col("a"), col("b"))
-    Graphs.labelPropagation(edges, Graphs.LpaRounds)
-      .select(col("node").cast("long").as("node"),
-        col("label").cast("long").as("label"))
-      .write.mode("overwrite")
-      .bucketBy(8, "node").sortBy("node")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
-
-  /** Forced fresh rebuild of the LPA-labels artifact for the bench. */
-  def rebuildLpaLabels(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKey(spark, dir)
-    val table = s"graft_lpa_labels_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/lpa_labels_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    lpaLabels(spark, dir)
-  }
 
   /** The unmaterialized build of the zero-filled per-type daily
     * revenue-cents grid on the GLOBAL [dmin, dmax] day spine — the shared
@@ -345,128 +254,67 @@ object Derived {
         coalesce(col("v"), lit(0L)).as("v"))
   }
 
-  /** Get-or-build the daily-cents-grid artifact. Before this artifact,
+  /** The daily-cents grid (event_type, day, v). Before this artifact,
     * every one of the ~34 consumer gates re-ran the full `events` scan +
     * (type, day) aggregate per execution — at 100 TB that is 34 corpus
-    * scans for one tiny (type × day) relation. Bucketed by event_type
-    * and sorted by (event_type, day), so the dominant consumer shape — a
-    * window PARTITION BY event_type ORDER BY day — starts from a
-    * co-located sorted layout.
+    * scans for one tiny (type × day) relation. Sorted by (event_type,
+    * day), so the dominant consumer shape — a window PARTITION BY
+    * event_type ORDER BY day — starts from a co-located sorted layout.
     */
-  def dailyCentsGrid(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "events")
-    val table = s"graft_daily_grid_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/daily_grid_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (event_type STRING, day BIGINT, v BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (event_type) SORTED BY (event_type, day) INTO 4 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
-    }
-    buildDailyCentsGrid(graft.Catalog(spark, dir).events)
-      .write.mode("overwrite")
-      .bucketBy(4, "event_type").sortBy("event_type", "day")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
+  val dailyCentsGrid: Artifact =
+    Artifact("daily_grid", "events", 4, Seq("event_type"), Seq("event_type", "day"),
+        version = 1)((spark, dir) => buildDailyCentsGrid(graft.Catalog(spark, dir).events))
 
-  /** Forced fresh rebuild of the daily-grid artifact for the bench. */
-  def rebuildDailyCentsGrid(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "events")
-    val table = s"graft_daily_grid_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/daily_grid_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    dailyCentsGrid(spark, dir)
-  }
+  /** Kept because the benchmark's daily-grid set-up step calls it by this
+    * name; everything else calls `dailyCentsGrid.rebuild`. */
+  def rebuildDailyCentsGrid(spark: SparkSession, dir: String): DataFrame =
+    dailyCentsGrid.rebuild(spark, dir)
 
-  /** Get-or-build the FastSS deletion-signature artifact over part
-    * names: (p_brand, p_partkey, sig) with sig ranging over each name's
-    * ≤k-deletion neighborhood hashes, BUCKETED by sig (32 buckets,
-    * sorted by sig, p_partkey). The r12 sf10 sweep measured Q126's
-    * in-memory signature self-join inadmissible at combinatorial-name
-    * scale (2M names × ~466 variants ≈ 10⁹ rows OOMed a 48 GB heap —
-    * SCALE.md finding 3); served from this artifact, BOTH sides of the
-    * candidate self-join read the same bucketed, sig-sorted layout, so
-    * the join runs bucket-co-located with NO exchange and NO hash-table
-    * build — a streaming sort-merge over disk-sorted runs whose memory
-    * is bounded by the largest single-signature group, not the
-    * relation. The k parameter is part of the artifact key: k = 2 is
-    * the declared gate semantics; k = 1 (~L variants/name instead of
-    * ~L²/2) is the probe-gated fallback one more decade up, which
-    * keeps d ≤ 1 recall complete but finds only the d = 2 pairs that
-    * share a 1-deletion variant — a documented recall trade, the Q334
-    * sampled-twin discipline.
+  /** The FastSS deletion signatures over part names: (p_partkey, sig)
+    * with sig ranging over each name's ≤k-deletion neighborhood hashes,
+    * in 32 buckets sorted by (sig, p_partkey). The r12 sf10 sweep
+    * measured Q126's in-memory signature self-join inadmissible at
+    * combinatorial-name scale (2M names × ~466 variants ≈ 10⁹ rows OOMed
+    * a 48 GB heap — SCALE.md finding 3); served from this artifact, BOTH
+    * sides of the candidate self-join read the same bucketed, sig-sorted
+    * layout, so the join runs bucket-co-located with NO exchange and NO
+    * hash-table build — a streaming sort-merge whose memory is bounded by
+    * the largest single-signature group, not the relation. k is part of
+    * the artifact name: k = 2 is the declared gate semantics; k = 1 (~L
+    * variants/name instead of ~L²/2) is the probe-gated fallback one more
+    * decade up, which keeps d ≤ 1 recall complete but finds only the
+    * d = 2 pairs that share a 1-deletion variant — a documented recall
+    * trade, the Q334 sampled-twin discipline.
     *
     * The stored sig FOLDS THE BRAND BLOCK into the variant hash
-    * (xxhash64(p_brand, variant)): the candidate self-join then has
-    * sig as its ONLY key, which the bucket sort order (sig, p_partkey)
-    * satisfies exactly — a ZERO-SORT streaming merge (the first cut of
-    * this artifact joined on (brand, sig) and re-sorted all 10⁹ rows
-    * per run: 47 GB of measured spill for a sort the layout almost
-    * carried). Cross-brand pairs collide only at xxhash64-collision
-    * odds — the same accepted 2⁻⁶⁴ class as the variant hashes
-    * themselves — and every candidate is still verified by the banded
-    * Levenshtein before it can reach the output.
+    * (xxhash64(p_brand, variant)): the candidate self-join then has sig
+    * as its ONLY key, which the bucket sort order (sig, p_partkey)
+    * satisfies exactly — a ZERO-SORT streaming merge (the first cut
+    * joined on (brand, sig) and re-sorted all 10⁹ rows per run: 47 GB of
+    * measured spill). Cross-brand pairs collide only at xxhash64 odds
+    * (2⁻⁶⁴, as for the variant hashes), and every candidate is still
+    * verified by the banded Levenshtein before it can reach the output.
     */
-  def fastssSignatures(spark: SparkSession, dir: String, k: Int): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "part")
-    val table = s"graft_fastss2_k${k}_$key"
-    if (spark.catalog.tableExists(table)) return spark.table(table)
-    val loc = s"${baseDir(spark)}/fastss2_k${k}_$key"
-    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(loc, "_SUCCESS"))) {
-      spark.sql(
-        s"""CREATE TABLE $table (p_partkey BIGINT, sig BIGINT)
-           |USING PARQUET
-           |CLUSTERED BY (sig) SORTED BY (sig, p_partkey) INTO 32 BUCKETS
-           |LOCATION '$loc'""".stripMargin)
-      return spark.table(table)
+  def fastssSignatures(k: Int): Artifact =
+    Artifact(s"fastss2_k$k", "part", 32, Seq("sig"), Seq("sig", "p_partkey"),
+        version = 1) { (spark, dir) =>
+      graft.Catalog(spark, dir).part
+        .select(col("p_brand"), col("p_partkey"),
+          explode(array_distinct(expr(s"graft_deletion_hashes(p_name, $k)"))).as("v"))
+        .select(col("p_partkey"), xxhash64(col("p_brand"), col("v")).as("sig"))
+        // One shuffle on the bucket key so each bucket lands as one
+        // sorted file; the writer's per-task sort is then exactly the
+        // bucket's rows (external, spillable) instead of a per-task
+        // re-sort of a mixed-bucket partition.
+        .repartition(32, col("sig"))
     }
-    graft.Catalog(spark, dir).part
-      .select(col("p_brand"), col("p_partkey"),
-        explode(array_distinct(expr(s"graft_deletion_hashes(p_name, $k)")))
-          .as("v"))
-      .select(col("p_partkey"), xxhash64(col("p_brand"), col("v")).as("sig"))
-      // One shuffle on the bucket key so each bucket lands as one
-      // sorted file; the writer's per-task sort is then exactly the
-      // bucket's rows (external, spillable) instead of a per-task
-      // re-sort of a mixed-bucket partition.
-      .repartition(32, col("sig"))
-      .write.mode("overwrite")
-      .bucketBy(32, "sig").sortBy("sig", "p_partkey")
-      .option("path", loc)
-      .saveAsTable(table)
-    spark.table(table)
-  }
 
-  /** Forced fresh rebuild of the FastSS signature artifact (sweep leg). */
-  def rebuildFastssSignatures(spark: SparkSession, dir: String, k: Int): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "part")
-    val table = s"graft_fastss2_k${k}_$key"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new Path(s"${baseDir(spark)}/fastss2_k${k}_$key")
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) { fs.delete(loc, true); () }
-    fastssSignatures(spark, dir, k)
-  }
-
-  /** Forced fresh rebuild of the near-dup artifacts for the bench. */
-  def rebuildNearDupClusters(spark: SparkSession, dir: String): DataFrame = synchronized {
-    val key = datasetKeyFor(spark, dir, "documents")
-    for (name <- Seq("pairs", "cc")) {
-      val table = s"graft_neardup_${if (name == "cc") "cc" else "pairs"}_$key"
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      val loc = new Path(s"${baseDir(spark)}/neardup_${name}_$key")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) { fs.delete(loc, true); () }
-    }
-    nearDupClusters(spark, dir)
-  }
+  /** The build legs Bench and Sf10Rehearsal time, in run order: a leg
+    * rebuilds its artifacts in sequence, after every leg it reads from. */
+  val buildLegs: Seq[(String, Seq[Artifact])] = Seq(
+    "derived_build" -> Seq(coOrderPairCounts),
+    "tri_build" -> Seq(triangleCounts),
+    "neardup_build" -> Seq(nearDupPairs, nearDupClusters),
+    "daily_grid_build" -> Seq(dailyCentsGrid),
+    "lpa_build" -> Seq(lpaLabels))
 }

@@ -878,7 +878,7 @@ object NearDup {
         // recall stays complete, d = 2 keeps only the pairs sharing a
         // 1-deletion variant — the documented recall trade.
         val k = if (sigMass <= FastssK2Budget) 2 else 1
-        val art = Derived.fastssSignatures(spark, dir, k)
+        val art = Derived.fastssSignatures(k)(spark, dir)
         art.as("sa")
           .join(art.as("sb"),
             col("sb.sig") === col("sa.sig") &&

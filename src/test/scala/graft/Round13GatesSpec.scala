@@ -84,7 +84,7 @@ class Round13GatesSpec extends SparkSpec {
       .select(col("p_partkey"), col("kb"))
       .distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val art = Derived.fastssSignatures(spark, dir, 2)
+    val art = Derived.fastssSignatures(2).rebuild(spark, dir)
     val viaArtifact = art.as("sa")
       .join(art.as("sb"),
         col("sb.sig") === col("sa.sig") &&

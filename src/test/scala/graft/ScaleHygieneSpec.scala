@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.functions._
 import graft.operators.Joins
 
@@ -131,7 +133,7 @@ class ScaleHygieneSpec extends SparkSpec {
     spark.conf.set("spark.graft.derivedDir", derivedBase)
     try {
       val c = Catalog(spark, dir)
-      val artifact = graft.operators.Derived.rebuildCoOrderPairCounts(spark, dir)
+      val artifact = graft.operators.Derived.coOrderPairCounts.rebuild(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       val fresh = graft.operators.Derived.buildCoOrderPairCounts(c.lineitem)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -175,7 +177,7 @@ class ScaleHygieneSpec extends SparkSpec {
     val derivedBase = Files.createTempDirectory("graft-derived-test").toString
     spark.conf.set("spark.graft.derivedDir", derivedBase)
     try {
-      val artifact = graft.operators.Derived.rebuildTriangleCounts(spark, dir)
+      val artifact = graft.operators.Derived.triangleCounts.rebuild(spark, dir)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val fresh = graft.operators.Graphs.triangleCorners(
           graft.operators.Derived.coOrderPairCounts(spark, dir)
@@ -202,7 +204,7 @@ class ScaleHygieneSpec extends SparkSpec {
     spark.conf.set("spark.graft.derivedDir", derivedBase)
     try {
       val c = Catalog(spark, dir)
-      val artifact = graft.operators.Derived.rebuildDailyCentsGrid(spark, dir)
+      val artifact = graft.operators.Derived.dailyCentsGrid.rebuild(spark, dir)
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
       val fresh = graft.operators.Derived.buildDailyCentsGrid(c.events)
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -229,6 +231,58 @@ class ScaleHygieneSpec extends SparkSpec {
         assert(!plan.contains("events.parquet"), s"spine gate still scans events:\n$plan")
         assert(!plan.contains("ts DIV"), s"spine gate still does ts arithmetic:\n$plan")
       }
+    } finally {
+      spark.conf.unset("spark.graft.derivedDir")
+    }
+  }
+
+  test("every artifact re-registers from its files in a fresh session: same rows, declared buckets, no rebuild") {
+    // Bench recycles its session every few dozen legs, and each new
+    // session meets the artifacts only as files on disk. Dropping the
+    // catalog entry leaves the files (the table is EXTERNAL), which is
+    // exactly the state a fresh session starts from.
+    import graft.operators.Derived
+    val dir = sf("sf0.001")
+    val derivedBase = Files.createTempDirectory("graft-derived-test").toString
+    spark.conf.set("spark.graft.derivedDir", derivedBase)
+    try {
+      for (art <- Derived.buildLegs.flatMap(_._2) :+ Derived.fastssSignatures(2)) {
+        val (table, loc) = art.place(spark, dir)
+        def files() = new java.io.File(loc).listFiles()
+          .map(f => f.getName -> f.lastModified).sorted.toSeq
+        val built = art.rebuild(spark, dir).collect().map(_.toString).sorted
+        val written = files()
+        spark.sql(s"DROP TABLE $table")
+        val served = art(spark, dir).collect().map(_.toString).sorted
+        assert(served.sameElements(built), s"${art.name}: rows differ after re-registration")
+        assert(built.nonEmpty, s"${art.name}: empty artifact")
+        val spec = spark.sessionState.catalog
+          .getTableMetadata(TableIdentifier(table)).bucketSpec
+        assert(spec.contains(BucketSpec(art.buckets, art.bucketCols, art.sortCols)),
+          s"${art.name}: catalog bucket spec $spec")
+        assert(files() == written, s"${art.name}: re-registration rewrote the files")
+      }
+    } finally {
+      spark.conf.unset("spark.graft.derivedDir")
+    }
+  }
+
+  test("an artifact is built once per version; bumping the version rebuilds it") {
+    val dir = sf("sf0.001")
+    val derivedBase = Files.createTempDirectory("graft-derived-test").toString
+    spark.conf.set("spark.graft.derivedDir", derivedBase)
+    try {
+      var builds = 0
+      def probe(version: Int) = graft.operators.Derived.Artifact("version_probe",
+          "part", 2, Seq("p_partkey"), Seq("p_partkey"), version) { (s, d) =>
+        builds += 1
+        Catalog(s, d).part.select(col("p_partkey"))
+      }
+      probe(1)(spark, dir)
+      probe(1)(spark, dir)
+      assert(builds == 1, "the same version was built twice")
+      assert(probe(2)(spark, dir).count() == Catalog(spark, dir).part.count())
+      assert(builds == 2, "a bumped version was served from the older artifact")
     } finally {
       spark.conf.unset("spark.graft.derivedDir")
     }
