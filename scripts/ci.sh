@@ -44,4 +44,23 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt -batch "runMain graft.Bench" \
 grep -m1 -o '{"metric".*}' "$BENCH_RAW" > "$BENCH_OUT"
 python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 
+# Rehearsal row format: both legs must print an error-free row, and
+# sf10_table.py must still read it, so a renamed row key fails here and
+# not in a later sweep.
+REH_LOG=$(mktemp /tmp/graft-ci-rehearsal.XXXXXX.log)
+sbt -batch "runMain graft.Sf10Rehearsal $(dirname "$SF_DIR")/sf0.001 daily_grid_build Q13" \
+  > "$REH_LOG"
+python3 - "$REH_LOG" <<'EOF'
+import json, sys
+rows = {}
+for line in open(sys.argv[1]):
+    if line.startswith('{"leg"'):
+        row = json.loads(line)
+        rows[row["leg"]] = row
+for leg in ("daily_grid_build", "Q13"):
+    if leg not in rows or "error" in rows[leg]:
+        sys.exit(f"rehearsal leg {leg}: {rows.get(leg, 'no row')}")
+EOF
+python3 scripts/sf10_table.py "$REH_LOG"
+
 echo "CI GREEN ($SF_DIR)"

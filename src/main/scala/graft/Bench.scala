@@ -14,71 +14,51 @@ object Bench {
   private def d(pattern: String, v: Double): String =
     String.format(java.util.Locale.ROOT, pattern, Double.box(v))
 
-  /** `Class: message <- Class: message ...` over the whole cause chain: a
-    * Spark failure's outermost exception is usually a wrapper whose
-    * message hides the cause. Bounded, in case a chain loops. */
-  private[graft] def causeChain(e: Throwable): String =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
-      .map(t => s"${t.getClass.getName}: ${t.getMessage}").mkString(" <- ")
+  /** One tensor leg's fit: wall seconds, iterations and final fit. */
+  private final case class TensorFit(sec: Double, iters: Int, fit: Double)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    val cpus = Harness.cpus(32)
+    def newSession(): SparkSession = Harness.session(cpus, cpus)
     var spark = newSession()
 
     // Every failed leg (query, build or tensor), once each in order of
     // first failure. A failed leg is left out of the timed sums, so it is
     // published as `n_failed`/`failed` and can never pass for a fast one.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def fail(leg: String, e: Throwable): Unit = {
-      failed += leg
-      System.err.println(s"[bench] $leg failed: ${causeChain(e)}")
-    }
-    def timeLeg(leg: String)(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { body; (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable => fail(leg, e); -1.0 }
-    }
-
-    def materialize(name: String): Double = {
-      // Drop any relation an operator cached during a previous run: the
-      // cache manager matches canonicalized plans, so a leaked cache would
-      // let the 2nd/3rd timed runs read cached data and under-report the
-      // protocol's "fully-materialized runs" (and caches would accumulate
-      // across the whole 61-query session).
-      spark.catalog.clearCache()
-      // Collect the previous queries' garbage OUTSIDE the timed region:
-      // in a full-registry session a deferred full GC otherwise lands on
-      // an arbitrary query and can span all of its timed runs (observed:
-      // a 9x one-off on Q98 that re-measured at 1x in the next session
-      // and in isolation).
-      System.gc()
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val sec = timeLeg(name) {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
+    def run[T](leg: String)(body: => T): Option[(Double, T)] = {
+      val l = Harness.leg(spark, leg)(body)
+      l.error.foreach { e =>
+        failed += leg
+        System.err.println(s"[bench] $leg failed: $e")
       }
-      // Unpersist the localCheckpoint RDD blocks this run created (r10
-      // verdict #2): clearCache() covers DataFrame caches but NOT
-      // checkpoint blocks, which otherwise accumulate block-manager debt
-      // across the 335-leg session — the prime suspect for the 2-6x
-      // late-position inflation the driver's full-registry runs showed on
-      // checkpoint-heavy legs (Q248/Q103/Q156/Q160). Outside the timed
-      // region; non-blocking so the removal overlaps the next GC.
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
-      sec
+      l.result.toOption.map(l.sec -> _)
+    }
+    def timeLeg(leg: String)(body: => Unit): Double = run(leg)(body).fold(-1.0)(_._1)
+
+    // Harness.leg drops the caches and checkpoint blocks a run leaves
+    // behind, so the 2nd/3rd timed runs of a query can never read cached
+    // data (and nothing accumulates across the whole session). Its
+    // untimed System.gc() matters here: in a full-registry session a
+    // deferred full GC otherwise lands on an arbitrary query and can span
+    // all of its timed runs (observed: a 9x one-off on Q98 that
+    // re-measured at 1x in the next session and in isolation).
+    def materialize(name: String): Double = timeLeg(name) {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save()
+    }
+    // A fresh session, primed OUTSIDE any timed region: the first
+    // post-recycle query otherwise absorbs the old context's async
+    // teardown (executor/block-manager cleanup of 30 queries' state) plus
+    // fresh-session catalog/footer setup across ALL THREE of its timed
+    // runs — observed as Q145 at 8.66 s full-registry vs 3.07 s dedicated
+    // on the same build. One untimed materialization of `head` soaks both
+    // before timing starts.
+    def recycle(head: String): Unit = {
+      Harness.stop(spark)
+      spark = newSession()
+      materialize(head)
     }
 
     // Warm-up: JVM/codegen/parquet-footer caches.
@@ -126,13 +106,7 @@ object Bench {
     // dedicated median (VERDICT r9 #6, the half of the r8 hygiene item
     // that the chunk recycling didn't cover). Recycle once after the
     // builds so chunk 1 starts as clean as every later chunk.
-    if (names.nonEmpty) {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      spark = newSession()
-      materialize(names.head)
-    }
+    if (names.nonEmpty) recycle(names.head)
     // Session-pressure sentinels (VERDICT r11 #4): re-time the same two
     // trivial, unchanged legs (Q01 metadata counts, Q13 TPC-H Q1) at the
     // START, MIDDLE, and END of the full-registry session and publish the
@@ -145,87 +119,64 @@ object Bench {
     // session position (protocol in docs/BENCH_NOTES.md). Mid/end
     // sentinels run immediately AFTER a chunk finishes (before its
     // recycle), where accumulated session debt is at its local maximum.
+    def median3(name: String): Double = {
+      val runs = (1 to 3).map(_ => materialize(name)).filter(_ >= 0).sorted
+      if (runs.isEmpty) -1.0 else runs(runs.length / 2)
+    }
     def sentinel(): String =
-      Seq("Q01", "Q13").map { q =>
-        val runs = (1 to 3).map(_ => materialize(q)).filter(_ >= 0).sorted
-        val med = if (runs.isEmpty) -1.0 else runs(runs.length / 2)
-        "\"" + q + "\":" + d("%.3f", med)
-      }.mkString("{", ",", "}")
+      Seq("Q01", "Q13").map(q => "\"" + q + "\":" + d("%.3f", median3(q)))
+        .mkString("{", ",", "}")
     val sentinels = scala.collection.mutable.LinkedHashMap[String, String]()
     val chunks = names.grouped(RECYCLE).toSeq
     if (names.nonEmpty) sentinels("start") = sentinel()
     val results = chunks.zipWithIndex.flatMap { case (chunk, ci) =>
-      if (chunk.head != names.head) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = newSession()
-        // Prime the fresh session OUTSIDE any timed region: the first
-        // post-recycle query otherwise absorbs the old context's async
-        // teardown (executor/block-manager cleanup of 30 queries' state)
-        // plus fresh-session catalog/footer setup across ALL THREE of its
-        // timed runs — observed as Q145 at 8.66 s full-registry vs 3.07 s
-        // dedicated on the same build. One untimed materialization of the
-        // chunk head soaks both before timing starts.
-        materialize(chunk.head)
-      }
-      val timed = chunk.map { name =>
-        val runs = (1 to 3).map(_ => materialize(name)).filter(_ >= 0).sorted
-        val median = if (runs.isEmpty) -1.0 else runs(runs.length / 2)
-        name -> median
-      }
+      if (chunk.head != names.head) recycle(chunk.head)
+      val timed = chunk.map(name => name -> median3(name))
       if (ci == (chunks.length - 1) / 2) sentinels("mid") = sentinel()
       if (ci == chunks.length - 1) sentinels("end") = sentinel()
       timed
     }
 
-    // CP-ALS on the Q43 events tensor (rank 8, fixed 10 iterations).
-    // Skipped on dev subset runs — it times the tensor loop, not a query.
-    val cpals =
-      if (args.nonEmpty && !tensorsOnly) """{"sec_per_iter":-1}"""
-      else try {
-        val coo = operators.EventTime.q43(spark, sfDir)
-        val t0 = System.nanoTime()
-        val model = tensor.CPALS.fit(coo, rank = 8, seed = 42, tol = 0.0,
-          maxIter = 10, numSlabs = cpus.toInt)
-        val total = (System.nanoTime() - t0) / 1e9
-        val perIter = total / model.iterations
-        s"""{"sec_per_iter":${d("%.4f", perIter)},"iters":${model.iterations},"fit":${d("%.6f", model.finalFit)}}"""
-      } catch { case e: Throwable => fail("cpals", e); """{"sec_per_iter":-1}""" }
+    // Tensor legs on the Q43 events tensor, skipped on dev subset runs —
+    // they time the tensor loop, not a query. None when skipped or failed.
+    def tensorLeg(leg: String)(fit: => TensorFit): Option[TensorFit] =
+      if (args.nonEmpty && !tensorsOnly) None else run(leg)(fit).map(_._2)
+    def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
+
+    // CP-ALS, rank 8, fixed 10 iterations.
+    val cpals = tensorLeg("cpals") {
+      val coo = operators.EventTime.q43(spark, sfDir)
+      val t0 = System.nanoTime()
+      val m = tensor.CPALS.fit(coo, rank = 8, seed = 42, tol = 0.0,
+        maxIter = 10, numSlabs = cpus)
+      TensorFit(since(t0), m.iterations, m.finalFit)
+    }
 
     // Nonnegative CP via HALS on the same tensor (the Q43 values are sums
     // of nonnegative event values, so the NN model is meaningful here).
-    // Skipped on dev subset runs.
-    val nnhals =
-      if (args.nonEmpty && !tensorsOnly) """{"sec_per_iter":-1}"""
-      else try {
-        val coo = operators.EventTime.q43(spark, sfDir)
-        val t0 = System.nanoTime()
-        val model = tensor.NnHals.fit(coo, rank = 8, seed = 42, tol = 0.0,
-          maxIter = 10, numSlabs = cpus.toInt)
-        val total = (System.nanoTime() - t0) / 1e9
-        val perIter = total / model.iterations
-        s"""{"sec_per_iter":${d("%.4f", perIter)},"iters":${model.iterations},"fit":${d("%.6f", model.finalFit)}}"""
-      } catch { case e: Throwable => fail("nnhals", e); """{"sec_per_iter":-1}""" }
+    val nnhals = tensorLeg("nnhals") {
+      val coo = operators.EventTime.q43(spark, sfDir)
+      val t0 = System.nanoTime()
+      val m = tensor.NnHals.fit(coo, rank = 8, seed = 42, tol = 0.0,
+        maxIter = 10, numSlabs = cpus)
+      TensorFit(since(t0), m.iterations, m.finalFit)
+    }
 
-    // Tucker/HOSVD on the same tensor (skipped on dev subset runs).
-    val tucker =
-      if (args.nonEmpty && !tensorsOnly) """{"sec":-1}"""
-      else try {
-        val coo = operators.EventTime.q43(spark, sfDir).selectExpr("i", "j", "k", "v")
-        // Clamp target ranks to the tier's tensor dims (rank <= dim is
-        // Tucker's loud contract; at sf0.001 mode 1 is only 15 wide).
-        val dims = coo.selectExpr(
-          "cast(max(i) as long)", "cast(max(j) as long)", "cast(max(k) as long)").head()
-        val ranks = (
-          math.min(16, dims.getLong(0).toInt + 1),
-          math.min(4, dims.getLong(1).toInt + 1),
-          math.min(16, dims.getLong(2).toInt + 1))
-        val t0 = System.nanoTime()
-        val m = tensor.Tucker.hosvd(coo, ranks)
-        val sec = (System.nanoTime() - t0) / 1e9
-        s"""{"sec":${d("%.4f", sec)},"fit":${d("%.6f", m.fit)}}"""
-      } catch { case e: Throwable => fail("tucker", e); """{"sec":-1}""" }
+    // Tucker/HOSVD on the same tensor, one decomposition.
+    val tucker = tensorLeg("tucker") {
+      val coo = operators.EventTime.q43(spark, sfDir).selectExpr("i", "j", "k", "v")
+      // Clamp target ranks to the tier's tensor dims (rank <= dim is
+      // Tucker's loud contract; at sf0.001 mode 1 is only 15 wide).
+      val dims = coo.selectExpr(
+        "cast(max(i) as long)", "cast(max(j) as long)", "cast(max(k) as long)").head()
+      val ranks = (
+        math.min(16, dims.getLong(0).toInt + 1),
+        math.min(4, dims.getLong(1).toInt + 1),
+        math.min(16, dims.getLong(2).toInt + 1))
+      val t0 = System.nanoTime()
+      val m = tensor.Tucker.hosvd(coo, ranks)
+      TensorFit(since(t0), 1, m.fit)
+    }
 
     // The driver's bench artifact retains only a ~2000-char stdout tail
     // (with ~85 of that spent on sbt's [success] trailer); the r7 line
@@ -235,40 +186,29 @@ object Bench {
     // flattens the tensor legs to their bare headline numbers (~110 chars
     // saved); the repo copy in docs/BENCH_LAST.json keeps 4 decimals and
     // the full tensor objects (iters/fit).
+    def headline(t: Option[TensorFit]): String =
+      t.fold("-1")(f => d("%.4f", f.sec / f.iters))
+    def cpObject(t: Option[TensorFit]): String = t.fold("""{"sec_per_iter":-1}""")(f =>
+      s"""{"sec_per_iter":${headline(t)},"iters":${f.iters},"fit":${d("%.6f", f.fit)}}""")
+    def tuckerObject(t: Option[TensorFit]): String = t.fold("""{"sec":-1}""")(f =>
+      s"""{"sec":${headline(t)},"fit":${d("%.6f", f.fit)}}""")
     val sentinelJson = sentinels
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val total = results.map(_._2).filter(_ >= 0).sum
     // All-in total (r14, VERDICT r13 item 5): queries + every build leg +
     // the tensor legs' full wall time — the accounting that cannot be
     // gamed by moving work into an excluded leg. Published NEXT TO the
     // existing `value` (which stays the sum of query legs only, as every
     // prior round's artifact defined it) — additions-only.
-    def headlineD(obj: String, field: String): Double = {
-      val m = (s""""$field":(-?[0-9.]+)""").r.findFirstMatchIn(obj)
-      m.map(_.group(1).toDouble).getOrElse(-1.0)
-    }
-    val allIn = {
-      val q = results.map(_._2).filter(_ >= 0).sum
-      val buildTotal = builds.map(_._2).filter(_ >= 0).sum
-      val cpTotal = math.max(0.0, headlineD(cpals, "sec_per_iter")) *
-        math.max(0.0, headlineD(cpals, "iters"))
-      val nnTotal = math.max(0.0, headlineD(nnhals, "sec_per_iter")) *
-        math.max(0.0, headlineD(nnhals, "iters"))
-      val tkTotal = math.max(0.0, headlineD(tucker, "sec"))
-      q + buildTotal + cpTotal + nnTotal + tkTotal
-    }
+    val allIn = total + builds.map(_._2).filter(_ >= 0).sum +
+      Seq(cpals, nnhals, tucker).flatten.map(_.sec).sum
     def buildsJson(fmt: Double => String): String =
       builds.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString(",")
     def line(fmt: Double => String, sf: String, tensorObjects: Boolean): String = {
       val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-      val total = results.map(_._2).filter(_ >= 0).sum
-      def headline(obj: String, field: String): String = {
-        val m = (s""""$field":(-?[0-9.]+)""").r.findFirstMatchIn(obj)
-        m.map(_.group(1)).getOrElse("-1")
-      }
       val (cp, nn, tk) =
-        if (tensorObjects) (cpals, nnhals, tucker)
-        else (headline(cpals, "sec_per_iter"), headline(nnhals, "sec_per_iter"),
-          headline(tucker, "sec"))
+        if (tensorObjects) (cpObject(cpals), cpObject(nnhals), tuckerObject(tucker))
+        else (headline(cpals), headline(nnhals), headline(tucker))
       s"""{"metric":"total","value":${fmt(total)},"value_all_in":${fmt(allIn)},"unit":"sec","queries":$qs,"cpals":$cp,"nnhals":$nn,"tucker":$tk,${buildsJson(fmt)},"n_failed":${failed.size},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sentinels":$sentinelJson,"sf":"$sf"}"""
     }
     // Stdout form: trailing zeros trimmed ("0.10"→"0.1", "3.00"→"3" —
@@ -289,16 +229,9 @@ object Bench {
     // truncation removes the full map's leading '{"metric"' marker, any
     // parser scanning the tail finds exactly one complete JSON object.
     // The authoritative full-precision map stays in docs/BENCH_LAST.json.
-    locally {
-      val total = results.map(_._2).filter(_ >= 0).sum
-      def headline(obj: String, field: String): String = {
-        val m = (s""""$field":(-?[0-9.]+)""").r.findFirstMatchIn(obj)
-        m.map(_.group(1)).getOrElse("-1")
-      }
-      val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(8)
-        .map { case (k, v) => "\"" + k + "\":" + compact(v) }.mkString("{", ",", "}")
-      println(s"""{"metric":"total","value":${compact(total)},"value_all_in":${compact(allIn)},"unit":"sec","n_queries":${results.size},"slowest":$slowest,"cpals":${headline(cpals, "sec_per_iter")},"nnhals":${headline(nnhals, "sec_per_iter")},"tucker":${headline(tucker, "sec")},${buildsJson(compact)},"n_failed":${failed.size},"sentinels":$sentinelJson,"queries_map":"docs/BENCH_LAST.json","sf":"${sfDir.split('/').last}"}""")
-    }
+    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(8)
+      .map { case (k, v) => "\"" + k + "\":" + compact(v) }.mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":${compact(total)},"value_all_in":${compact(allIn)},"unit":"sec","n_queries":${results.size},"slowest":$slowest,"cpals":${headline(cpals)},"nnhals":${headline(nnhals)},"tucker":${headline(tucker)},${buildsJson(compact)},"n_failed":${failed.size},"sentinels":$sentinelJson,"queries_map":"docs/BENCH_LAST.json","sf":"${sfDir.split('/').last}"}""")
     // Only a full-registry (driver-shaped) run AT THE DRIVER'S SF may
     // refresh the repo copy — a dev subset would clobber it with a partial
     // map, and a CI sf0.001 sweep would clobber it with the wrong tier's
@@ -318,6 +251,6 @@ object Bench {
         full.getBytes("UTF-8"))
       catch { case _: Throwable => () }
     }
-    spark.stop()
+    Harness.stop(spark)
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler: run one query to the noop sink and print every Spark
   * job's wall time — the fastest way to see whether a multi-job operator
   * (CC loops, probe-gated builds) is bound by data or by job-launch
@@ -14,42 +11,17 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        starts.put(js.jobId, (System.nanoTime(), desc))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(starts.get(je.jobId)).foreach { case (t0, desc) =>
-          val ms = (System.nanoTime() - t0) / 1e6
-          lines.add(f"job ${je.jobId}%3d ${ms}%8.1f ms  $desc")
-        }
-      }
-    })
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus, cpus, logLevel = "ERROR")
+    def run(): Harness.Leg[Unit] = Harness.leg(spark, name) {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save()
+    }.orThrow
     // Warm run (codegen/footers), then the measured run.
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.mode("overwrite").format("noop").save()
-    spark.catalog.clearCache()
-    lines.clear()
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir)
-      .write.mode("overwrite").format("noop").save()
-    val total = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500)
-    lines.forEach(l => println(l))
-    println(f"TOTAL $name: $total%.2f s, ${lines.size} jobs")
+    run()
+    val leg = run()
+    leg.jobs.foreach(j => println(f"job ${j.id}%3d ${j.ms}%8.1f ms  ${j.description}"))
+    println(f"TOTAL $name: ${leg.sec}%.2f s, ${leg.jobs.size} jobs")
     spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.PrintWriter
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-budget audit: for every declared query, count the physical
   * plan's exchanges, broadcasts, join flavors, and codegen spans — the
@@ -18,13 +17,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outPath = if (args.length > 1) args(1) else "docs/PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(4, 4, logLevel = "ERROR")
 
     val out = new PrintWriter(outPath)
     out.println("# Physical-plan audit (auto-generated by graft.PlanAudit)")

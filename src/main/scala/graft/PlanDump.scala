@@ -1,7 +1,6 @@
 package graft
 
 import java.io.PrintWriter
-import org.apache.spark.sql.SparkSession
 
 /** Dump `explain("formatted")` of named queries to files — the
   * before/after plan evidence the optimization rounds commit under
@@ -19,14 +18,8 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus, cpus, logLevel = "ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       spark.catalog.clearCache()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf10 dress-rehearsal data generator (r10 verdict item 8) — a DEV TOOL,
@@ -33,13 +33,7 @@ object Sf10Gen {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-sf10")
     val scale = args.lift(1).map(_.toLong).getOrElse(100L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(32), 64)
 
     val nLineitem = 600000L * scale
     val nOrders = nLineitem / 4

@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.AtomicLong
-
 /** sf10 dress-rehearsal runner (r10 verdict item 8) — a DEV TOOL. Runs the
   * derived builds plus a hand-picked set of the heaviest scale-safe legs
   * against an [[Sf10Gen]] directory, with a task-metrics listener that
@@ -17,7 +13,6 @@ object Sf10Rehearsal {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Shuffle-partition override for wide-output legs (r14): Q198's
     // declared sf10 output is ~1.7G rows, and 64 partitions put ~750 MB
     // under each of 32 concurrent sorts — execution memory fragments
@@ -26,60 +21,24 @@ object Sf10Rehearsal {
     // stages, so light legs are unaffected.
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val spillMem = new AtomicLong(0L)
-    val spillDisk = new AtomicLong(0L)
-    val shufWrite = new AtomicLong(0L)
-    val shufRead = new AtomicLong(0L)
-    val peakTaskMem = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          peakTaskMem.getAndUpdate(p => math.max(p, m.peakExecutionMemory))
-        }
-      }
-    })
+    val spark = Harness.session(Harness.cpus(32), shufflePartitions)
 
     def mb(b: Long): String = f"${b / 1048576.0}%.1f"
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
     def leg(name: String)(body: => Unit): Unit = {
-      spark.catalog.clearCache()
-      System.gc()
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      spillMem.set(0); spillDisk.set(0); shufWrite.set(0); shufRead.set(0)
-      peakTaskMem.set(0)
-      val t0 = System.nanoTime()
-      val ok = try { body; true } catch {
-        case e: Throwable =>
+      val l = Harness.leg(spark, name)(body)
+      l.error match {
+        case Some(e) =>
           val row = new java.util.LinkedHashMap[String, String]()
           row.put("leg", name)
-          row.put("error", Bench.causeChain(e))
+          row.put("error", e)
           println(json.writeValueAsString(row))
-          false
+        case None => println(f"""{"leg":"$name","sec":${l.sec}%.1f,"spill_mem_mb":${
+          mb(l.spillMemBytes)},"spill_disk_mb":${mb(l.spillDiskBytes)},"shuffle_write_mb":${
+          mb(l.shuffleWriteBytes)},"shuffle_read_mb":${mb(l.shuffleReadBytes)},"peak_task_mem_mb":${
+          mb(l.peakTaskMemBytes)}}""")
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // wait for straggler task-end events before reading the counters
-      Thread.sleep(500)
-      if (ok) println(f"""{"leg":"$name","sec":$sec%.1f,"spill_mem_mb":${
-        mb(spillMem.get)},"spill_disk_mb":${mb(spillDisk.get)},"shuffle_write_mb":${
-        mb(shufWrite.get)},"shuffle_read_mb":${mb(shufRead.get)},"peak_task_mem_mb":${
-        mb(peakTaskMem.get)}}""")
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
 
     // Build legs are selectable by name like query legs. The r11

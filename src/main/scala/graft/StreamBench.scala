@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.streaming.StreamingOps
@@ -32,23 +31,14 @@ import graft.streaming.StreamingOps
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session(cpus, cpus)
 
     // Batch form, median of 3 fully-materialized runs (Bench protocol).
-    def batchRun(): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
+    def batchRun(): Double = Harness.leg(spark, "q42_batch") {
       operators.EventTime.q42(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    }.orThrow.sec
     batchRun() // warm-up
     val batchSec = (1 to 3).map(_ => batchRun()).sorted.apply(1)
 

@@ -1,44 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus(4)
+    val spark = Harness.session(cpus, cpus)
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated query names); the driver
     // never sets it, so its runs always cover the full registry.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      Harness.leg(spark, name, gc = false) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }.error.foreach { e =>
+        failed += name
+        System.err.println(s"[verify] $name failed: $e")
       }
-      // Release any relation the operator cached (e.g. the Jaccard token
-      // relation) so caches don't pile up across the full query sweep,
-      // and drop the query's localCheckpoint RDD blocks (clearCache does
-      // not cover those) so block-manager state stays bounded over 335
-      // queries.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
     }
     writeOracleJson(outDir)
+    System.err.println(s"[verify] n_failed=${failed.size} failed=${failed.mkString("[", ",", "]")}")
     spark.stop()
   }
 

@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (mirrors the driver harness
-  * config: UTC, small shuffle partition count; the nanos config is set by
-  * graft.Catalog at use-time exactly as in production).
+/** Shared local SparkSession for all specs, built by the tools' own
+  * [[Harness.session]] factory (UTC, UI off) with a small shuffle partition
+  * count; the nanos config is set by graft.Catalog at use-time exactly as
+  * in production.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -15,15 +16,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    Harness.session(4, 4, appName = Some("graft-test"))
 }
