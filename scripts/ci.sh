@@ -48,7 +48,7 @@ python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 # sf10_table.py must still read it, so a renamed row key fails here and
 # not in a later sweep.
 REH_LOG=$(mktemp /tmp/graft-ci-rehearsal.XXXXXX.log)
-sbt -batch "runMain graft.Sf10Rehearsal $(dirname "$SF_DIR")/sf0.001 daily_grid_build Q13" \
+sbt -batch "runMain graft.Sf10Rehearsal /root/testdata/sf0.001 daily_grid_build Q13" \
   > "$REH_LOG"
 python3 - "$REH_LOG" <<'EOF'
 import json, sys

@@ -18,14 +18,13 @@ object Harness {
 
   /** A `local[cpus]` session in UTC with the UI off, the given shuffle
     * partition count and log level, and the counting listener attached. */
-  def session(cpus: Int, shufflePartitions: Int, logLevel: String = "WARN",
-      appName: Option[String] = None): SparkSession = {
-    val b = SparkSession.builder()
+  def session(cpus: Int, shufflePartitions: Int, logLevel: String = "WARN"): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    val s = appName.fold(b)(b.appName).getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
     meter(s.sparkContext)
     s
@@ -67,24 +66,32 @@ object Harness {
     * relation is dropped and every RDD the body persisted is unpersisted
     * — `clearCache` does not cover `localCheckpoint` blocks, which would
     * otherwise pile up in the block manager over a long session. A throw
-    * is captured, not rethrown. */
+    * is captured, not rethrown, whether the body or a step around it
+    * raised it (the listener drain times out after 10 s; `clearCache`
+    * throws once the body has killed the context); the body's own throw
+    * wins. */
   def leg[T](spark: SparkSession, name: String, gc: Boolean = true)(body: => T): Leg[T] = {
     val sc = spark.sparkContext
     val m = meter(sc)
     if (gc) System.gc()
     val before = sc.getPersistentRDDs.keySet
-    GraftListenerBus.drain(sc)
+    val setup = attempt(GraftListenerBus.drain(sc))
     m.reset()
     val t0 = System.nanoTime()
-    val result = try Right(body) catch { case e: Throwable => Left(e) }
+    val run = attempt(body)
     val sec = (System.nanoTime() - t0) / 1e9
-    GraftListenerBus.drain(sc)
-    spark.catalog.clearCache()
-    sc.getPersistentRDDs
-      .filterNot { case (id, _) => before.contains(id) }
-      .values.foreach(_.unpersist(blocking = false))
-    m.leg(name, sec, result)
+    val cleanup = attempt {
+      GraftListenerBus.drain(sc)
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs
+        .filterNot { case (id, _) => before.contains(id) }
+        .values.foreach(_.unpersist(blocking = false))
+    }
+    m.leg(name, sec, for (v <- run; _ <- setup; _ <- cleanup) yield v)
   }
+
+  private def attempt[A](a: => A): Either[Throwable, A] =
+    try Right(a) catch { case e: Throwable => Left(e) }
 
   private var current: Option[(SparkContext, Meter)] = None
 

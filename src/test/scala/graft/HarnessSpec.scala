@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions.col
 
 /** The tools' leg runner: failure capture, per-leg hygiene and per-leg
@@ -42,5 +44,30 @@ class HarnessSpec extends SparkSpec {
     assert(shuffle.jobs.nonEmpty && shuffle.tasks > 0)
     assert(plain.result == Right(10))
     assert(plain.shuffleWriteBytes == 0)
+  }
+
+  test("a throw in the cleanup fails the leg, but never hides the body's") {
+    // An RDD whose first unpersist throws, as the cleanup does once a body
+    // has killed the context.
+    class Sticky extends RDD[Int](spark.sparkContext, Nil) {
+      private var armed = true
+      override def compute(p: Partition, c: TaskContext): Iterator[Int] = Iterator.empty
+      override protected def getPartitions: Array[Partition] = Array.empty
+      override def unpersist(blocking: Boolean): this.type =
+        if (armed) { armed = false; throw new IllegalStateException("cleanup failed") }
+        else super.unpersist(blocking)
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val quiet, loud = new Sticky
+    val cleanup = Harness.leg(spark, "cleanup") { quiet.persist(); 1 }
+    val both = Harness.leg(spark, "both") {
+      loud.persist()
+      throw new ArithmeticException("body failed")
+    }
+    quiet.unpersist(); loud.unpersist()
+    assert(cleanup.error.exists(_.contains("java.lang.IllegalStateException: cleanup failed")))
+    assert(both.error.exists(_.contains("java.lang.ArithmeticException: body failed")))
+    assert(!both.error.exists(_.contains("cleanup failed")))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 }

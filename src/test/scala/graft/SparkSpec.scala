@@ -16,6 +16,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession =
-    Harness.session(4, 4, appName = Some("graft-test"))
+  lazy val session: SparkSession = Harness.session(4, 4)
 }
