@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** BENCH harness (BASELINE.md protocol): warm-up, 3 timed runs per query,
   * median reported; results fully materialized via the no-op sink (every
@@ -16,6 +16,18 @@ object Bench {
 
   /** One tensor leg's fit: wall seconds, iterations and final fit. */
   private final case class TensorFit(sec: Double, iters: Int, fit: Double)
+
+  /** The CP legs' fit of the Q43 tensor: `cpals` (CP-ALS) or `nnhals`
+    * (nonnegative CP via HALS; the Q43 values are sums of nonnegative
+    * event values, so the NN model is meaningful here), rank 8, a fixed
+    * 10 iterations, one slab per core. */
+  private[graft] def cpFit(leg: String, coo: DataFrame, cpus: Int): tensor.CPALS.CPModel =
+    leg match {
+      case "cpals" =>
+        tensor.CPALS.fit(coo, rank = 8, seed = 42, tol = 0.0, maxIter = 10, numSlabs = cpus)
+      case "nnhals" =>
+        tensor.NnHals.fit(coo, rank = 8, seed = 42, tol = 0.0, maxIter = 10, numSlabs = cpus)
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -143,24 +155,16 @@ object Bench {
       if (args.nonEmpty && !tensorsOnly) None else run(leg)(fit).map(_._2)
     def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
-    // CP-ALS, rank 8, fixed 10 iterations.
-    val cpals = tensorLeg("cpals") {
+    // CP-ALS and NN-HALS (see cpFit), timed from after the Q43 tensor's
+    // DataFrame is built.
+    def cpLeg(leg: String): Option[TensorFit] = tensorLeg(leg) {
       val coo = operators.EventTime.q43(spark, sfDir)
       val t0 = System.nanoTime()
-      val m = tensor.CPALS.fit(coo, rank = 8, seed = 42, tol = 0.0,
-        maxIter = 10, numSlabs = cpus)
+      val m = cpFit(leg, coo, cpus)
       TensorFit(since(t0), m.iterations, m.finalFit)
     }
-
-    // Nonnegative CP via HALS on the same tensor (the Q43 values are sums
-    // of nonnegative event values, so the NN model is meaningful here).
-    val nnhals = tensorLeg("nnhals") {
-      val coo = operators.EventTime.q43(spark, sfDir)
-      val t0 = System.nanoTime()
-      val m = tensor.NnHals.fit(coo, rank = 8, seed = 42, tol = 0.0,
-        maxIter = 10, numSlabs = cpus)
-      TensorFit(since(t0), m.iterations, m.finalFit)
-    }
+    val cpals = cpLeg("cpals")
+    val nnhals = cpLeg("nnhals")
 
     // Tucker/HOSVD on the same tensor, one decomposition.
     val tucker = tensorLeg("tucker") {

@@ -1,6 +1,7 @@
 package graft.tensor
 
 import breeze.linalg.{pinv, DenseMatrix}
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
@@ -18,29 +19,36 @@ import org.apache.spark.storage.StorageLevel
   *    during the loop. Each slab owns its i-rows exclusively, so the
   *    A-update is embarrassingly parallel: per-slab local MTTKRP rows ×
   *    the broadcast R×R solve matrix, persisted in place as one primitive
-  *    array per slab. AᵀA is tree-aggregated (R×R per slab), and A is
-  *    collected exactly once, after convergence, to build the returned
-  *    model (at true scale the caller would keep it as a relation; the
-  *    loop itself never needs it centralized).
+  *    array per slab. AᵀA (R×R per slab) rides in the mode-2 MTTKRP's
+  *    partial, and A is collected exactly once, after convergence, to
+  *    build the returned model (at true scale the caller would keep it as
+  *    a relation; the loop itself never needs it centralized).
   *  - B (J×R), C (K×R) are driver-resident and broadcast each
   *    half-iteration (modes 2/3 are the small modes in the slab design);
-  *    their MTTKRPs tree-reduce J×R / K×R partials; the R×R Gram solves
-  *    (Hadamard of Gramians, pseudo-inverted via breeze) happen on the
-  *    driver. Per iteration: 5 broadcasts (B, C, the R×R solve matrix,
-  *    and one factor per mttkrpJK call) + 2 jobs (the two tree-reduces;
-  *    the A-update is a narrow map materialized by the first of them).
-  *    The small-mode assumption is ENFORCED: `maxDriverFactorElems`
-  *    bounds J·R and K·R, and packing fails loudly (with the remedy in
-  *    the message) instead of OOMing the driver when a vocabulary-sized
-  *    mode lands on 2/3.
+  *    each slab's J×R / K×R MTTKRP partial is sent to the driver, which
+  *    sums them in slab order; the R×R Gram solves (Hadamard of
+  *    Gramians, pseudo-inverted via breeze) happen on the driver too. Per
+  *    iteration: 5 broadcasts (B, C, the R×R solve matrix, and one factor
+  *    per mttkrpJK call) + 2 single-stage jobs, one per MTTKRP, with no
+  *    shuffle at any slab count (the A-update is a narrow map
+  *    materialized by the first of them). The small-mode assumption is
+  *    ENFORCED: `maxDriverFactorElems` bounds J·R and K·R, and packing
+  *    fails loudly (with the remedy in the message) instead of OOMing the
+  *    driver when a vocabulary-sized mode lands on 2/3.
   *  - The slice→slab histogram is collected exactly only while I fits the
   *    driver (`maxDriverSlices`); above that the partitioner switches to
   *    [[SlabPartitioner.balancedSketched]] — top-k heavy slices + hashed
   *    tail, O(k + numSlabs) driver state regardless of I.
   *
-  * Scale notes: per iteration the driver sees only J×R + K×R partials and
-  * three R×R Gramians; the tensor is read from the persisted slab RDD and
-  * A from its per-slab sibling. Nothing driver-side grows with I or nnz.
+  * Scale notes: per iteration the driver receives every slab's partial:
+  * numSlabs × (J·R + R²) doubles for mode 2 and numSlabs × K·R for mode 3
+  * (a tree reduction above 5 slabs would send about √numSlabs of each,
+  * at the price of a shuffle). Every caller uses one slab per core, so
+  * numSlabs is the core count. The driver adds each partial into one
+  * running sum and drops it, holding at most the partials that arrive
+  * ahead of a slower lower-numbered slab. The tensor is read from the
+  * persisted slab RDD and A from its per-slab sibling. Nothing
+  * driver-side grows with I or nnz.
   *
   * Fit (C14) uses the standard CP identities — ‖X̂‖² = 1ᵀ(AᵀA∘BᵀB∘CᵀC)1 and
   * ⟨X,X̂⟩ = vec(MTTKRP_C)·vec(C) — so the residual norm never materializes
@@ -319,10 +327,10 @@ object CPALS {
 
   /** MTTKRP against mode 2 (outRows over j) or 3 (outRows over k):
     * per-slab dense partial from the slab-local A rows and ONE broadcast
-    * factor, tree-reduced to the driver. Never ships A.
+    * factor, summed on the driver by [[sumSlabPartials]]. Never ships A.
     *
     * `withGramA` additionally folds the slab's AᵀA contribution into the
-    * same pass (R×R appended to the reduced buffer) — the mode-2 call
+    * same pass (R×R appended to the summed buffer) — the mode-2 call
     * uses it so gram(A) costs no extra job: 2 jobs per iteration
     * total, one fewer than the collect-based design this replaced.
     */
@@ -333,7 +341,7 @@ object CPALS {
     val sc = slabRdd.sparkContext
     val bcO = sc.broadcast(other)
     val gramLen = if (withGramA) r * r else 0
-    val res = slabRdd.zipPartitions(aRdd) { (slabIt, aIt) =>
+    val partials = slabRdd.zipPartitions(aRdd) { (slabIt, aIt) =>
       val slab = slabIt.next(); val aLoc = aIt.next()
       val o = bcO.value
       val acc = new Array[Double](outRows * r + gramLen)
@@ -367,9 +375,8 @@ object CPALS {
         }
       }
       Iterator.single(acc)
-    }.treeReduce { (x, y) =>
-      var n = 0; while (n < x.length) { x(n) += y(n); n += 1 }; x
     }
+    val res = sumSlabPartials(partials, outRows * r + gramLen)
     bcO.destroy()
     if (!withGramA) (res, None)
     else {
@@ -380,6 +387,42 @@ object CPALS {
       while (p < r) { var q = 0; while (q < r) { g(p, q) = res(base + p * r + q); q += 1 }; p += 1 }
       (m, Some(g))
     }
+  }
+
+  /** The element-wise sum of the one `len`-long partial each slab emits,
+    * in ONE single-stage job. The driver adds partial s as soon as slabs
+    * 0..s have all arrived, so the sum order is the slab order whatever
+    * order the tasks finish in, and a seeded fit over one packed tensor
+    * is bit-reproducible. The job's function is the named [[SlabPartial]],
+    * not a lambda; see there for why.
+    */
+  private def sumSlabPartials(partials: RDD[Array[Double]], len: Int): Array[Double] = {
+    val numSlabs = partials.getNumPartitions
+    val sum = new Array[Double](len)
+    val arrived = new Array[Array[Double]](numSlabs)
+    var next = 0
+    partials.sparkContext.runJob(partials, SlabPartial, (slab: Int, partial: Array[Double]) => {
+      arrived(slab) = partial
+      while (next < numSlabs && arrived(next) != null) {
+        val x = arrived(next)
+        var n = 0; while (n < len) { sum(n) += x(n); n += 1 }
+        arrived(next) = null
+        next += 1
+      }
+    })
+    sum
+  }
+
+  /** A slab's one partial, as the result of its task. A named object, not
+    * a lambda: Spark's ClosureCleaner re-reads and parses the class file
+    * that declares each lambda it is given, on every job, and passes over
+    * an object that is not a closure without reading any. For the same
+    * reason the job takes the `(TaskContext, Iterator)` function that
+    * `runJob` runs as it is, not the `Iterator` one it wraps in a lambda.
+    */
+  private object SlabPartial
+      extends ((TaskContext, Iterator[Array[Double]]) => Array[Double]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Array[Double]]): Array[Double] = it.next()
   }
 
   /** ONE collect, after convergence, to centralize the slab-resident A for
@@ -470,7 +513,6 @@ object CPALS {
         withGramA: Boolean): (Array[Double], Option[DenseMatrix[Double]]) =
       CPALS.mttkrpJK(slabRdd, aRdd, r, mode, other, outRows, withGramA)
 
-    val fits = Vector.newBuilder[Double]
     var fitsSoFar = Vector.empty[Double]
     var prevFit = Double.NegativeInfinity
     var iter = 0
@@ -529,7 +571,6 @@ object CPALS {
       }
       val resid2 = math.max(0.0, normX2 - 2.0 * cross + model2)
       val fit = 1.0 - math.sqrt(resid2) / math.sqrt(normX2)
-      fits += fit
       fitsSoFar = fitsSoFar :+ fit
       if (fit - prevFit < tol && iter > 0) converged = true
       prevFit = fit

@@ -26,10 +26,12 @@ import graft.tensor.CPALS.{CPModel, PackedTensor, Slab}
   *    R×R G), so factor A updates in place beside its slab, never visiting
   *    the driver; per-slab cost is the same MTTKRP pass plus an O(rows·R²)
   *    sweep.
-  *  - modes 2/3: tree-reduced MTTKRPs (with AᵀA folded into the mode-2
-  *    pass), then a driver-side sweep over the small J×R / K×R factors.
-  *  - per iteration: 2 jobs + the same broadcast set as ALS; nothing
-  *    driver-side grows with I or nnz.
+  *  - modes 2/3: the per-slab MTTKRP partials (with AᵀA folded into the
+  *    mode-2 pass) summed on the driver in slab order
+  *    ([[CPALS.mttkrpJK]]), then a driver-side sweep over the small
+  *    J×R / K×R factors.
+  *  - per iteration: 2 single-stage jobs + the same broadcast set as ALS;
+  *    nothing driver-side grows with I or nnz.
   *
   * Zeros are absorbing and stable: a column that collapses to zero in one
   * factor zeroes its MTTKRP column and its Gram row/column elsewhere, so
@@ -144,7 +146,6 @@ object NnHals {
       Iterator.single(Array.fill(slab.localIs.length * r)(math.abs(prng.nextGaussian())))
     }.persist(StorageLevel.MEMORY_AND_DISK)
 
-    val fits = Vector.newBuilder[Double]
     var fitsSoFar = Vector.empty[Double]
     var prevFit = Double.NegativeInfinity
     var iter = 0
@@ -194,7 +195,6 @@ object NnHals {
       }
       val resid2 = math.max(0.0, normX2 - 2.0 * cross + model2)
       val fit = 1.0 - math.sqrt(resid2) / math.sqrt(normX2)
-      fits += fit
       fitsSoFar = fitsSoFar :+ fit
       if (fit - prevFit < tol && iter > 0) converged = true
       prevFit = fit

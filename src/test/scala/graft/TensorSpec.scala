@@ -315,6 +315,43 @@ class TensorSpec extends SparkSpec {
     m1.fits.zip(m2.fits).foreach { case (f1, f2) => assert(math.abs(f1 - f2) < 1e-6) }
   }
 
+  /** The two seeded fits over one packed slab tensor, by name. A tolerance
+    * of -inf never stops a fit early, so it runs exactly `maxIter`. */
+  private val packedFits: Seq[(String, (CPALS.PackedTensor, Long, Int) => CPALS.CPModel)] = Seq(
+    "CP-ALS" -> ((p, seed, iters) =>
+      CPALS.fitPacked(p, 2, seed, tol = Double.NegativeInfinity, maxIter = iters)),
+    "NN-HALS" -> ((p, seed, iters) =>
+      graft.tensor.NnHals.fitPacked(p, 2, seed, tol = Double.NegativeInfinity, maxIter = iters)))
+
+  test("CP-ALS and NN-HALS: each iteration is 2 single-stage jobs at 8 slabs") {
+    // 8 slabs is above the 5 at which a tree reduction of the MTTKRP
+    // partials adds a shuffle level; summing them in one job never does.
+    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 21), rank = 2, numSlabs = 8)
+    try packedFits.foreach { case (name, fit) =>
+      def leg(iters: Int) = {
+        val l = Harness.leg(spark, s"$name x$iters")(fit(packed, 5L, iters)).orThrow
+        assert(l.result.toOption.get.iterations == iters)
+        l
+      }
+      val one = leg(1); val three = leg(3)
+      assert(three.jobs.size - one.jobs.size == 2 * 2, s"$name jobs: ${one.jobs} vs ${three.jobs}")
+      assert(three.shuffleWriteBytes - one.shuffleWriteBytes == 0L,
+        s"$name shuffle write: ${one.shuffleWriteBytes} vs ${three.shuffleWriteBytes} bytes")
+    } finally packed.unpersist()
+  }
+
+  test("CP-ALS and NN-HALS: a seeded fit over one packed tensor is bit-reproducible") {
+    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 22), rank = 2, numSlabs = 8)
+    def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
+    try packedFits.foreach { case (name, fit) =>
+      val m1 = fit(packed, 9L, 6); val m2 = fit(packed, 9L, 6)
+      assert(bits(m1.fits) == bits(m2.fits), s"$name fits: ${m1.fits} vs ${m2.fits}")
+      assert(bits(m1.a.toSeq) == bits(m2.a.toSeq), s"$name a differs")
+      assert(bits(m1.b.toSeq) == bits(m2.b.toSeq), s"$name b differs")
+      assert(bits(m1.c.toSeq) == bits(m2.c.toSeq), s"$name c differs")
+    } finally packed.unpersist()
+  }
+
   test("NN-HALS on the Q43 events tensor: nonnegative data, nonnegative model") {
     import graft.tensor.NnHals
     val coo = EventTime.q43(spark, sf("sf0.001"))
