@@ -63,4 +63,17 @@ for leg in ("daily_grid_build", "Q13"):
 EOF
 python3 scripts/sf10_table.py "$REH_LOG"
 
+# Benchmark build and tensor fits: perfbench compiles against the engine's
+# private[graft] tensor API, so a signature change fails here and not first
+# in a benchmark run. One untraced pass of its tensors workload checks the
+# Q43 CP-ALS and NN-HALS fits against perfbench/expected.json, and the
+# Tucker and skewed-tensor fits; its last stdout line must read correct.
+PERF_LAST=$(python3 perfbench/run.py --workload tensors --seed 1 --seconds 0 --trace 0 | tail -1)
+python3 - "$PERF_LAST" <<'EOF'
+import json, sys
+result = json.loads(sys.argv[1])
+if result.get("correct") is not True:
+    sys.exit(f"perfbench tensors: {result}")
+EOF
+
 echo "CI GREEN ($SF_DIR)"

@@ -6,14 +6,13 @@ import graft.Catalog
 
 /** Hash-gated relational tensor-decomposition steps (SURVEY.md §2.13).
   *
-  * C12 pins the CP-ALS engines ([[graft.tensor.CPALS]],
-  * [[graft.tensor.RelationalALS]]) with PROPERTY gates (monotone fit,
-  * planted-factor recovery) because a full float ALS cannot be bit-matched
-  * across engines. Q335 closes the round-10 verdict gap by putting ONE
-  * seeded, fixed-parenthesization ALS half-step under the same DuckDB
-  * hash discipline as Q102/Q120 (k-means) and Q119 (BPE): the MTTKRP and
-  * the normal-equation solve — the two relational workhorses of
-  * [[graft.tensor.RelationalALS]] — run as an all-integer pipeline whose
+  * C12 pins the CP-ALS engine ([[graft.tensor.CPALS]]) with PROPERTY
+  * gates (monotone fit, planted-factor recovery) because a full float ALS
+  * cannot be bit-matched across engines. Q335 closes the round-10 verdict
+  * gap by putting ONE seeded, fixed-parenthesization ALS half-step under
+  * the same DuckDB hash discipline as Q102/Q120 (k-means) and Q119 (BPE):
+  * the MTTKRP and the normal-equation solve — the two workhorses of an
+  * ALS half-step — run as an all-integer pipeline whose
   * only float is ONE divide of exact integers, so the gate hash pins the
   * distributed algebra itself, not a rounded summary.
   */
@@ -62,9 +61,9 @@ object TensorGates {
     * (k, p) — no factor relation is ever materialized or shuffled; the
     * Gramians aggregate the DISTINCT mode indices (5 types, spine days);
     * the solve matrix is a broadcast single row. Per-user output, user
-    * dimension shuffles once (the groupBy) — the exact topology
-    * [[graft.tensor.RelationalALS]] runs per iteration, minus the
-    * driver-side pinv that rank-2 replaces with the closed-form adjugate.
+    * dimension shuffles once (the groupBy) — the topology of a
+    * relational ALS half-step, with the driver-side pinv replaced by the
+    * rank-2 closed-form adjugate.
     */
   def q335(spark: SparkSession, dir: String): DataFrame = {
     val c = Catalog(spark, dir)

@@ -1,7 +1,10 @@
 package graft.tensor
 
+import scala.util.Random
+
 import breeze.linalg.{pinv, DenseMatrix}
 import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
@@ -23,18 +26,20 @@ import org.apache.spark.storage.StorageLevel
   *    partial, and A is collected exactly once, after convergence, to
   *    build the returned model (at true scale the caller would keep it as
   *    a relation; the loop itself never needs it centralized).
-  *  - B (J×R), C (K×R) are driver-resident and broadcast each
-  *    half-iteration (modes 2/3 are the small modes in the slab design);
-  *    each slab's J×R / K×R MTTKRP partial is sent to the driver, which
-  *    sums them in slab order; the R×R Gram solves (Hadamard of
-  *    Gramians, pseudo-inverted via breeze) happen on the driver too. Per
-  *    iteration: 5 broadcasts (B, C, the R×R solve matrix, and one factor
-  *    per mttkrpJK call) + 2 single-stage jobs, one per MTTKRP, with no
-  *    shuffle at any slab count (the A-update is a narrow map
-  *    materialized by the first of them). The small-mode assumption is
-  *    ENFORCED: `maxDriverFactorElems` bounds J·R and K·R, and packing
-  *    fails loudly (with the remedy in the message) instead of OOMing the
-  *    driver when a vocabulary-sized mode lands on 2/3.
+  *  - B (J×R), C (K×R) are driver-resident (modes 2/3 are the small
+  *    modes in the slab design); each slab's J×R / K×R MTTKRP partial is
+  *    sent to the driver, which sums them in slab order; the R×R Gram
+  *    solves (Hadamard of Gramians, pseudo-inverted via breeze) happen on
+  *    the driver too. Per iteration: 2 broadcasts (B, C and the R×R solve
+  *    matrix as one array, read by the A-update and the mode-2 MTTKRP;
+  *    then the updated B for the mode-3 MTTKRP) + 2 single-stage jobs,
+  *    one per MTTKRP, with no shuffle at any slab count (the A-update is
+  *    a narrow map materialized by the first of them). Every function a
+  *    task runs is a named object, not a lambda (see [[OnePerSlab]]).
+  *    The small-mode assumption is ENFORCED: `maxDriverFactorElems`
+  *    bounds J·R and K·R, and packing fails loudly (with the remedy in
+  *    the message) instead of OOMing the driver when a vocabulary-sized
+  *    mode lands on 2/3.
   *  - The slice→slab histogram is collected exactly only while I fits the
   *    driver (`maxDriverSlices`); above that the partitioner switches to
   *    [[SlabPartitioner.balancedSketched]] — top-k heavy slices + hashed
@@ -49,6 +54,11 @@ import org.apache.spark.storage.StorageLevel
   * ahead of a slower lower-numbered slab. The tensor is read from the
   * persisted slab RDD and A from its per-slab sibling. Nothing
   * driver-side grows with I or nnz.
+  *
+  * One loop, [[fitPacked]], serves both CP fits: an [[UpdateRule]]
+  * supplies only the init and the per-row factor update — the ALS pinv
+  * solve here ([[AlsRule]]) or the nonnegative HALS sweep
+  * ([[NnHals.HalsRule]]).
   *
   * Fit (C14) uses the standard CP identities — ‖X̂‖² = 1ᵀ(AᵀA∘BᵀB∘CᵀC)1 and
   * ⟨X,X̂⟩ = vec(MTTKRP_C)·vec(C) — so the residual norm never materializes
@@ -79,7 +89,8 @@ object CPALS {
     def iterations: Int = fits.length
   }
 
-  /** Decompose a COO DataFrame with columns (i,j,k,v) — e.g. Q43's output. */
+  /** Decompose a COO DataFrame with columns (i,j,k,v) — e.g. Q43's output.
+    * `ridge` > 0 damps every solve ([[AlsRule]]). */
   def fit(
       coo: DataFrame,
       rank: Int,
@@ -87,24 +98,29 @@ object CPALS {
       tol: Double = 1e-4,
       maxIter: Int = 50,
       numSlabs: Int = 0,
-      ridge: Double = 0.0): CPModel = {
-    val spark = coo.sparkSession
+      ridge: Double = 0.0): CPModel =
+    fitCoo(coo, rank, seed, tol, maxIter, numSlabs, AlsRule(ridge))
+
+  /** Pack `coo`, run one seeded [[fitPacked]] with `rule`, unpersist. */
+  private[tensor] def fitCoo(
+      coo: DataFrame, rank: Int, seed: Long, tol: Double, maxIter: Int,
+      numSlabs: Int, rule: UpdateRule): CPModel = {
     import org.apache.spark.sql.functions.col
     val rows: RDD[(Long, Long, Long, Double)] = coo
       .select(col("i").cast("long"), col("j").cast("long"), col("k").cast("long"),
         col("v").cast("double"))
       .rdd.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-
-    val slabs = numSlabs match {
-      case n if n > 0 => n
-      case _          => math.max(2, spark.sparkContext.defaultParallelism)
-    }
-    fitRdd(rows, rank, seed, tol, maxIter, slabs, ridge = ridge)
+    val slabs =
+      if (numSlabs > 0) numSlabs
+      else math.max(2, coo.sparkSession.sparkContext.defaultParallelism)
+    val packed = pack(rows, rank, slabs)
+    try fitPacked(packed, rank, seed, tol, maxIter, rule)
+    finally packed.unpersist()
   }
 
   /** The packed, persisted slab tensor — everything a seeded fit needs,
-    * built ONCE per source RDD so multi-start reuses the partition+pack
-    * cost. Call [[PackedTensor.unpersist]] when done.
+    * built ONCE per source RDD so several seeded fits (multi-start) reuse
+    * the partition+pack cost. Call [[PackedTensor.unpersist]] when done.
     */
   private[graft] final case class PackedTensor(
       slabRdd: RDD[Slab],
@@ -146,9 +162,8 @@ object CPALS {
         s"CP-ALS mode-$name factor ($dim rows × rank $rank = " +
           s"${dim.toLong * rank} elements) exceeds the driver budget of " +
           s"$maxDriverFactorElems. Mode 1 is the distributed scale mode: " +
-          "rotate the largest mode into it (fitLargestModeFirst), use " +
-          "RelationalALS.fit when TWO modes are huge, reduce the rank, or " +
-          "raise maxDriverFactorElems if the driver truly has room.")
+          "pass the largest mode as column i, reduce the rank, or raise " +
+          "maxDriverFactorElems if the driver truly has room.")
     checkMode("2 (B)", nj)
     checkMode("3 (C)", nk)
 
@@ -188,170 +203,217 @@ object CPALS {
     PackedTensor(slabRdd, ni, nj, nk, normX2)
   }
 
-  /** Multi-start ALS: run `numStarts` seeded fits, keep the best final fit.
-    * ALS is monotone but only locally convergent — "swamp" stationary
-    * points are well documented (Kolda & Bader §3.4); restarting from a
-    * few seeds is the standard remedy. The tensor is partitioned, packed,
-    * and persisted EXACTLY ONCE here; every start iterates over the same
-    * cached slab RDD, so extra starts cost iterations only.
+  // ---- The update rules ----
+
+  /** What tells one CP fit from another: the seeded init and the update
+    * of a factor's rows. For the factor being updated the loop hands the
+    * rule its MTTKRP rows M (n×R) and the R×R matrix S = [[solveMatrix]]
+    * of H, the Hadamard of the other two factors' Grams. The same
+    * [[update]] runs slab-local for A (inside a task) and on the driver
+    * for B and C.
     */
-  def fitBest(
-      rows: RDD[(Long, Long, Long, Double)],
-      rank: Int,
-      seed: Long,
-      tol: Double,
-      maxIter: Int,
-      numSlabs: Int,
-      numStarts: Int): CPModel = {
-    val packed = pack(rows, rank, numSlabs)
-    try (0 until numStarts)
-      .map(s => fitPacked(packed, rank, seed + s, tol, maxIter))
-      .maxBy(_.finalFit)
-    finally packed.unpersist()
+  private[graft] trait UpdateRule extends Serializable {
+    /** One seeded init draw for an entry of B or C. */
+    def draw(rng: Random): Double
+    /** A slab's `n` initial A entries, from its own seeded `rng`. */
+    def initA(n: Int, rng: Random): Array[Double]
+    def solveMatrix(h: DenseMatrix[Double]): DenseMatrix[Double]
+    /** The new n×R rows from the old ones, M (`m`, read up to n×R) and S
+      * (row-major in `s` from `sOff`). */
+    def update(
+        old: Array[Double], m: Array[Double], s: Array[Double], sOff: Int,
+        n: Int, r: Int): Array[Double]
   }
 
-  def fitRdd(
-      rows: RDD[(Long, Long, Long, Double)],
-      rank: Int,
-      seed: Long,
-      tol: Double,
-      maxIter: Int,
-      numSlabs: Int,
-      maxDriverSlices: Int = 1 << 20,
-      ridge: Double = 0.0): CPModel = {
-    val packed = pack(rows, rank, numSlabs, maxDriverSlices)
-    try fitPacked(packed, rank, seed, tol, maxIter, ridge)
-    finally packed.unpersist()
-  }
-
-  /** Fit with the LARGEST mode rotated into mode 1 — the constructive
-    * answer to the small-mode guard: CP decomposition is symmetric under
-    * mode permutation (X(i,j,k) = Σ λ·aᵢ·bⱼ·cₖ, so permuting coordinates
-    * just permutes factor roles), and mode 1 is the slab-distributed one
-    * whose factor never sits on the driver. A tensor with a huge J or K
-    * (vocabulary-sized mode) fits by rotating that mode into position 1;
-    * the returned model's factors are swapped back so a/b/c and dims
-    * correspond to the CALLER's original mode order.
-    */
-  def fitLargestModeFirst(
-      rows: RDD[(Long, Long, Long, Double)],
-      rank: Int,
-      seed: Long = 42L,
-      tol: Double = 1e-4,
-      maxIter: Int = 50,
-      numSlabs: Int = 8): CPModel = {
-    val (mi, mj, mk) = rows
-      .map { case (i, j, k, _) => (i, j, k) }
-      .treeAggregate((0L, 0L, 0L))(
-        (a, x) => (a._1 max x._1, a._2 max x._2, a._3 max x._3),
-        (a, b) => (a._1 max b._1, a._2 max b._2, a._3 max b._3))
-    val big = Seq(mi, mj, mk).zipWithIndex.maxBy(_._1)._2
-    val permuted = big match {
-      case 0 => rows
-      case 1 => rows.map { case (i, j, k, v) => (j, i, k, v) }
-      case 2 => rows.map { case (i, j, k, v) => (k, j, i, v) }
-    }
-    val m = fitRdd(permuted, rank, seed, tol, maxIter, numSlabs)
-    big match {
-      case 0 => m
-      case 1 => m.copy(a = m.b, b = m.a,
-        dims = (m.dims._2, m.dims._1, m.dims._3))
-      case _ => m.copy(a = m.c, c = m.a,
-        dims = (m.dims._3, m.dims._2, m.dims._1))
-    }
-  }
-
-  // ---- Shared dense/slab kernels (used by the ALS loop here and by the
-  // ---- nonnegative HALS loop in [[NnHals]]) ----
-
-  private[tensor] def gram(m: Array[Double], n: Int, r: Int): DenseMatrix[Double] = {
-    val g = DenseMatrix.zeros[Double](r, r)
-    var row = 0
-    while (row < n) {
-      var p = 0
-      while (p < r) {
-        val vp = m(row * r + p)
-        var q = 0
-        while (q < r) { g(p, q) += vp * m(row * r + q); q += 1 }
-        p += 1
-      }
-      row += 1
-    }
-    g
-  }
-
-  private[tensor] def hadamard(
-      x: DenseMatrix[Double], y: DenseMatrix[Double], r: Int): DenseMatrix[Double] = {
-    val z = DenseMatrix.zeros[Double](r, r)
-    var p = 0
-    while (p < r) { var q = 0; while (q < r) { z(p, q) = x(p, q) * y(p, q); q += 1 }; p += 1 }
-    z
-  }
-
-  private[tensor] def matmulInto(
-      m: Array[Double], n: Int, g: DenseMatrix[Double], r: Int): Array[Double] = {
-    val out = new Array[Double](n * r)
-    var row = 0
-    while (row < n) {
-      var q = 0
-      while (q < r) {
-        var s = 0.0
-        var p = 0
-        while (p < r) { s += m(row * r + p) * g(p, q); p += 1 }
-        out(row * r + q) = s
-        q += 1
-      }
-      row += 1
-    }
-    out
-  }
-
-  /** Per-slab mode-1 MTTKRP: dense rows (nLocal×R) of Σ v·b_j∘c_k over the
-    * slab's nonzeros, against the two broadcast factors. Row-local to the
-    * slab (mode-1 ownership) — no shuffle, no reduce.
-    */
-  private[tensor] def slabMttkrpA(
-      slab: Slab, b: Array[Double], c: Array[Double], r: Int): Array[Double] = {
-    val m = new Array[Double](slab.localIs.length * r)
-    var n = 0
-    val len = slab.vs.length
-    while (n < len) {
-      val row = slab.iLoc(n) * r
-      val j = slab.js(n); val k = slab.ks(n); val v = slab.vs(n)
-      var p = 0
-      while (p < r) { m(row + p) += v * b(j * r + p) * c(k * r + p); p += 1 }
-      n += 1
-    }
-    m
-  }
-
-  /** MTTKRP against mode 2 (outRows over j) or 3 (outRows over k):
-    * per-slab dense partial from the slab-local A rows and ONE broadcast
-    * factor, summed on the driver by [[sumSlabPartials]]. Never ships A.
+  /** ALS: rows ← M·S with S = pinv(H). `ridge` λ > 0 solves against
+    * pinv(H + λI) instead — Tikhonov-regularized ALS, the standard
+    * "swamp" damper (Navasca, De Lathauwer & Kindermann, EUSIPCO 2008):
+    * λ bounds the factor Grams' condition number so near-collinear
+    * intermediate factors cannot stall progress. λ = 0 is EXACTLY the
+    * plain update (pinned bit-identical in TensorSpec): the eye-add is
+    * gated rather than adding a zero matrix. The reported fit remains the
+    * DATA fit, not the penalized objective.
     *
-    * `withGramA` additionally folds the slab's AᵀA contribution into the
-    * same pass (R×R appended to the summed buffer) — the mode-2 call
-    * uses it so gram(A) costs no extra job: 2 jobs per iteration
-    * total, one fewer than the collect-based design this replaced.
+    * Centered Gaussian init: an all-positive init is near-collinear in
+    * expectation, which conditions the Gram Hadamard products badly and
+    * can trap ALS far from the optimum. The update never reads the old
+    * rows, so A starts as zeros and is made by the first update.
     */
-  private[tensor] def mttkrpJK(
-      slabRdd: RDD[Slab], aRdd: RDD[Array[Double]], r: Int,
-      mode: Int, other: Array[Double], outRows: Int,
-      withGramA: Boolean): (Array[Double], Option[DenseMatrix[Double]]) = {
+  private[graft] final case class AlsRule(ridge: Double = 0.0) extends UpdateRule {
+    def draw(rng: Random): Double = rng.nextGaussian()
+    def initA(n: Int, rng: Random): Array[Double] = new Array[Double](n)
+    def solveMatrix(h: DenseMatrix[Double]): DenseMatrix[Double] =
+      if (ridge > 0.0) pinv(h + DenseMatrix.eye[Double](h.rows) * ridge) else pinv(h)
+    def update(
+        old: Array[Double], m: Array[Double], s: Array[Double], sOff: Int,
+        n: Int, r: Int): Array[Double] = {
+      val out = new Array[Double](n * r)
+      var row = 0
+      while (row < n) {
+        var q = 0
+        while (q < r) {
+          var sum = 0.0; var p = 0
+          while (p < r) { sum += m(row * r + p) * s(sOff + p * r + q); p += 1 }
+          out(row * r + q) = sum
+          q += 1
+        }
+        row += 1
+      }
+      out
+    }
+  }
+
+  // ---- The loop ----
+
+  /** One seeded CP run over an already-packed slab tensor: ALS unless
+    * another `rule` is given. The run stops once an iteration raises the
+    * fit by less than `tol`, or after `maxIter` iterations.
+    */
+  private[graft] def fitPacked(
+      packed: PackedTensor,
+      rank: Int,
+      seed: Long,
+      tol: Double,
+      maxIter: Int,
+      rule: UpdateRule = AlsRule()): CPModel = {
+    val PackedTensor(slabRdd, ni, nj, nk, normX2) = packed
     val sc = slabRdd.sparkContext
-    val bcO = sc.broadcast(other)
-    val gramLen = if (withGramA) r * r else 0
-    val partials = slabRdd.zipPartitions(aRdd) { (slabIt, aIt) =>
-      val slab = slabIt.next(); val aLoc = aIt.next()
-      val o = bcO.value
-      val acc = new Array[Double](outRows * r + gramLen)
+    val r = rank
+    def flat(m: DenseMatrix[Double]): Array[Double] = Array.tabulate(r * r)(n => m(n / r, n % r))
+    def update(old: Array[Double], m: Array[Double], n: Int, h: DenseMatrix[Double]) =
+      rule.update(old, m, flat(rule.solveMatrix(h)), 0, n, r)
+
+    // Seeded init: B, C on the driver; A beside its slab, one primitive
+    // array per partition aligned with slabRdd by zipPartitions, drawn
+    // with a per-slab seed — deterministic because the pack partitioning is.
+    val rng = new Random(seed)
+    var bMat = Array.fill(nj * r)(rule.draw(rng))
+    var cMat = Array.fill(nk * r)(rule.draw(rng))
+    var aRdd: RDD[Array[Double]] = slabRdd.mapPartitionsWithIndex(new InitA(rule, seed, r))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+    var fits = Vector.empty[Double]
+    var converged = false
+    while (fits.length < maxIter && !converged) {
+      // --- update A: slab-local (mode-1 ownership), no reduce, NO collect.
+      // One broadcast carries B, C and the A-solve matrix.
+      val gC = gram(cMat, nk, r)
+      val bcs = sc.broadcast(Array.concat(bMat, cMat,
+        flat(rule.solveMatrix(hadamard(gram(bMat, nj, r), gC, r)))))
+      val prevARdd = aRdd
+      aRdd = slabRdd.zipPartitions(prevARdd)(new UpdateA(rule, bcs, nj * r, (nj + nk) * r, r))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+
+      // --- update B from MTTKRP over (A, C), C read from the same
+      // broadcast. The pass also folds in AᵀA (appended after the J×R rows,
+      // which is all the update reads) and materializes the new A.
+      val mB = mttkrpJK(slabRdd, aRdd, r, bcs, nj * r, overJ = true, nj)
+      val gramA = DenseMatrix.tabulate(r, r)((p, q) => mB(nj * r + p * r + q))
+      prevARdd.unpersist(blocking = false)
+      // unpersist, NOT destroy: the new A's (cached) lineage still captures
+      // this broadcast, and task serialization validates it even when the
+      // cache makes recompute unreachable. unpersist drops the executor
+      // copies now; the ContextCleaner reaps the rest once the iteration's
+      // aRdd is replaced.
+      bcs.unpersist()
+      bMat = update(bMat, mB, nj, hadamard(gramA, gC, r))
+
+      // --- update C from MTTKRP over (A, B); no cached RDD captures bcB.
+      val bcB = sc.broadcast(bMat)
+      val mC = mttkrpJK(slabRdd, aRdd, r, bcB, 0, overJ = false, nk)
+      bcB.destroy()
+      val gB = gram(bMat, nj, r)
+      cMat = update(cMat, mC, nk, hadamard(gramA, gB, r))
+
+      // --- fit via the CP identities (mC was computed against the current
+      // A and B, so vec(mC)·vec(C) = ⟨X, X̂⟩ — no reconstruction).
+      val cross = { var s = 0.0; var n = 0; while (n < mC.length) { s += mC(n) * cMat(n); n += 1 }; s }
+      val gAll = hadamard(hadamard(gramA, gB, r), gram(cMat, nk, r), r)
+      val model2 = {
+        var s = 0.0; var p = 0
+        while (p < r) { var q = 0; while (q < r) { s += gAll(p, q); q += 1 }; p += 1 }
+        s
+      }
+      val resid2 = math.max(0.0, normX2 - 2.0 * cross + model2)
+      val fit = 1.0 - math.sqrt(resid2) / math.sqrt(normX2)
+      converged = fits.nonEmpty && fit - fits.last < tol
+      fits :+= fit
+    }
+
+    // ONE collect, after convergence, to build the returned dense model
+    // (the loop itself never centralized A). A caller at true scale would
+    // keep (i, row) as a relation.
+    val aMat = new Array[Double](ni * r)
+    sc.runJob(slabRdd.zipPartitions(aRdd)(SlabRows), new OnePerSlab[(Array[Int], Array[Double])],
+      (_: Int, rows: (Array[Int], Array[Double])) => {
+        val (localIs, aLoc) = rows
+        var li = 0
+        while (li < localIs.length) { System.arraycopy(aLoc, li * r, aMat, localIs(li) * r, r); li += 1 }
+      })
+    aRdd.unpersist(blocking = false)
+    // slabRdd stays persisted: its lifecycle belongs to the pack() caller.
+    val lambda = normalizeColumns(Seq((aMat, ni), (bMat, nj), (cMat, nk)), r)
+    CPModel(lambda, aMat, bMat, cMat, (ni, nj, nk), r, fits)
+  }
+
+  // ---- What the tasks run: named objects, not lambdas (see OnePerSlab) ----
+
+  /** A slab's initial A rows, seeded per slab. */
+  private final class InitA(rule: UpdateRule, seed: Long, r: Int)
+      extends ((Int, Iterator[Slab]) => Iterator[Array[Double]]) with Serializable {
+    def apply(idx: Int, slabs: Iterator[Slab]): Iterator[Array[Double]] = {
+      val rng = new Random(seed ^ (0x9E3779B97F4A7C15L * (idx + 1)))
+      Iterator.single(rule.initA(slabs.next().localIs.length * r, rng))
+    }
+  }
+
+  /** A slab's A-update: its mode-1 MTTKRP rows (Σ v·b_j∘c_k over the
+    * slab's nonzeros) against B and C, then the rule's update with the
+    * A-solve matrix. All three come from the iteration's one broadcast
+    * `bcs`: B at 0, C at `cOff`, the R×R matrix at `sOff`. Row-local to
+    * the slab (mode-1 ownership) — no shuffle, no reduce.
+    */
+  private final class UpdateA(
+      rule: UpdateRule, bcs: Broadcast[Array[Double]], cOff: Int, sOff: Int, r: Int)
+      extends ((Iterator[Slab], Iterator[Array[Double]]) => Iterator[Array[Double]])
+      with Serializable {
+    def apply(slabs: Iterator[Slab], as: Iterator[Array[Double]]): Iterator[Array[Double]] = {
+      val slab = slabs.next(); val f = bcs.value
+      val m = new Array[Double](slab.localIs.length * r)
+      var n = 0
+      val len = slab.vs.length
+      while (n < len) {
+        val row = slab.iLoc(n) * r
+        val j = slab.js(n) * r; val k = cOff + slab.ks(n) * r; val v = slab.vs(n)
+        var p = 0
+        while (p < r) { m(row + p) += v * f(j + p) * f(k + p); p += 1 }
+        n += 1
+      }
+      Iterator.single(rule.update(as.next(), m, f, sOff, slab.localIs.length, r))
+    }
+  }
+
+  /** A slab's MTTKRP partial against mode 2 (`overJ`: rows over j, against
+    * C) or mode 3 (rows over k, against B): dense `outRows`×R rows from
+    * the slab-local A rows and the factor read from `f` at `off`. Never
+    * ships A. `overJ` also appends the slab's AᵀA (R×R), so gram(A) costs
+    * no extra job.
+    */
+  private final class SlabMttkrp(
+      f: Broadcast[Array[Double]], off: Int, overJ: Boolean, outRows: Int, r: Int)
+      extends ((Iterator[Slab], Iterator[Array[Double]]) => Iterator[Array[Double]])
+      with Serializable {
+    def apply(slabs: Iterator[Slab], as: Iterator[Array[Double]]): Iterator[Array[Double]] = {
+      val slab = slabs.next(); val aLoc = as.next()
+      val o = f.value
+      val acc = new Array[Double](outRows * r + (if (overJ) r * r else 0))
       var n = 0
       val len = slab.vs.length
       while (n < len) {
         val aRow = slab.iLoc(n) * r
         val j = slab.js(n); val k = slab.ks(n); val v = slab.vs(n)
-        val outRow = if (mode == 1) j else k
-        val oRow = (if (mode == 1) k else j) * r
+        val outRow = if (overJ) j else k
+        val oRow = off + (if (overJ) k else j) * r
         var p = 0
         while (p < r) {
           acc(outRow * r + p) += v * aLoc(aRow + p) * o(oRow + p)
@@ -359,7 +421,7 @@ object CPALS {
         }
         n += 1
       }
-      if (withGramA) {
+      if (overJ) {
         val base = outRows * r
         val nRows = aLoc.length / r
         var row = 0
@@ -376,77 +438,91 @@ object CPALS {
       }
       Iterator.single(acc)
     }
-    val res = sumSlabPartials(partials, outRows * r + gramLen)
-    bcO.destroy()
-    if (!withGramA) (res, None)
-    else {
-      val m = java.util.Arrays.copyOfRange(res, 0, outRows * r)
-      val g = DenseMatrix.zeros[Double](r, r)
-      val base = outRows * r
-      var p = 0
-      while (p < r) { var q = 0; while (q < r) { g(p, q) = res(base + p * r + q); q += 1 }; p += 1 }
-      (m, Some(g))
-    }
   }
 
-  /** The element-wise sum of the one `len`-long partial each slab emits,
-    * in ONE single-stage job. The driver adds partial s as soon as slabs
-    * 0..s have all arrived, so the sum order is the slab order whatever
-    * order the tasks finish in, and a seeded fit over one packed tensor
-    * is bit-reproducible. The job's function is the named [[SlabPartial]],
-    * not a lambda; see there for why.
+  /** A slab's global row ids beside its A rows, for the one collect. */
+  private object SlabRows
+      extends ((Iterator[Slab], Iterator[Array[Double]]) => Iterator[(Array[Int], Array[Double])])
+      with Serializable {
+    def apply(slabs: Iterator[Slab], as: Iterator[Array[Double]]): Iterator[(Array[Int], Array[Double])] =
+      Iterator.single((slabs.next().localIs, as.next()))
+  }
+
+  /** A slab's one result, as the result of its task. A named class, not a
+    * lambda: Spark's ClosureCleaner re-reads and parses the class file
+    * that declares each lambda it is given, on every job, and passes over
+    * an object that is not a closure without reading any. For the same
+    * reason a job takes the `(TaskContext, Iterator)` function that
+    * `runJob` runs as it is, not the `Iterator` one it wraps in a lambda,
+    * and every function above is a named class too.
+    */
+  private final class OnePerSlab[T]
+      extends ((TaskContext, Iterator[T]) => T) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[T]): T = it.next()
+  }
+
+  /** The MTTKRP against mode 2 (`overJ`) or 3, per slab by [[SlabMttkrp]],
+    * summed on the driver by [[sumSlabPartials]]. */
+  private def mttkrpJK(
+      slabRdd: RDD[Slab], aRdd: RDD[Array[Double]], r: Int,
+      f: Broadcast[Array[Double]], off: Int, overJ: Boolean, outRows: Int): Array[Double] =
+    sumSlabPartials(slabRdd.zipPartitions(aRdd)(new SlabMttkrp(f, off, overJ, outRows, r)),
+      outRows * r + (if (overJ) r * r else 0))
+
+  /** The element-wise sum of the one `len`-long partial each partition
+    * emits, in ONE single-stage job. The driver adds partial s as soon as
+    * partitions 0..s have all arrived, so the sum order is the partition
+    * order whatever order the tasks finish in, and a seeded fit over one
+    * packed tensor is bit-reproducible.
     */
   private def sumSlabPartials(partials: RDD[Array[Double]], len: Int): Array[Double] = {
     val numSlabs = partials.getNumPartitions
     val sum = new Array[Double](len)
     val arrived = new Array[Array[Double]](numSlabs)
     var next = 0
-    partials.sparkContext.runJob(partials, SlabPartial, (slab: Int, partial: Array[Double]) => {
-      arrived(slab) = partial
-      while (next < numSlabs && arrived(next) != null) {
-        val x = arrived(next)
-        var n = 0; while (n < len) { sum(n) += x(n); n += 1 }
-        arrived(next) = null
-        next += 1
-      }
-    })
+    partials.sparkContext.runJob(partials, new OnePerSlab[Array[Double]],
+      (slab: Int, partial: Array[Double]) => {
+        arrived(slab) = partial
+        while (next < numSlabs && arrived(next) != null) {
+          val x = arrived(next)
+          var n = 0; while (n < len) { sum(n) += x(n); n += 1 }
+          arrived(next) = null
+          next += 1
+        }
+      })
     sum
   }
 
-  /** A slab's one partial, as the result of its task. A named object, not
-    * a lambda: Spark's ClosureCleaner re-reads and parses the class file
-    * that declares each lambda it is given, on every job, and passes over
-    * an object that is not a closure without reading any. For the same
-    * reason the job takes the `(TaskContext, Iterator)` function that
-    * `runJob` runs as it is, not the `Iterator` one it wraps in a lambda.
-    */
-  private object SlabPartial
-      extends ((TaskContext, Iterator[Array[Double]]) => Array[Double]) with Serializable {
-    def apply(ctx: TaskContext, it: Iterator[Array[Double]]): Array[Double] = it.next()
+  // ---- Dense driver-side kernels ----
+
+  private def gram(m: Array[Double], n: Int, r: Int): DenseMatrix[Double] = {
+    val g = DenseMatrix.zeros[Double](r, r)
+    var row = 0
+    while (row < n) {
+      var p = 0
+      while (p < r) {
+        val vp = m(row * r + p)
+        var q = 0
+        while (q < r) { g(p, q) += vp * m(row * r + q); q += 1 }
+        p += 1
+      }
+      row += 1
+    }
+    g
   }
 
-  /** ONE collect, after convergence, to centralize the slab-resident A for
-    * the returned dense model (the loops themselves never do). A caller at
-    * true scale would keep (i, row) as a relation — mode-1 ownership means
-    * this map is shuffle-free either way.
-    */
-  private[tensor] def collectA(
-      slabRdd: RDD[Slab], aRdd: RDD[Array[Double]], ni: Int, r: Int): Array[Double] = {
-    val aMat = new Array[Double](ni * r)
-    slabRdd.zipPartitions(aRdd) { (slabIt, aIt) =>
-      val slab = slabIt.next(); val aLoc = aIt.next()
-      slab.localIs.iterator.zipWithIndex.map { case (gi, li) =>
-        (gi, java.util.Arrays.copyOfRange(aLoc, li * r, li * r + r))
-      }
-    }.collect().foreach { case (i, row) => System.arraycopy(row, 0, aMat, i * r, r) }
-    aMat
+  private def hadamard(
+      x: DenseMatrix[Double], y: DenseMatrix[Double], r: Int): DenseMatrix[Double] = {
+    val z = DenseMatrix.zeros[Double](r, r)
+    var p = 0
+    while (p < r) { var q = 0; while (q < r) { z(p, q) = x(p, q) * y(p, q); q += 1 }; p += 1 }
+    z
   }
 
   /** Column-normalize each factor in place, accumulating norms into the
-    * returned lambda (shared by the ALS and HALS model assembly).
+    * returned lambda.
     */
-  private[tensor] def normalizeColumns(
-      factors: Seq[(Array[Double], Int)], r: Int): Array[Double] = {
+  private def normalizeColumns(factors: Seq[(Array[Double], Int)], r: Int): Array[Double] = {
     val lambda = Array.fill(r)(1.0)
     factors.foreach { case (m, n) =>
       var p = 0
@@ -463,133 +539,5 @@ object CPALS {
       }
     }
     lambda
-  }
-
-  /** One seeded ALS run over an already-packed slab tensor. */
-  /** `ridge` > 0 solves every mode update against (Hadamard-Gram + λI)
-    * — Tikhonov-regularized ALS (the standard "swamp" damper: Navasca,
-    * De Lathauwer & Kindermann, EUSIPCO 2008). λ bounds the factor
-    * Grams' condition number so near-collinear intermediate factors
-    * cannot stall progress; λ = 0 is EXACTLY the plain update (pinned
-    * bit-identical in TensorSpec). The reported fit remains the DATA
-    * fit, not the penalized objective.
-    */
-  private[graft] def fitPacked(
-      packed: PackedTensor,
-      rank: Int,
-      seed: Long,
-      tol: Double,
-      maxIter: Int,
-      ridge: Double = 0.0): CPModel = {
-    val PackedTensor(slabRdd, ni, nj, nk, normX2) = packed
-    val sc = slabRdd.sparkContext
-    val r = rank
-
-    // Seeded deterministic init of B, C (A is produced by the first update).
-    val rng = new scala.util.Random(seed)
-    // Centered Gaussian init: an all-positive init is near-collinear in
-    // expectation, which conditions the Gram Hadamard products badly and
-    // can trap ALS far from the optimum.
-    var bMat = Array.fill(nj * r)(rng.nextGaussian())
-    var cMat = Array.fill(nk * r)(rng.nextGaussian())
-
-    def gram(m: Array[Double], n: Int): DenseMatrix[Double] = CPALS.gram(m, n, r)
-    def hadamard(x: DenseMatrix[Double], y: DenseMatrix[Double]): DenseMatrix[Double] =
-      CPALS.hadamard(x, y, r)
-    def matmulInto(m: Array[Double], n: Int, g: DenseMatrix[Double]): Array[Double] =
-      CPALS.matmulInto(m, n, g, r)
-    // λ = 0 must stay bit-identical to the unregularized path, so the
-    // eye-add is gated rather than always adding a zero matrix.
-    def solveGram(h: DenseMatrix[Double]): DenseMatrix[Double] =
-      if (ridge > 0.0) pinv(h + DenseMatrix.eye[Double](r) * ridge) else pinv(h)
-
-    // A lives beside its slab: one primitive array per partition, aligned
-    // with slabRdd by zipPartitions (both sides have exactly one element
-    // per partition by construction).
-    var aRdd: RDD[Array[Double]] = null
-
-    def mttkrpJK(
-        mode: Int, other: Array[Double], outRows: Int,
-        withGramA: Boolean): (Array[Double], Option[DenseMatrix[Double]]) =
-      CPALS.mttkrpJK(slabRdd, aRdd, r, mode, other, outRows, withGramA)
-
-    var fitsSoFar = Vector.empty[Double]
-    var prevFit = Double.NegativeInfinity
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // --- update A: slab-local (mode-1 ownership), no reduce, NO collect.
-      val gB = gram(bMat, nj); val gC = gram(cMat, nk)
-      val gA = solveGram(hadamard(gB, gC))
-      val bcB = sc.broadcast(bMat); val bcC = sc.broadcast(cMat)
-      val gaFlat = sc.broadcast(Array.tabulate(r * r)(n => gA(n / r, n % r)))
-      val newARdd = slabRdd.map { slab =>
-        val b = bcB.value; val c = bcC.value; val g = gaFlat.value
-        val nLocal = slab.localIs.length
-        val m = slabMttkrpA(slab, b, c, r)
-        // rows ← rows × gA (R×R): finished A rows, staying in the slab.
-        val out = new Array[Double](nLocal * r)
-        var lrow = 0
-        while (lrow < nLocal) {
-          var q = 0
-          while (q < r) {
-            var s = 0.0; var p = 0
-            while (p < r) { s += m(lrow * r + p) * g(p * r + q); p += 1 }
-            out(lrow * r + q) = s; q += 1
-          }
-          lrow += 1
-        }
-        out
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      val prevARdd = aRdd
-      aRdd = newARdd
-
-      // --- update B from MTTKRP over (A, C); the same pass folds in AᵀA
-      // and materializes newARdd (first action over it).
-      val (mB, gAOpt) = mttkrpJK(1, cMat, nj, withGramA = true)
-      val gAramA = gAOpt.get
-      if (prevARdd != null) prevARdd.unpersist(blocking = false)
-      // unpersist, NOT destroy: newARdd's (cached) lineage still captures
-      // these broadcasts, and task serialization validates them even when
-      // the cache makes recompute unreachable. unpersist drops the
-      // executor copies now; the ContextCleaner reaps the rest once the
-      // iteration's aRdd is replaced.
-      bcB.unpersist(); bcC.unpersist(); gaFlat.unpersist()
-      bMat = matmulInto(mB, nj, solveGram(hadamard(gAramA, gC)))
-
-      // --- update C from MTTKRP over (A, B).
-      val (mC, _) = mttkrpJK(2, bMat, nk, withGramA = false)
-      cMat = matmulInto(mC, nk, solveGram(hadamard(gAramA, gram(bMat, nj))))
-
-      // --- fit via CP identities (no reconstruction).
-      val cross = { var s = 0.0; var n = 0; while (n < mC.length) { s += mC(n) * cMat(n); n += 1 }; s }
-      val gAll = hadamard(hadamard(gAramA, gram(bMat, nj)), gram(cMat, nk))
-      val model2 = {
-        var s = 0.0; var p = 0
-        while (p < r) { var q = 0; while (q < r) { s += gAll(p, q); q += 1 }; p += 1 }
-        s
-      }
-      val resid2 = math.max(0.0, normX2 - 2.0 * cross + model2)
-      val fit = 1.0 - math.sqrt(resid2) / math.sqrt(normX2)
-      fitsSoFar = fitsSoFar :+ fit
-      if (fit - prevFit < tol && iter > 0) converged = true
-      prevFit = fit
-      iter += 1
-    }
-
-    // ONE collect, after convergence, to build the returned dense model
-    // (the loop itself never centralized A).
-    val aMat =
-      if (aRdd != null) {
-        val m = collectA(slabRdd, aRdd, ni, r)
-        aRdd.unpersist(blocking = false)
-        m
-      } else new Array[Double](ni * r)
-
-    // Column-normalize into lambda.
-    val lambda = normalizeColumns(Seq((aMat, ni), (bMat, nj), (cMat, nk)), r)
-    // slabRdd stays persisted: its lifecycle belongs to the pack() caller
-    // (fitBest shares it across starts; fitRdd unpersists after one).
-    CPModel(lambda, aMat, bMat, cMat, (ni, nj, nk), r, fitsSoFar)
   }
 }

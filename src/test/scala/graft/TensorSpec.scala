@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.rdd.RDD
+
 import graft.operators.EventTime
-import graft.tensor.{CPALS, SlabPartitioner}
+import graft.tensor.{CPALS, NnHals, SlabPartitioner}
 
 /** C12/C13/C14 property tests (SURVEY.md §5.3): exact recovery of a
   * synthetic rank-R tensor, monotone fit, slab load balance, and the
@@ -42,13 +44,32 @@ class TensorSpec extends SparkSpec {
     spark.sparkContext.parallelize(rows, 4)
   }
 
+  /** `fit` over `coo` packed into `numSlabs` slabs, unpersisted after. */
+  private def withPacked[T](coo: RDD[(Long, Long, Long, Double)], rank: Int, numSlabs: Int)(
+      fit: CPALS.PackedTensor => T): T = {
+    val packed = CPALS.pack(coo, rank, numSlabs)
+    try fit(packed) finally packed.unpersist()
+  }
+
+  /** The best final fit of `numStarts` seeded fits over one packed tensor. */
+  private def bestOf(numStarts: Int)(fit: Long => CPALS.CPModel): CPALS.CPModel =
+    (0 until numStarts).map(s => fit(s.toLong)).maxBy(_.finalFit)
+
+  private def assertSameBits(what: String, m1: CPALS.CPModel, m2: CPALS.CPModel): Unit = {
+    def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(bits(m1.fits) == bits(m2.fits), s"$what fits: ${m1.fits} vs ${m2.fits}")
+    assert(bits(m1.a.toSeq) == bits(m2.a.toSeq), s"$what a differs")
+    assert(bits(m1.b.toSeq) == bits(m2.b.toSeq), s"$what b differs")
+    assert(bits(m1.c.toSeq) == bits(m2.c.toSeq), s"$what c differs")
+  }
+
   test("C12: CP-ALS recovers an exactly rank-R tensor to fit >= 0.999") {
     for (rank <- Seq(1, 2, 3)) {
       val coo = syntheticCoo(8, 7, 6, rank, seed = 100 + rank)
       // Multi-start: single-seed ALS can land in a swamp (rank 3 does,
       // from two different inits) — restarts are the standard remedy.
-      val model = CPALS.fitBest(coo, rank, seed = 42, tol = 1e-9, maxIter = 120,
-        numSlabs = 4, numStarts = 4)
+      val model = withPacked(coo, rank, 4)(p =>
+        bestOf(4)(s => CPALS.fitPacked(p, rank, 42 + s, tol = 1e-9, maxIter = 120)))
       assert(model.finalFit >= 0.999,
         s"rank=$rank fit=${model.finalFit} after ${model.iterations} iters")
     }
@@ -56,37 +77,29 @@ class TensorSpec extends SparkSpec {
 
   test("ridge ALS: lambda=0 is bit-identical to plain; small lambda still recovers; large lambda shrinks fit") {
     val coo = syntheticCoo(8, 7, 6, 2, seed = 11)
-    val plain = CPALS.fitRdd(coo, 2, seed = 42, tol = 1e-9, maxIter = 40, numSlabs = 4)
-    val zero = CPALS.fitRdd(coo, 2, seed = 42, tol = 1e-9, maxIter = 40, numSlabs = 4,
-      ridge = 0.0)
-    // ridge=0 takes the identical code path; the residual run-to-run
-    // jitter (~1e-15) is MTTKRP reduce-order, present in plain-vs-plain
-    // reruns too, and at tol=1e-9 it can even move the convergence
-    // ITERATION (the fit-delta test fires a step earlier or later on a
-    // converged trajectory). Contract: common-prefix trajectory equality
-    // and equal final fit — not bit equality, not equal length.
-    plain.fits.zip(zero.fits).foreach { case (f1, f2) =>
-      assert(math.abs(f1 - f2) < 1e-6, s"ridge=0 moved the trajectory: $f1 vs $f2")
+    withPacked(coo, 2, 4) { p =>
+      val plain = CPALS.fitPacked(p, 2, seed = 42, tol = 1e-9, maxIter = 40)
+      val zero = CPALS.fitPacked(p, 2, seed = 42, tol = 1e-9, maxIter = 40,
+        CPALS.AlsRule(ridge = 0.0))
+      assertSameBits("ridge=0 vs default", plain, zero)
+
+      // Tikhonov at 1e-6 on an exactly-rank-2 tensor: recovery survives.
+      val small = CPALS.fitPacked(p, 2, seed = 42, tol = 1e-9, maxIter = 120,
+        CPALS.AlsRule(ridge = 1e-6))
+      assert(small.finalFit >= 0.999, s"small-ridge fit ${small.finalFit}")
+
+      // Heavy damping costs data fit — the shrinkage direction is the
+      // contract (fit reported is the DATA fit, not the penalized one).
+      val heavy = CPALS.fitPacked(p, 2, seed = 42, tol = 1e-9, maxIter = 40,
+        CPALS.AlsRule(ridge = 10.0))
+      assert(heavy.finalFit < small.finalFit,
+        s"heavy ridge ${heavy.finalFit} should underfit ${small.finalFit}")
     }
-    assert(math.abs(plain.finalFit - zero.finalFit) < 1e-6,
-      s"ridge=0 moved the final fit: ${plain.finalFit} vs ${zero.finalFit}")
-
-    // Tikhonov at 1e-6 on an exactly-rank-2 tensor: recovery survives.
-    val small = CPALS.fitRdd(coo, 2, seed = 42, tol = 1e-9, maxIter = 120,
-      numSlabs = 4, ridge = 1e-6)
-    assert(small.finalFit >= 0.999, s"small-ridge fit ${small.finalFit}")
-
-    // Heavy damping costs data fit — the shrinkage direction is the
-    // contract (fit reported is the DATA fit, not the penalized one).
-    val heavy = CPALS.fitRdd(coo, 2, seed = 42, tol = 1e-9, maxIter = 40,
-      numSlabs = 4, ridge = 10.0)
-    assert(heavy.finalFit < small.finalFit,
-      s"heavy ridge ${heavy.finalFit} should underfit ${small.finalFit}")
   }
 
   test("C12: fit is monotonically non-decreasing (1e-10 slack)") {
     val coo = syntheticCoo(10, 6, 5, 3, seed = 7)
-    val model = CPALS.fitRdd(coo, 2, seed = 42, tol = 0.0, maxIter = 25, numSlabs = 4)
+    val model = withPacked(coo, 2, 4)(CPALS.fitPacked(_, 2, seed = 42, tol = 0.0, maxIter = 25))
     model.fits.sliding(2).foreach {
       case Vector(f1, f2) => assert(f2 >= f1 - 1e-10, s"fit decreased: $f1 -> $f2")
       case _              =>
@@ -100,8 +113,8 @@ class TensorSpec extends SparkSpec {
     // bitwise reproducibility). The seeded trajectory itself must agree
     // to numerical tolerance.
     val coo = syntheticCoo(6, 5, 4, 2, seed = 3)
-    val m1 = CPALS.fitRdd(coo, 2, seed = 9, tol = 0.0, maxIter = 5, numSlabs = 3)
-    val m2 = CPALS.fitRdd(coo, 2, seed = 9, tol = 0.0, maxIter = 5, numSlabs = 3)
+    val m1 = withPacked(coo, 2, 3)(CPALS.fitPacked(_, 2, seed = 9, tol = 0.0, maxIter = 5))
+    val m2 = withPacked(coo, 2, 3)(CPALS.fitPacked(_, 2, seed = 9, tol = 0.0, maxIter = 5))
     assert(m1.fits.length == 5 && m2.fits.length == 5)
     m1.fits.zip(m2.fits).foreach { case (f1, f2) => assert(math.abs(f1 - f2) < 1e-6) }
   }
@@ -151,34 +164,6 @@ class TensorSpec extends SparkSpec {
       "heavy slices not spread across distinct slabs")
   }
 
-  test("relational MTTKRP equals the direct dense computation") {
-    import graft.tensor.RelationalALS
-    import spark.implicits._
-    val rng = new scala.util.Random(11)
-    val (ni, nj, nk, r) = (5, 4, 3, 2)
-    val coo = (for { i <- 0 until ni; j <- 0 until nj; k <- 0 until nk
-      if rng.nextDouble() < 0.6 } yield
-      (i.toLong, j.toLong, k.toLong, rng.nextGaussian())).toList
-    val b = Array.fill(nj * r)(rng.nextGaussian())
-    val c = Array.fill(nk * r)(rng.nextGaussian())
-    // direct: M(i,p) = Σ v·B(j,p)·C(k,p)
-    val direct = Array.ofDim[Double](ni, r)
-    coo.foreach { case (i, j, k, v) =>
-      for (p <- 0 until r)
-        direct(i.toInt)(p) += v * b(j.toInt * r + p) * c(k.toInt * r + p)
-    }
-    val cooDf = coo.toDF("i", "j", "k", "v")
-    // factor relations (row, pos, val), as RelationalALS keeps them
-    def rel(m: Array[Double], rows: Int, rowCol: String) =
-      (0 until rows).flatMap(x => (0 until r).map(p => (x.toLong, p, m(x * r + p))))
-        .toDF(rowCol, "pos", "val")
-    val got = RelationalALS.mttkrp(cooDf, "i", rel(b, nj, "j"), "j", rel(c, nk, "k"), "k")
-      .collect().map(row => ((row.getLong(0), row.getInt(1)), row.getDouble(2))).toMap
-    for (i <- 0 until ni; p <- 0 until r; if direct(i)(p) != 0.0 || got.contains((i.toLong, p)))
-      assert(math.abs(got.getOrElse((i.toLong, p), 0.0) - direct(i)(p)) < 1e-9,
-        s"M($i,$p): ${got.get((i.toLong, p))} vs ${direct(i)(p)}")
-  }
-
   test("small-mode guard: J >> driver budget fails loudly, not with an OOM") {
     // A tensor whose mode-2 extent would put a multi-GB factor on the
     // driver must be rejected at pack time with the remedy in the message.
@@ -189,18 +174,6 @@ class TensorSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("mode-2"), err.getMessage)
     assert(err.getMessage.contains("scale mode"), err.getMessage)
-  }
-
-  test("fitLargestModeFirst rotates a huge-J tensor into the slab mode and back") {
-    // J (=12) is the largest mode: the rotated fit distributes it, and the
-    // returned factors must be back in the caller's (i, j, k) orientation —
-    // checked by exact recovery against the direct (unrotated) fit.
-    val coo = syntheticCoo(5, 12, 4, 2, seed = 21)
-    val m = CPALS.fitLargestModeFirst(coo, rank = 2, seed = 42, tol = 1e-9,
-      maxIter = 120, numSlabs = 3)
-    assert(m.dims == ((5, 12, 4)), s"dims not restored: ${m.dims}")
-    assert(m.a.length == 5 * 2 && m.b.length == 12 * 2 && m.c.length == 4 * 2)
-    assert(m.finalFit >= 0.99, s"fit=${m.finalFit}")
   }
 
   test("fitBest packs the slab RDD once and shares it across starts") {
@@ -223,26 +196,6 @@ class TensorSpec extends SparkSpec {
       "shared slab RDD was unpersisted by a start")
     packed.unpersist()
     val _ = before // silence unused warning on older scalac flags
-  }
-
-  test("relational ALS (no driver-resident factor) recovers a rank-R tensor") {
-    import spark.implicits._
-    import graft.tensor.RelationalALS
-    // J is the big mode AND nothing may sit on the driver: the scenario
-    // the slab engine's guard rejects when two modes are huge. Recovery
-    // of an exact low-rank tensor proves the relational algebra correct.
-    val coo = syntheticCoo(6, 10, 5, 2, seed = 31)
-      .map { case (i, j, k, v) => (i, j, k, v) }.toDF("i", "j", "k", "v")
-    val m = RelationalALS.fit(coo, rank = 2, seed = 42, tol = 1e-6, maxIter = 30)
-    assert(m.finalFit >= 0.98, s"fit=${m.finalFit} after ${m.iterations} iters")
-    // Fit trajectory is monotone within tolerance, as for the slab engine.
-    m.fits.sliding(2).foreach {
-      case Vector(f1, f2) => assert(f2 >= f1 - 1e-8, s"fit decreased: $f1 -> $f2")
-      case _              =>
-    }
-    // Factors are relations, not driver arrays: right shape, right size.
-    assert(m.a.columns.toSet == Set("i", "pos", "val"))
-    assert(m.b.count() == 10 * 2 && m.c.count() == 5 * 2)
   }
 
   test("Q43 COO feeds CP-ALS end-to-end and converges") {
@@ -277,24 +230,22 @@ class TensorSpec extends SparkSpec {
   }
 
   test("NN-HALS recovers a planted nonnegative rank-R tensor to fit >= 0.999") {
-    import graft.tensor.NnHals
     for (rank <- Seq(1, 2, 3)) {
       val coo = nonnegCoo(12, 10, 8, rank, seed = 500 + rank)
-      val model = NnHals.fitBest(coo, rank, seed = 42, tol = 1e-10, maxIter = 300,
-        numSlabs = 4, numStarts = 3)
+      val model = withPacked(coo, rank, 4)(p => bestOf(3)(s =>
+        CPALS.fitPacked(p, rank, 42 + s, tol = 1e-10, maxIter = 300, NnHals.HalsRule)))
       assert(model.finalFit >= 0.999,
         s"rank=$rank fit=${model.finalFit} after ${model.iterations} iters")
     }
   }
 
   test("NN-HALS factors are nonnegative and the fit is monotone") {
-    import graft.tensor.NnHals
     // Rank 2 on a rank-3 tensor: under-fitting keeps the plateau away from
     // fit=1.0, where the resid² identity loses all its significant digits
     // to cancellation (same reason the ALS monotone test under-fits).
     val coo = nonnegCoo(10, 7, 6, 3, seed = 77)
-    val model = NnHals.fitRdd(coo, rank = 2, seed = 11, tol = 0.0, maxIter = 40,
-      numSlabs = 4)
+    val model = withPacked(coo, 2, 4)(
+      CPALS.fitPacked(_, rank = 2, seed = 11, tol = 0.0, maxIter = 40, NnHals.HalsRule))
     assert(model.a.forall(_ >= 0.0) && model.b.forall(_ >= 0.0) &&
       model.c.forall(_ >= 0.0), "a HALS factor went negative")
     assert(model.lambda.forall(_ >= 0.0))
@@ -307,10 +258,10 @@ class TensorSpec extends SparkSpec {
   }
 
   test("NN-HALS seeded trajectory is deterministic") {
-    import graft.tensor.NnHals
     val coo = nonnegCoo(6, 5, 4, 2, seed = 3)
-    val m1 = NnHals.fitRdd(coo, 2, seed = 9, tol = 0.0, maxIter = 5, numSlabs = 3)
-    val m2 = NnHals.fitRdd(coo, 2, seed = 9, tol = 0.0, maxIter = 5, numSlabs = 3)
+    def fit() = withPacked(coo, 2, 3)(
+      CPALS.fitPacked(_, 2, seed = 9, tol = 0.0, maxIter = 5, NnHals.HalsRule))
+    val m1 = fit(); val m2 = fit()
     assert(m1.fits.length == 5 && m2.fits.length == 5)
     m1.fits.zip(m2.fits).foreach { case (f1, f2) => assert(math.abs(f1 - f2) < 1e-6) }
   }
@@ -321,39 +272,43 @@ class TensorSpec extends SparkSpec {
     "CP-ALS" -> ((p, seed, iters) =>
       CPALS.fitPacked(p, 2, seed, tol = Double.NegativeInfinity, maxIter = iters)),
     "NN-HALS" -> ((p, seed, iters) =>
-      graft.tensor.NnHals.fitPacked(p, 2, seed, tol = Double.NegativeInfinity, maxIter = iters)))
+      CPALS.fitPacked(p, 2, seed, tol = Double.NegativeInfinity, maxIter = iters, NnHals.HalsRule)))
 
   test("CP-ALS and NN-HALS: each iteration is 2 single-stage jobs at 8 slabs") {
     // 8 slabs is above the 5 at which a tree reduction of the MTTKRP
     // partials adds a shuffle level; summing them in one job never does.
+    // Each iteration also makes 2 explicit broadcasts (B, C and the
+    // A-solve matrix as one array, then the updated B) and, per job, one
+    // of its task binary. Broadcast ids count up by one per broadcast.
     val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 21), rank = 2, numSlabs = 8)
+    def nextBroadcastId(): Long = { val b = spark.sparkContext.broadcast(()); b.destroy(); b.id }
     try packedFits.foreach { case (name, fit) =>
       def leg(iters: Int) = {
-        val l = Harness.leg(spark, s"$name x$iters")(fit(packed, 5L, iters)).orThrow
-        assert(l.result.toOption.get.iterations == iters)
+        val l = Harness.leg(spark, s"$name x$iters") {
+          val first = nextBroadcastId()
+          val m = fit(packed, 5L, iters)
+          (m, nextBroadcastId() - first)
+        }.orThrow
+        assert(l.result.toOption.get._1.iterations == iters)
         l
       }
       val one = leg(1); val three = leg(3)
       assert(three.jobs.size - one.jobs.size == 2 * 2, s"$name jobs: ${one.jobs} vs ${three.jobs}")
       assert(three.shuffleWriteBytes - one.shuffleWriteBytes == 0L,
         s"$name shuffle write: ${one.shuffleWriteBytes} vs ${three.shuffleWriteBytes} bytes")
+      val (b1, b3) = (one.result.toOption.get._2, three.result.toOption.get._2)
+      assert(b3 - b1 == 2 * (2 + 2), s"$name broadcasts: $b1 at 1 iteration vs $b3 at 3")
     } finally packed.unpersist()
   }
 
   test("CP-ALS and NN-HALS: a seeded fit over one packed tensor is bit-reproducible") {
     val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 22), rank = 2, numSlabs = 8)
-    def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToRawLongBits)
     try packedFits.foreach { case (name, fit) =>
-      val m1 = fit(packed, 9L, 6); val m2 = fit(packed, 9L, 6)
-      assert(bits(m1.fits) == bits(m2.fits), s"$name fits: ${m1.fits} vs ${m2.fits}")
-      assert(bits(m1.a.toSeq) == bits(m2.a.toSeq), s"$name a differs")
-      assert(bits(m1.b.toSeq) == bits(m2.b.toSeq), s"$name b differs")
-      assert(bits(m1.c.toSeq) == bits(m2.c.toSeq), s"$name c differs")
+      assertSameBits(name, fit(packed, 9L, 6), fit(packed, 9L, 6))
     } finally packed.unpersist()
   }
 
   test("NN-HALS on the Q43 events tensor: nonnegative data, nonnegative model") {
-    import graft.tensor.NnHals
     val coo = EventTime.q43(spark, sf("sf0.001"))
     val model = NnHals.fit(coo, rank = 3, seed = 42, tol = 1e-4, maxIter = 30, numSlabs = 4)
     assert(model.finalFit > 0.0 && model.finalFit <= 1.0 + 1e-12)
