@@ -17,25 +17,32 @@ import org.apache.spark.storage.StorageLevel
   * Distribution layout (the PARAslice design, re-expressed Spark-first):
   *  - The COO tensor is partitioned along mode 1 into load-balanced slabs
   *    ([[SlabPartitioner]]); each Spark partition holds one slab as
-  *    primitive arrays (no per-nonzero objects in the inner loop).
+  *    fiber-compressed primitive arrays ([[Slab]]): nonzeros sorted by
+  *    (row, j, k) with duplicate coordinates summed, so a pack of the same
+  *    rows is the same slab whatever order the shuffle delivered them in,
+  *    and a seeded fit is bit-identical across packs.
   *  - Mode 1 is the scale mode: factor A (I×R) NEVER visits the driver
   *    during the loop. Each slab owns its i-rows exclusively, so the
-  *    A-update is embarrassingly parallel: per-slab local MTTKRP rows ×
-  *    the broadcast R×R solve matrix, persisted in place as one primitive
-  *    array per slab. AᵀA (R×R per slab) rides in the mode-2 MTTKRP's
-  *    partial, and A is collected exactly once, after convergence, to
-  *    build the returned model (at true scale the caller would keep it as
-  *    a relation; the loop itself never needs it centralized).
+  *    A-update is row-local: a row's MTTKRP × the broadcast R×R solve
+  *    matrix, persisted beside the slab as one primitive array. AᵀA (R×R
+  *    per slab) rides in the mode-2 MTTKRP's partial, and A is collected
+  *    exactly once, after convergence, to build the returned model (at
+  *    true scale the caller would keep it as a relation; the loop itself
+  *    never needs it centralized).
   *  - B (J×R), C (K×R) are driver-resident (modes 2/3 are the small
   *    modes in the slab design); each slab's J×R / K×R MTTKRP partial is
   *    sent to the driver, which sums them in slab order; the R×R Gram
   *    solves (Hadamard of Gramians, pseudo-inverted via breeze) happen on
-  *    the driver too. Per iteration: 2 broadcasts (B, C and the R×R solve
-  *    matrix as one array, read by the A-update and the mode-2 MTTKRP;
-  *    then the updated B for the mode-3 MTTKRP) + 2 single-stage jobs,
-  *    one per MTTKRP, with no shuffle at any slab count (the A-update is
-  *    a narrow map materialized by the first of them). Every function a
-  *    task runs is a named object, not a lambda (see [[OnePerSlab]]).
+  *    the driver too. Per iteration: 2 passes over the nonzeros, each one
+  *    single-stage job with no shuffle at any slab count, and 2
+  *    broadcasts. Job 1 reads B, C and the R×R A-solve matrix from one
+  *    broadcast and fuses the A update with the mode-2 MTTKRP: per fiber
+  *    (i, j) it sums t = Σ_k v·c_k once, which serves both a_i's MTTKRP
+  *    row and, after the row's update, mode-2 row j. Job 2 reads the
+  *    updated B from the second broadcast for the mode-3 MTTKRP, one
+  *    w = a_i∘b_j per fiber. Either way one multiply-add per rank per
+  *    nonzero. Every function a task runs is a named object, not a lambda
+  *    (see [[OnePerSlab]]).
   *    The small-mode assumption is ENFORCED: `maxDriverFactorElems`
   *    bounds J·R and K·R, and packing fails loudly (with the remedy in
   *    the message) instead of OOMing the driver when a vocabulary-sized
@@ -52,7 +59,7 @@ import org.apache.spark.storage.StorageLevel
   * numSlabs is the core count. The driver adds each partial into one
   * running sum and drops it, holding at most the partials that arrive
   * ahead of a slower lower-numbered slab. The tensor is read from the
-  * persisted slab RDD and A from its per-slab sibling. Nothing
+  * persisted slab RDD and A from its per-slab state. Nothing
   * driver-side grows with I or nnz.
   *
   * One loop, [[fitPacked]], serves both CP fits: an [[UpdateRule]]
@@ -66,16 +73,108 @@ import org.apache.spark.storage.StorageLevel
   */
 object CPALS {
 
-  /** One slab: column-layout primitive arrays of its nonzeros, plus the
-    * local mode-1 row index (localIs: local row → global i; iLoc: nonzero →
-    * local row) that lets factor-A rows live beside the slab.
+  /** One slab, fiber-compressed (SPLATT's CSF layout with the mode-1 row
+    * on top; Smith & Karypis, IPDPS 2015): its nonzeros sorted by (local
+    * row, j, k), duplicate coordinates summed into one. Local row `li` is
+    * global row `localIs(li)` and owns fibers [rowPtr(li), rowPtr(li+1));
+    * fiber `f` is the (i, fiberJ(f)) fiber and owns nonzeros
+    * [fiberPtr(f), fiberPtr(f+1)), each a mode-3 index `ks` and a value
+    * `vs`. The layout depends only on the slab's nonzeros, never on the
+    * order the shuffle delivered them in.
     */
   private[graft] final case class Slab(
       localIs: Array[Int],
-      iLoc: Array[Int],
-      js: Array[Int],
+      rowPtr: Array[Int],
+      fiberJ: Array[Int],
+      fiberPtr: Array[Int],
       ks: Array[Int],
-      vs: Array[Double])
+      vs: Array[Double]) {
+    def numRows: Int = localIs.length
+  }
+
+  private[graft] object Slab {
+
+    /** The slab of COO nonzeros (i, j, k, v), given in any order, as
+      * columns. They are sorted by (i, j, k) with a stable LSD counting
+      * sort on primitive arrays — k, then j, then i, 11 bits of a key per
+      * pass, each pass moving all four columns — in O(nnz + the slab's
+      * i, j and k ranges). One walk then cuts rows and fibers and sums
+      * equal coordinates. A coordinate given more than once sums its
+      * values in ascending order, so the sum does not depend on the input
+      * order either. Explicit zeros stay. The given arrays are reused as
+      * scratch.
+      */
+    def of(is: Array[Int], js: Array[Int], ks: Array[Int], vs: Array[Double]): Slab = {
+      val n = vs.length
+      var cols = Array(is, js, ks); var vals = vs
+      var spare = Array.fill(3)(new Array[Int](n)); var spareVals = new Array[Double](n)
+      for (key <- Seq(2, 1, 0)) {
+        val x = cols(key)
+        var lo = Int.MaxValue; var hi = Int.MinValue
+        var e = 0
+        while (e < n) { lo = math.min(lo, x(e)); hi = math.max(hi, x(e)); e += 1 }
+        val bits = if (n == 0) 0 else 32 - Integer.numberOfLeadingZeros(hi - lo)
+        var shift = 0
+        while (shift < bits) {
+          countingPass(cols, vals, spare, spareVals, key, lo, shift)
+          val c = cols; cols = spare; spare = c
+          val v = vals; vals = spareVals; spareVals = v
+          shift += DigitBits
+        }
+      }
+      val Array(si, sj, sk) = cols
+
+      val localIs = new Array[Int](n); val rowPtr = new Array[Int](n + 1)
+      val fiberJ = new Array[Int](n); val fiberPtr = new Array[Int](n + 1)
+      val outK = new Array[Int](n); val outV = new Array[Double](n)
+      var rows = 0; var fibers = 0; var nnz = 0
+      var p = 0
+      while (p < n) {
+        val i = si(p); val j = sj(p); val k = sk(p)
+        var q = p + 1
+        while (q < n && si(q) == i && sj(q) == j && sk(q) == k) q += 1
+        var v = vals(p)
+        if (q - p > 1) {
+          java.util.Arrays.sort(vals, p, q)
+          v = 0.0; var d = p; while (d < q) { v += vals(d); d += 1 }
+        }
+        val newRow = rows == 0 || localIs(rows - 1) != i
+        if (newRow) { localIs(rows) = i; rowPtr(rows) = fibers; rows += 1 }
+        if (newRow || fiberJ(fibers - 1) != j) { fiberJ(fibers) = j; fiberPtr(fibers) = nnz; fibers += 1 }
+        outK(nnz) = k; outV(nnz) = v; nnz += 1
+        p = q
+      }
+      rowPtr(rows) = fibers; fiberPtr(fibers) = nnz
+      import java.util.Arrays.copyOf
+      Slab(copyOf(localIs, rows), copyOf(rowPtr, rows + 1), copyOf(fiberJ, fibers),
+        copyOf(fiberPtr, fibers + 1), copyOf(outK, nnz), copyOf(outV, nnz))
+    }
+
+    private val DigitBits = 11
+
+    /** One stable counting-sort pass of the columns `cols` + `vals` into
+      * `outCols` + `outVals`, by the digit at `shift` of column `key`
+      * less `lo`. */
+    private def countingPass(
+        cols: Array[Array[Int]], vals: Array[Double],
+        outCols: Array[Array[Int]], outVals: Array[Double],
+        key: Int, lo: Int, shift: Int): Unit = {
+      val x = cols(key); val mask = (1 << DigitBits) - 1
+      val start = new Array[Int](mask + 2)
+      var e = 0
+      while (e < x.length) { start((((x(e) - lo) >>> shift) & mask) + 1) += 1; e += 1 }
+      var d = 0
+      while (d <= mask) { start(d + 1) += start(d); d += 1 }
+      val Array(i0, j0, k0) = cols; val Array(i1, j1, k1) = outCols
+      e = 0
+      while (e < x.length) {
+        val digit = ((x(e) - lo) >>> shift) & mask
+        val to = start(digit); start(digit) += 1
+        i1(to) = i0(e); j1(to) = j0(e); k1(to) = k0(e); outVals(to) = vals(e)
+        e += 1
+      }
+    }
+  }
 
   final case class CPModel(
       lambda: Array[Double],
@@ -135,10 +234,14 @@ object CPALS {
     */
   private[graft] val DefaultMaxDriverFactorElems: Long = 1L << 26
 
-  /** Partition, pack, and persist the COO rows into slabs; compute dims +
-    * ‖X‖² in the same pipeline. Fails loudly (with the remedy) when the
+  /** Partition, pack, and persist the COO rows into fiber-compressed
+    * slabs. Reads `rows` twice: once for the per-slice histogram, which
+    * also yields the dims, and once for the slab shuffle. ‖X‖² is summed
+    * over the packed (duplicate-merged) values by the job that
+    * materializes the slabs. Fails loudly (with the remedy) when the
     * small-mode assumption J·R, K·R ≤ `maxDriverFactorElems` is violated —
-    * the guard that turns a driver OOM into an actionable error.
+    * the guard that turns a driver OOM into an actionable error, checked
+    * before the slab shuffle.
     */
   private[graft] def pack(
       rows: RDD[(Long, Long, Long, Double)],
@@ -146,12 +249,15 @@ object CPALS {
       numSlabs: Int,
       maxDriverSlices: Int = 1 << 20,
       maxDriverFactorElems: Long = DefaultMaxDriverFactorElems): PackedTensor = {
-    // Dims + Frobenius norm in one pass (map-side combined).
-    val (maxI, maxJ, maxK, normX2) = rows
-      .map { case (i, j, k, v) => (i, j, k, v * v) }
-      .treeAggregate((0L, 0L, 0L, 0.0))(
-        (acc, x) => (acc._1 max x._1, acc._2 max x._2, acc._3 max x._3, acc._4 + x._4),
-        (a, b) => (a._1 max b._1, a._2 max b._2, a._3 max b._3, a._4 + b._4))
+    // Per slice: (nonzeros, max j, max k). The slice histogram stays
+    // distributed; only a bounded summary reaches the driver once I
+    // outgrows `maxDriverSlices`.
+    val slices = rows
+      .map { case (i, j, k, _) => (i, (1L, j, k)) }
+      .reduceByKey((x, y) => (x._1 + y._1, x._2 max y._2, x._3 max y._3))
+    val (maxI, maxJ, maxK) = slices
+      .map { case (i, (_, j, k)) => (i, j, k) }
+      .fold((0L, 0L, 0L))((x, y) => (x._1 max y._1, x._2 max y._2, x._3 max y._3))
     val (ni, nj, nk) = ((maxI + 1).toInt, (maxJ + 1).toInt, (maxK + 1).toInt)
 
     // Small-mode guard: B (J×R) and C (K×R) are driver-resident by design
@@ -167,18 +273,14 @@ object CPALS {
     checkMode("2 (B)", nj)
     checkMode("3 (C)", nk)
 
-    // Slice histogram stays distributed; only a bounded summary reaches
-    // the driver once I outgrows `maxDriverSlices`.
-    val sliceWeights = rows.map { case (i, _, _, _) => (i, 1L) }.reduceByKey(_ + _)
+    val sliceWeights = slices.mapValues(_._1)
     val partitioner =
       if (ni <= maxDriverSlices)
         SlabPartitioner.balanced(sliceWeights.collect().toSeq, numSlabs)
       else
         SlabPartitioner.balancedSketched(sliceWeights, numSlabs, maxDriverSlices)
 
-    // C13: slab-partitioned, primitive-array packed, persisted once. The
-    // local i-index is built at pack time so every later pass is a flat
-    // array walk.
+    // C13: slab-partitioned, fiber-compressed, persisted once.
     val slabRdd: RDD[Slab] = rows
       .map { case (i, j, k, v) => (i, (j, k, v)) }
       .partitionBy(partitioner)
@@ -188,18 +290,10 @@ object CPALS {
         it.foreach { case (i, (j, k, v)) =>
           is += i.toInt; js += j.toInt; ks += k.toInt; vs += v
         }
-        val gIs = is.result()
-        val localIs = gIs.distinct.sorted
-        val idx = new java.util.HashMap[Int, Int](localIs.length * 2)
-        var li = 0
-        while (li < localIs.length) { idx.put(localIs(li), li); li += 1 }
-        val iLoc = new Array[Int](gIs.length)
-        var n = 0
-        while (n < gIs.length) { iLoc(n) = idx.get(gIs(n)); n += 1 }
-        Iterator.single(Slab(localIs, iLoc, js.result(), ks.result(), vs.result()))
+        Iterator.single(Slab.of(is.result(), js.result(), ks.result(), vs.result()))
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    slabRdd.count() // materialize before iterating
+    val normX2 = sumSlabPartials(slabRdd, SlabNormX2, 1)(0)
     PackedTensor(slabRdd, ni, nj, nk, normX2)
   }
 
@@ -209,8 +303,8 @@ object CPALS {
     * of a factor's rows. For the factor being updated the loop hands the
     * rule its MTTKRP rows M (n×R) and the R×R matrix S = [[solveMatrix]]
     * of H, the Hadamard of the other two factors' Grams. The same
-    * [[update]] runs slab-local for A (inside a task) and on the driver
-    * for B and C.
+    * [[update]] runs slab-local for A, one row at a time inside a task,
+    * and on the driver for all of B or C.
     */
   private[graft] trait UpdateRule extends Serializable {
     /** One seeded init draw for an entry of B or C. */
@@ -218,11 +312,12 @@ object CPALS {
     /** A slab's `n` initial A entries, from its own seeded `rng`. */
     def initA(n: Int, rng: Random): Array[Double]
     def solveMatrix(h: DenseMatrix[Double]): DenseMatrix[Double]
-    /** The new n×R rows from the old ones, M (`m`, read up to n×R) and S
-      * (row-major in `s` from `sOff`). */
+    /** Overwrites the n×R rows of `a` from `aOff` with their update, from
+      * their old values, M (`m`, read up to n×R) and S (row-major in `s`
+      * from `sOff`). In place; allocates nothing. */
     def update(
-        old: Array[Double], m: Array[Double], s: Array[Double], sOff: Int,
-        n: Int, r: Int): Array[Double]
+        a: Array[Double], aOff: Int, m: Array[Double], s: Array[Double], sOff: Int,
+        n: Int, r: Int): Unit
   }
 
   /** ALS: rows ← M·S with S = pinv(H). `ridge` λ > 0 solves against
@@ -245,21 +340,19 @@ object CPALS {
     def solveMatrix(h: DenseMatrix[Double]): DenseMatrix[Double] =
       if (ridge > 0.0) pinv(h + DenseMatrix.eye[Double](h.rows) * ridge) else pinv(h)
     def update(
-        old: Array[Double], m: Array[Double], s: Array[Double], sOff: Int,
-        n: Int, r: Int): Array[Double] = {
-      val out = new Array[Double](n * r)
+        a: Array[Double], aOff: Int, m: Array[Double], s: Array[Double], sOff: Int,
+        n: Int, r: Int): Unit = {
       var row = 0
       while (row < n) {
         var q = 0
         while (q < r) {
           var sum = 0.0; var p = 0
           while (p < r) { sum += m(row * r + p) * s(sOff + p * r + q); p += 1 }
-          out(row * r + q) = sum
+          a(aOff + row * r + q) = sum
           q += 1
         }
         row += 1
       }
-      out
     }
   }
 
@@ -280,50 +373,49 @@ object CPALS {
     val sc = slabRdd.sparkContext
     val r = rank
     def flat(m: DenseMatrix[Double]): Array[Double] = Array.tabulate(r * r)(n => m(n / r, n % r))
-    def update(old: Array[Double], m: Array[Double], n: Int, h: DenseMatrix[Double]) =
-      rule.update(old, m, flat(rule.solveMatrix(h)), 0, n, r)
+    def update(f: Array[Double], m: Array[Double], n: Int, h: DenseMatrix[Double]): Unit =
+      rule.update(f, 0, m, flat(rule.solveMatrix(h)), 0, n, r)
 
     // Seeded init: B, C on the driver; A beside its slab, one primitive
     // array per partition aligned with slabRdd by zipPartitions, drawn
     // with a per-slab seed — deterministic because the pack partitioning is.
     val rng = new Random(seed)
-    var bMat = Array.fill(nj * r)(rule.draw(rng))
-    var cMat = Array.fill(nk * r)(rule.draw(rng))
-    var aRdd: RDD[Array[Double]] = slabRdd.mapPartitionsWithIndex(new InitA(rule, seed, r))
+    val bMat = Array.fill(nj * r)(rule.draw(rng))
+    val cMat = Array.fill(nk * r)(rule.draw(rng))
+    var state: RDD[SlabState] = slabRdd.mapPartitionsWithIndex(new InitA(rule, seed, r))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     var fits = Vector.empty[Double]
     var converged = false
     while (fits.length < maxIter && !converged) {
-      // --- update A: slab-local (mode-1 ownership), no reduce, NO collect.
-      // One broadcast carries B, C and the A-solve matrix.
+      // --- Job 1: update A slab-local (mode-1 ownership, no reduce, NO
+      // collect) and, in the same pass, the MTTKRP against mode 2 with
+      // AᵀA appended. One broadcast carries B, C and the A-solve matrix.
       val gC = gram(cMat, nk, r)
       val bcs = sc.broadcast(Array.concat(bMat, cMat,
         flat(rule.solveMatrix(hadamard(gram(bMat, nj, r), gC, r)))))
-      val prevARdd = aRdd
-      aRdd = slabRdd.zipPartitions(prevARdd)(new UpdateA(rule, bcs, nj * r, (nj + nk) * r, r))
+      val prevState = state
+      state = slabRdd.zipPartitions(prevState)(new UpdateAModeTwo(rule, bcs, nj, nk, r))
         .persist(StorageLevel.MEMORY_AND_DISK)
-
-      // --- update B from MTTKRP over (A, C), C read from the same
-      // broadcast. The pass also folds in AᵀA (appended after the J×R rows,
-      // which is all the update reads) and materializes the new A.
-      val mB = mttkrpJK(slabRdd, aRdd, r, bcs, nj * r, overJ = true, nj)
+      val mB = sumSlabPartials(state, ModeTwoPartial, nj * r + r * r)
       val gramA = DenseMatrix.tabulate(r, r)((p, q) => mB(nj * r + p * r + q))
-      prevARdd.unpersist(blocking = false)
-      // unpersist, NOT destroy: the new A's (cached) lineage still captures
-      // this broadcast, and task serialization validates it even when the
-      // cache makes recompute unreachable. unpersist drops the executor
-      // copies now; the ContextCleaner reaps the rest once the iteration's
-      // aRdd is replaced.
+      prevState.unpersist(blocking = false)
+      // unpersist, NOT destroy: the new state's (cached) lineage still
+      // captures this broadcast, and task serialization validates it even
+      // when the cache makes recompute unreachable. unpersist drops the
+      // executor copies now; the ContextCleaner reaps the rest once the
+      // iteration's state is replaced.
       bcs.unpersist()
-      bMat = update(bMat, mB, nj, hadamard(gramA, gC, r))
+      update(bMat, mB, nj, hadamard(gramA, gC, r))
 
-      // --- update C from MTTKRP over (A, B); no cached RDD captures bcB.
+      // --- Job 2: the MTTKRP against mode 3 over (A, B), A read from the
+      // state job 1 left; no cached RDD captures bcB.
       val bcB = sc.broadcast(bMat)
-      val mC = mttkrpJK(slabRdd, aRdd, r, bcB, 0, overJ = false, nk)
+      val mC = sumSlabPartials(slabRdd.zipPartitions(state)(new ModeThree(bcB, nk, r)),
+        new OnePerSlab[Array[Double]], nk * r)
       bcB.destroy()
       val gB = gram(bMat, nj, r)
-      cMat = update(cMat, mC, nk, hadamard(gramA, gB, r))
+      update(cMat, mC, nk, hadamard(gramA, gB, r))
 
       // --- fit via the CP identities (mC was computed against the current
       // A and B, so vec(mC)·vec(C) = ⟨X, X̂⟩ — no reconstruction).
@@ -344,13 +436,13 @@ object CPALS {
     // (the loop itself never centralized A). A caller at true scale would
     // keep (i, row) as a relation.
     val aMat = new Array[Double](ni * r)
-    sc.runJob(slabRdd.zipPartitions(aRdd)(SlabRows), new OnePerSlab[(Array[Int], Array[Double])],
+    sc.runJob(slabRdd.zipPartitions(state)(SlabRows), new OnePerSlab[(Array[Int], Array[Double])],
       (_: Int, rows: (Array[Int], Array[Double])) => {
         val (localIs, aLoc) = rows
         var li = 0
         while (li < localIs.length) { System.arraycopy(aLoc, li * r, aMat, localIs(li) * r, r); li += 1 }
       })
-    aRdd.unpersist(blocking = false)
+    state.unpersist(blocking = false)
     // slabRdd stays persisted: its lifecycle belongs to the pack() caller.
     val lambda = normalizeColumns(Seq((aMat, ni), (bMat, nj), (cMat, nk)), r)
     CPModel(lambda, aMat, bMat, cMat, (ni, nj, nk), r, fits)
@@ -358,94 +450,184 @@ object CPALS {
 
   // ---- What the tasks run: named objects, not lambdas (see OnePerSlab) ----
 
+  /** What a fit keeps beside each slab between jobs: the slab's A rows
+    * (local row-major, R wide) and the mode-2 MTTKRP partial of the pass
+    * that made them (J×R, then AᵀA). */
+  private final case class SlabState(a: Array[Double], modeTwo: Array[Double])
+
   /** A slab's initial A rows, seeded per slab. */
   private final class InitA(rule: UpdateRule, seed: Long, r: Int)
-      extends ((Int, Iterator[Slab]) => Iterator[Array[Double]]) with Serializable {
-    def apply(idx: Int, slabs: Iterator[Slab]): Iterator[Array[Double]] = {
+      extends ((Int, Iterator[Slab]) => Iterator[SlabState]) with Serializable {
+    def apply(idx: Int, slabs: Iterator[Slab]): Iterator[SlabState] = {
       val rng = new Random(seed ^ (0x9E3779B97F4A7C15L * (idx + 1)))
-      Iterator.single(rule.initA(slabs.next().localIs.length * r, rng))
+      Iterator.single(SlabState(rule.initA(slabs.next().numRows * r, rng), Array.emptyDoubleArray))
     }
   }
 
-  /** A slab's A-update: its mode-1 MTTKRP rows (Σ v·b_j∘c_k over the
-    * slab's nonzeros) against B and C, then the rule's update with the
-    * A-solve matrix. All three come from the iteration's one broadcast
-    * `bcs`: B at 0, C at `cOff`, the R×R matrix at `sOff`. Row-local to
-    * the slab (mode-1 ownership) — no shuffle, no reduce.
+  /** Job 1's pass over a slab: the A update fused with the mode-2 MTTKRP.
+    * B, C and the A-solve matrix come from the iteration's one broadcast
+    * `bcs` (B at 0, C at J·R, the R×R matrix after C). For each local row
+    * i and each of its fibers (i, j), t_ij = Σ_k v·c_k (one multiply-add
+    * per rank per nonzero) is kept in a scratch of the row's fibers, and
+    * the row's mode-1 MTTKRP is m_i = Σ_j t_ij ∘ b_j. The rule turns m_i
+    * into the new a_i; then each fiber adds a_i ∘ t_ij to mode-2 row j,
+    * and the row adds a_i a_iᵀ to the appended AᵀA. Row-local to the slab
+    * (mode-1 ownership) — no shuffle, no reduce.
     */
-  private final class UpdateA(
-      rule: UpdateRule, bcs: Broadcast[Array[Double]], cOff: Int, sOff: Int, r: Int)
-      extends ((Iterator[Slab], Iterator[Array[Double]]) => Iterator[Array[Double]])
-      with Serializable {
-    def apply(slabs: Iterator[Slab], as: Iterator[Array[Double]]): Iterator[Array[Double]] = {
+  private final class UpdateAModeTwo(
+      rule: UpdateRule, bcs: Broadcast[Array[Double]], nj: Int, nk: Int, r: Int)
+      extends ((Iterator[Slab], Iterator[SlabState]) => Iterator[SlabState]) with Serializable {
+    def apply(slabs: Iterator[Slab], states: Iterator[SlabState]): Iterator[SlabState] = {
       val slab = slabs.next(); val f = bcs.value
-      val m = new Array[Double](slab.localIs.length * r)
-      var n = 0
-      val len = slab.vs.length
-      while (n < len) {
-        val row = slab.iLoc(n) * r
-        val j = slab.js(n) * r; val k = cOff + slab.ks(n) * r; val v = slab.vs(n)
-        var p = 0
-        while (p < r) { m(row + p) += v * f(j + p) * f(k + p); p += 1 }
-        n += 1
-      }
-      Iterator.single(rule.update(as.next(), m, f, sOff, slab.localIs.length, r))
-    }
-  }
-
-  /** A slab's MTTKRP partial against mode 2 (`overJ`: rows over j, against
-    * C) or mode 3 (rows over k, against B): dense `outRows`×R rows from
-    * the slab-local A rows and the factor read from `f` at `off`. Never
-    * ships A. `overJ` also appends the slab's AᵀA (R×R), so gram(A) costs
-    * no extra job.
-    */
-  private final class SlabMttkrp(
-      f: Broadcast[Array[Double]], off: Int, overJ: Boolean, outRows: Int, r: Int)
-      extends ((Iterator[Slab], Iterator[Array[Double]]) => Iterator[Array[Double]])
-      with Serializable {
-    def apply(slabs: Iterator[Slab], as: Iterator[Array[Double]]): Iterator[Array[Double]] = {
-      val slab = slabs.next(); val aLoc = as.next()
-      val o = f.value
-      val acc = new Array[Double](outRows * r + (if (overJ) r * r else 0))
-      var n = 0
-      val len = slab.vs.length
-      while (n < len) {
-        val aRow = slab.iLoc(n) * r
-        val j = slab.js(n); val k = slab.ks(n); val v = slab.vs(n)
-        val outRow = if (overJ) j else k
-        val oRow = off + (if (overJ) k else j) * r
+      val Slab(_, rowPtr, fiberJ, fiberPtr, ks, vs) = slab
+      val cOff = nj * r; val sOff = (nj + nk) * r; val gramOff = nj * r
+      val a = states.next().a.clone()
+      val acc = new Array[Double](nj * r + r * r)
+      var maxFibers = 0
+      var li = 0
+      while (li < slab.numRows) { maxFibers = math.max(maxFibers, rowPtr(li + 1) - rowPtr(li)); li += 1 }
+      val t = new Array[Double](maxFibers * r)
+      val m = new Array[Double](r)
+      li = 0
+      while (li < slab.numRows) {
+        val f0 = rowPtr(li); val f1 = rowPtr(li + 1)
+        java.util.Arrays.fill(m, 0.0)
+        var fb = f0
+        while (fb < f1) {
+          val tRow = (fb - f0) * r
+          sumFiber(ks, vs, fiberPtr(fb), fiberPtr(fb + 1), f, cOff, t, tRow, r)
+          val bRow = fiberJ(fb) * r
+          var p = 0
+          while (p < r) { m(p) += t(tRow + p) * f(bRow + p); p += 1 }
+          fb += 1
+        }
+        val aRow = li * r
+        rule.update(a, aRow, m, f, sOff, 1, r)
+        fb = f0
+        while (fb < f1) {
+          val tRow = (fb - f0) * r; val jRow = fiberJ(fb) * r
+          var p = 0
+          while (p < r) { acc(jRow + p) += a(aRow + p) * t(tRow + p); p += 1 }
+          fb += 1
+        }
         var p = 0
         while (p < r) {
-          acc(outRow * r + p) += v * aLoc(aRow + p) * o(oRow + p)
+          val vp = a(aRow + p)
+          var q = 0
+          while (q < r) { acc(gramOff + p * r + q) += vp * a(aRow + q); q += 1 }
           p += 1
         }
-        n += 1
+        li += 1
       }
-      if (overJ) {
-        val base = outRows * r
-        val nRows = aLoc.length / r
-        var row = 0
-        while (row < nRows) {
+      Iterator.single(SlabState(a, acc))
+    }
+  }
+
+  /** Job 2's pass over a slab: the mode-3 MTTKRP partial (K×R) from the
+    * slab-local A rows and the broadcast updated B. Each fiber (i, j)
+    * forms w = a_i ∘ b_j once; each of its nonzeros adds v·w to row k.
+    * Never ships A.
+    */
+  private final class ModeThree(bcB: Broadcast[Array[Double]], nk: Int, r: Int)
+      extends ((Iterator[Slab], Iterator[SlabState]) => Iterator[Array[Double]]) with Serializable {
+    def apply(slabs: Iterator[Slab], states: Iterator[SlabState]): Iterator[Array[Double]] = {
+      val slab = slabs.next(); val a = states.next().a; val b = bcB.value
+      val Slab(_, rowPtr, fiberJ, fiberPtr, ks, vs) = slab
+      val acc = new Array[Double](nk * r)
+      val w = new Array[Double](r)
+      var li = 0
+      while (li < slab.numRows) {
+        val aRow = li * r
+        var fb = rowPtr(li)
+        while (fb < rowPtr(li + 1)) {
+          val bRow = fiberJ(fb) * r
           var p = 0
-          while (p < r) {
-            val vp = aLoc(row * r + p)
-            var q = 0
-            while (q < r) { acc(base + p * r + q) += vp * aLoc(row * r + q); q += 1 }
-            p += 1
-          }
-          row += 1
+          while (p < r) { w(p) = a(aRow + p) * b(bRow + p); p += 1 }
+          scatterFiber(ks, vs, fiberPtr(fb), fiberPtr(fb + 1), w, acc, r)
+          fb += 1
         }
+        li += 1
       }
       Iterator.single(acc)
     }
   }
 
+  /** t(tOff + p) = Σ v·f(fOff + k·R + p) over the nonzeros [n0, n1) of
+    * one fiber, for every rank p. Four ranks at a time are summed in
+    * registers, so a nonzero costs one multiply-add per rank and no
+    * store; the last R mod 4 ranks go one at a time.
+    */
+  private def sumFiber(
+      ks: Array[Int], vs: Array[Double], n0: Int, n1: Int,
+      f: Array[Double], fOff: Int, t: Array[Double], tOff: Int, r: Int): Unit = {
+    var p = 0
+    while (p + 4 <= r) {
+      var t0 = 0.0; var t1 = 0.0; var t2 = 0.0; var t3 = 0.0
+      var n = n0
+      while (n < n1) {
+        val v = vs(n); val c = fOff + ks(n) * r + p
+        t0 += v * f(c); t1 += v * f(c + 1); t2 += v * f(c + 2); t3 += v * f(c + 3)
+        n += 1
+      }
+      t(tOff + p) = t0; t(tOff + p + 1) = t1; t(tOff + p + 2) = t2; t(tOff + p + 3) = t3
+      p += 4
+    }
+    while (p < r) {
+      var sum = 0.0; var n = n0
+      while (n < n1) { sum += vs(n) * f(fOff + ks(n) * r + p); n += 1 }
+      t(tOff + p) = sum
+      p += 1
+    }
+  }
+
+  /** acc(k·R + p) += v·w(p) over the nonzeros [n0, n1) of one fiber, for
+    * every rank p: four ranks of w at a time held in registers, then the
+    * last R mod 4 one at a time.
+    */
+  private def scatterFiber(
+      ks: Array[Int], vs: Array[Double], n0: Int, n1: Int,
+      w: Array[Double], acc: Array[Double], r: Int): Unit = {
+    var p = 0
+    while (p + 4 <= r) {
+      val w0 = w(p); val w1 = w(p + 1); val w2 = w(p + 2); val w3 = w(p + 3)
+      var n = n0
+      while (n < n1) {
+        val v = vs(n); val k = ks(n) * r + p
+        acc(k) += v * w0; acc(k + 1) += v * w1; acc(k + 2) += v * w2; acc(k + 3) += v * w3
+        n += 1
+      }
+      p += 4
+    }
+    while (p < r) {
+      val wp = w(p); var n = n0
+      while (n < n1) { acc(ks(n) * r + p) += vs(n) * wp; n += 1 }
+      p += 1
+    }
+  }
+
+  /** A slab's mode-2 partial, as the result of job 1's task: A itself
+    * stays in the cached state. */
+  private object ModeTwoPartial
+      extends ((TaskContext, Iterator[SlabState]) => Array[Double]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[SlabState]): Array[Double] = it.next().modeTwo
+  }
+
+  /** A slab's Σ v² over its packed values, as the result of a task. */
+  private object SlabNormX2 extends ((TaskContext, Iterator[Slab]) => Array[Double]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Slab]): Array[Double] = {
+      val vs = it.next().vs
+      var s = 0.0; var n = 0
+      while (n < vs.length) { s += vs(n) * vs(n); n += 1 }
+      Array(s)
+    }
+  }
+
   /** A slab's global row ids beside its A rows, for the one collect. */
   private object SlabRows
-      extends ((Iterator[Slab], Iterator[Array[Double]]) => Iterator[(Array[Int], Array[Double])])
+      extends ((Iterator[Slab], Iterator[SlabState]) => Iterator[(Array[Int], Array[Double])])
       with Serializable {
-    def apply(slabs: Iterator[Slab], as: Iterator[Array[Double]]): Iterator[(Array[Int], Array[Double])] =
-      Iterator.single((slabs.next().localIs, as.next()))
+    def apply(slabs: Iterator[Slab], states: Iterator[SlabState]): Iterator[(Array[Int], Array[Double])] =
+      Iterator.single((slabs.next().localIs, states.next().a))
   }
 
   /** A slab's one result, as the result of its task. A named class, not a
@@ -461,31 +643,24 @@ object CPALS {
     def apply(ctx: TaskContext, it: Iterator[T]): T = it.next()
   }
 
-  /** The MTTKRP against mode 2 (`overJ`) or 3, per slab by [[SlabMttkrp]],
-    * summed on the driver by [[sumSlabPartials]]. */
-  private def mttkrpJK(
-      slabRdd: RDD[Slab], aRdd: RDD[Array[Double]], r: Int,
-      f: Broadcast[Array[Double]], off: Int, overJ: Boolean, outRows: Int): Array[Double] =
-    sumSlabPartials(slabRdd.zipPartitions(aRdd)(new SlabMttkrp(f, off, overJ, outRows, r)),
-      outRows * r + (if (overJ) r * r else 0))
-
-  /** The element-wise sum of the one `len`-long partial each partition
-    * emits, in ONE single-stage job. The driver adds partial s as soon as
-    * partitions 0..s have all arrived, so the sum order is the partition
-    * order whatever order the tasks finish in, and a seeded fit over one
-    * packed tensor is bit-reproducible.
+  /** The element-wise sum of the `len`-long partial that `partial` takes
+    * from each partition, in ONE single-stage job. The driver adds
+    * partial s as soon as partitions 0..s have all arrived, so the sum
+    * order is the partition order whatever order the tasks finish in, and
+    * a seeded fit over one packed tensor is bit-reproducible.
     */
-  private def sumSlabPartials(partials: RDD[Array[Double]], len: Int): Array[Double] = {
-    val numSlabs = partials.getNumPartitions
+  private def sumSlabPartials[T](
+      slabs: RDD[T], partial: (TaskContext, Iterator[T]) => Array[Double], len: Int): Array[Double] = {
+    val numSlabs = slabs.getNumPartitions
     val sum = new Array[Double](len)
     val arrived = new Array[Array[Double]](numSlabs)
     var next = 0
-    partials.sparkContext.runJob(partials, new OnePerSlab[Array[Double]],
-      (slab: Int, partial: Array[Double]) => {
-        arrived(slab) = partial
+    slabs.sparkContext.runJob(slabs, partial,
+      (slab: Int, x: Array[Double]) => {
+        arrived(slab) = x
         while (next < numSlabs && arrived(next) != null) {
-          val x = arrived(next)
-          var n = 0; while (n < len) { sum(n) += x(n); n += 1 }
+          val y = arrived(next)
+          var n = 0; while (n < len) { sum(n) += y(n); n += 1 }
           arrived(next) = null
           next += 1
         }

@@ -25,9 +25,9 @@ import graft.tensor.CPALS.CPModel
   * [[CPALS.fitPacked]], and shares its layout, jobs and broadcasts:
   *  - mode 1 (the scale mode): the sweep is ROW-LOCAL (column p of row i
   *    touches only row i's other columns, M's row i, and the broadcast
-  *    R×R G), so factor A updates beside its slab, never visiting the
-  *    driver; per-slab cost is the same MTTKRP pass plus an O(rows·R²)
-  *    sweep.
+  *    R×R G), so the fused pass sweeps each row of A beside its slab as
+  *    soon as the row's MTTKRP is summed, never visiting the driver; the
+  *    per-slab cost is the same fiber pass plus an O(rows·R²) sweep.
   *  - modes 2/3: the per-slab MTTKRP partials summed on the driver in
   *    slab order, then a driver-side sweep over the small J×R / K×R
   *    factors.
@@ -52,51 +52,39 @@ object NnHals {
       numSlabs: Int = 0): CPModel =
     CPALS.fitCoo(coo, rank, seed, tol, maxIter, numSlabs, HalsRule)
 
-  /** HALS as a CP update rule: S is the Gram Hadamard H itself, and the
-    * new rows are one [[halsSweep]] of the old ones. Seeded nonnegative
-    * init of all three factors: |N(0,1)| draws are strictly positive,
-    * scale-free, and (unlike an all-ones-ish init) not collinear in
-    * expectation.
+  /** HALS as a CP update rule: S is the Gram Hadamard H itself (G
+    * below), and the new rows are one HALS sweep of the old ones, in
+    * place: for each row and each column p, the exact nonnegative
+    * coordinate minimizer max(0, (m_p − Σ_{q≠p} a_q·G(q,p)) / G(p,p)).
+    * Later columns see the updated earlier ones (Gauss–Seidel), which is
+    * what makes the sweep exact per column. Seeded nonnegative init of
+    * all three factors: |N(0,1)| draws are strictly positive, scale-free,
+    * and (unlike an all-ones-ish init) not collinear in expectation.
     */
   private[graft] case object HalsRule extends CPALS.UpdateRule {
     def draw(rng: Random): Double = math.abs(rng.nextGaussian())
     def initA(n: Int, rng: Random): Array[Double] = Array.fill(n)(draw(rng))
     def solveMatrix(h: DenseMatrix[Double]): DenseMatrix[Double] = h
     def update(
-        old: Array[Double], m: Array[Double], s: Array[Double], sOff: Int,
-        n: Int, r: Int): Array[Double] = {
-      val a = old.clone()
-      halsSweep(a, m, s, sOff, n, r)
-      a
-    }
-  }
-
-  /** One HALS sweep over `nRows` factor rows, in place: for each row and
-    * each column p, the exact nonnegative coordinate minimizer
-    * max(0, (m_p − Σ_{q≠p} a_q·G(q,p)) / G(p,p)). Later columns see the
-    * updated earlier ones (Gauss–Seidel), which is what makes the sweep
-    * exact per column. `g` holds the R×R Gram Hadamard, row-major from
-    * `gOff`.
-    */
-  private[tensor] def halsSweep(
-      a: Array[Double], m: Array[Double], g: Array[Double], gOff: Int,
-      nRows: Int, r: Int): Unit = {
-    var row = 0
-    while (row < nRows) {
-      val base = row * r
-      var p = 0
-      while (p < r) {
-        // s = (A·G)(row, p) including the a_p·G(p,p) term, added back below.
-        var s = 0.0
-        var q = 0
-        while (q < r) { s += a(base + q) * g(gOff + q * r + p); q += 1 }
-        val gpp = g(gOff + p * r + p)
-        val num = m(base + p) - s + a(base + p) * gpp
-        val v = num / math.max(gpp, 1e-12)
-        a(base + p) = if (v > 0.0) v else 0.0
-        p += 1
+        a: Array[Double], aOff: Int, m: Array[Double], g: Array[Double], gOff: Int,
+        n: Int, r: Int): Unit = {
+      var row = 0
+      while (row < n) {
+        val base = aOff + row * r
+        var p = 0
+        while (p < r) {
+          // s = (A·G)(row, p) including the a_p·G(p,p) term, added back below.
+          var s = 0.0
+          var q = 0
+          while (q < r) { s += a(base + q) * g(gOff + q * r + p); q += 1 }
+          val gpp = g(gOff + p * r + p)
+          val num = m(row * r + p) - s + a(base + p) * gpp
+          val v = num / math.max(gpp, 1e-12)
+          a(base + p) = if (v > 0.0) v else 0.0
+          p += 1
+        }
+        row += 1
       }
-      row += 1
     }
   }
 }

@@ -107,16 +107,15 @@ class TensorSpec extends SparkSpec {
   }
 
   test("C12: deterministic trajectory under fixed seed") {
-    // Fixed iteration count (tol=0): the stopping rule near an exact-fit
-    // plateau is sensitive to last-ulp reduction-order noise, which the
-    // contract does not promise (SURVEY §7.3.4: assert monotone fit, not
-    // bitwise reproducibility). The seeded trajectory itself must agree
-    // to numerical tolerance.
+    // Two independent packs of the same rows: a slab's layout is sorted,
+    // so it does not depend on the order the shuffle delivered its
+    // nonzeros in, and the slab partials are summed in slab order. The
+    // seeded trajectory and model are bit-identical across packs.
     val coo = syntheticCoo(6, 5, 4, 2, seed = 3)
     val m1 = withPacked(coo, 2, 3)(CPALS.fitPacked(_, 2, seed = 9, tol = 0.0, maxIter = 5))
     val m2 = withPacked(coo, 2, 3)(CPALS.fitPacked(_, 2, seed = 9, tol = 0.0, maxIter = 5))
     assert(m1.fits.length == 5 && m2.fits.length == 5)
-    m1.fits.zip(m2.fits).foreach { case (f1, f2) => assert(math.abs(f1 - f2) < 1e-6) }
+    assertSameBits("two packs", m1, m2)
   }
 
   test("C13: LPT slab assignment balances heavily skewed slices") {
@@ -258,12 +257,15 @@ class TensorSpec extends SparkSpec {
   }
 
   test("NN-HALS seeded trajectory is deterministic") {
+    // The fit reaches 1 within the 5 iterations, where the CP fit identity
+    // is only good to about 1e-8 (cancellation in ‖X‖² − 2⟨X,X̂⟩ + ‖X̂‖²):
+    // a tolerance of -inf keeps the count at 5 instead of stopping on noise.
     val coo = nonnegCoo(6, 5, 4, 2, seed = 3)
-    def fit() = withPacked(coo, 2, 3)(
-      CPALS.fitPacked(_, 2, seed = 9, tol = 0.0, maxIter = 5, NnHals.HalsRule))
+    def fit() = withPacked(coo, 2, 3)(CPALS.fitPacked(
+      _, 2, seed = 9, tol = Double.NegativeInfinity, maxIter = 5, NnHals.HalsRule))
     val m1 = fit(); val m2 = fit()
     assert(m1.fits.length == 5 && m2.fits.length == 5)
-    m1.fits.zip(m2.fits).foreach { case (f1, f2) => assert(math.abs(f1 - f2) < 1e-6) }
+    assertSameBits("two packs", m1, m2)
   }
 
   /** The two seeded fits over one packed slab tensor, by name. A tolerance
@@ -306,6 +308,87 @@ class TensorSpec extends SparkSpec {
     try packedFits.foreach { case (name, fit) =>
       assertSameBits(name, fit(packed, 9L, 6), fit(packed, 9L, 6))
     } finally packed.unpersist()
+  }
+
+  test("CP-ALS and NN-HALS: duplicate coordinates are summed, not fitted as extra cells") {
+    // Every cell split into two rows of half its value is the same tensor,
+    // so the packed norm and every fit must match the merged COO's.
+    val merged = nonnegCoo(6, 5, 4, 2, seed = 31)
+    val split = merged.flatMap { case (i, j, k, v) => Seq((i, j, k, v / 2), (i, j, k, v / 2)) }
+    packedFits.foreach { case (name, fit) =>
+      val want = withPacked(merged, 2, 3)(fit(_, 9L, 6))
+      val (got, packedNnz) = withPacked(split, 2, 3)(p =>
+        (fit(p, 9L, 6), p.slabRdd.map(_.vs.length.toLong).sum()))
+      assert(got.fits.length == want.fits.length)
+      got.fits.zip(want.fits).foreach { case (g, w) =>
+        assert(math.abs(g - w) <= 1e-12, s"$name fits: ${got.fits} vs ${want.fits}")
+      }
+      assert(packedNnz == 6 * 5 * 4, s"$name: the slabs hold $packedNnz nonzeros")
+    }
+  }
+
+  test("CP-ALS and NN-HALS: fiber kernels on empty slabs, one-nonzero rows and a row over every j") {
+    // 5 populated rows (2 of them one fiber of one nonzero, one with a
+    // fiber at every j, a gap at i = 3 and 5) in up to 8 slabs, so some
+    // slabs are empty.
+    val (nj, nk) = (6, 5)
+    val rng = new scala.util.Random(41)
+    val cells =
+      (for (j <- 0 until nj; k <- 0 until nk if (j + k) % 2 == 0) yield (0, j, k)) ++
+        Seq((1, 3, 2), (2, 0, 4)) ++
+        (for (j <- Seq(1, 4); k <- 0 until nk) yield (4, j, k)) ++
+        Seq((6, 2, 0), (6, 2, 3), (6, 5, 1))
+    val coo = cells.map { case (i, j, k) => (i.toLong, j.toLong, k.toLong, 0.5 + rng.nextDouble()) }
+    val rdd = spark.sparkContext.parallelize(coo, 3)
+    // ALS never reads the old A rows, so its trajectory does not depend on
+    // the slab count. HALS draws A per slab; at rank 1 its sweep does not
+    // read the old row either, so it is slab-count free too. Rank 5 runs
+    // the kernels' 4-rank blocks and their one-rank tail.
+    val rules = Seq("CP-ALS" -> (5, CPALS.AlsRule()), "NN-HALS" -> (1, NnHals.HalsRule))
+    rules.foreach { case (name, (rank, rule)) =>
+      val fits = Seq(1, 3, 8).map(slabs => withPacked(rdd, rank, slabs)(
+        CPALS.fitPacked(_, rank, 5L, Double.NegativeInfinity, 6, rule).fits))
+      fits.tail.foreach(f => f.zip(fits.head).foreach { case (x, y) =>
+        assert(math.abs(x - y) <= 1e-10, s"$name fits by slab count: $fits")
+      })
+    }
+
+    // The first ALS iteration against a dense driver-side reference: B
+    // then C drawn from Random(seed), A from zeros, explicit residual.
+    val (ni, r, seed) = (7, 5, 5L)
+    val x = Array.ofDim[Double](ni, nj, nk)
+    coo.foreach { case (i, j, k, v) => x(i.toInt)(j.toInt)(k.toInt) += v }
+    val init = new scala.util.Random(seed)
+    val b = Array.fill(nj, r)(init.nextGaussian())
+    val c = Array.fill(nk, r)(init.nextGaussian())
+    val a = Array.ofDim[Double](ni, r)
+    import breeze.linalg.{pinv, DenseMatrix}
+    def gram(f: Array[Array[Double]]) =
+      DenseMatrix.tabulate(r, r)((p, q) => f.map(row => row(p) * row(q)).sum)
+    // f ← M·pinv(G1∘G2), M(row, p) = Σ x · u(·, p) · w(·, p) over the other two modes.
+    def solve(f: Array[Array[Double]], g1: DenseMatrix[Double], g2: DenseMatrix[Double])(
+        m: (Int, Int) => Double): Unit = {
+      val s = pinv(g1 *:* g2)
+      for (row <- f.indices; q <- 0 until r)
+        f(row)(q) = (0 until r).map(p => m(row, p) * s(p, q)).sum
+    }
+    def sum3(f: (Int, Int, Int) => Double) =
+      (for (i <- 0 until ni; j <- 0 until nj; k <- 0 until nk) yield f(i, j, k)).sum
+    solve(a, gram(b), gram(c))((i, p) =>
+      (for (j <- 0 until nj; k <- 0 until nk) yield x(i)(j)(k) * b(j)(p) * c(k)(p)).sum)
+    solve(b, gram(a), gram(c))((j, p) =>
+      (for (i <- 0 until ni; k <- 0 until nk) yield x(i)(j)(k) * a(i)(p) * c(k)(p)).sum)
+    solve(c, gram(a), gram(b))((k, p) =>
+      (for (i <- 0 until ni; j <- 0 until nj) yield x(i)(j)(k) * a(i)(p) * b(j)(p)).sum)
+    val resid2 = sum3 { (i, j, k) =>
+      val d = x(i)(j)(k) - (0 until r).map(p => a(i)(p) * b(j)(p) * c(k)(p)).sum
+      d * d
+    }
+    val want = 1.0 - math.sqrt(resid2 / sum3((i, j, k) => x(i)(j)(k) * x(i)(j)(k)))
+    for (slabs <- Seq(1, 3, 8)) {
+      val got = withPacked(rdd, r, slabs)(CPALS.fitPacked(_, r, seed, 0.0, 1)).fits.head
+      assert(math.abs(got - want) <= 1e-9, s"$slabs slabs: first fit $got, dense reference $want")
+    }
   }
 
   test("NN-HALS on the Q43 events tensor: nonnegative data, nonnegative model") {
