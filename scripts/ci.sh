@@ -44,24 +44,25 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt -batch "runMain graft.Bench" \
 grep -m1 -o '{"metric".*}' "$BENCH_RAW" > "$BENCH_OUT"
 python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 
-# Rehearsal row format: both legs must print an error-free row, and
-# sf10_table.py must still read it, so a renamed row key fails here and
-# not in a later sweep.
-REH_LOG=$(mktemp /tmp/graft-ci-rehearsal.XXXXXX.log)
-sbt -batch "runMain graft.Sf10Rehearsal /root/testdata/sf0.001 daily_grid_build Q13" \
-  > "$REH_LOG"
-python3 - "$REH_LOG" <<'EOF'
-import json, sys
-rows = {}
-for line in open(sys.argv[1]):
-    if line.startswith('{"leg"'):
-        row = json.loads(line)
-        rows[row["leg"]] = row
-for leg in ("daily_grid_build", "Q13"):
-    if leg not in rows or "error" in rows[leg]:
-        sys.exit(f"rehearsal leg {leg}: {rows.get(leg, 'no row')}")
+# Leg rows: every leg of the full line (each query, each `*_build` key,
+# cpals, nnhals and tucker) must have printed exactly one error-free row,
+# and `scaling.py rows` must read them, so a renamed row key fails here
+# and not in a later sweep.
+python3 - "$BENCH_OUT" "$BENCH_RAW" <<'EOF'
+import collections, json, sys
+full = json.load(open(sys.argv[1]))
+legs = (list(full["queries"]) + [k for k in full if k.endswith("_build")]
+        + ["cpals", "nnhals", "tucker"])
+rows = [json.loads(line) for line in open(sys.argv[2]) if line.startswith('{"leg"')]
+count = collections.Counter(row["leg"] for row in rows)
+bad = [f"{leg}: {count[leg]} rows" for leg in legs if count[leg] != 1]
+bad += [f"{leg}: a row for a leg not in the full line" for leg in count if leg not in legs]
+bad += [f"{row['leg']}: {row['error']}" for row in rows if "error" in row]
+if bad:
+    sys.exit("bench rows:\n" + "\n".join(bad))
+print(f"bench rows: {len(rows)} legs, one error-free row each")
 EOF
-python3 scripts/sf10_table.py "$REH_LOG"
+python3 scripts/scaling.py rows "$BENCH_RAW"
 
 # Benchmark build and tensor fits: perfbench compiles against the engine's
 # private[graft] tensor API, so a signature change fails here and not first

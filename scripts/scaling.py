@@ -29,6 +29,12 @@ Modes:
       cross-session minimum is the standard noise-robust estimator.
       `failed` / `n_failed` become the union over the runs.
 
+  rows   <log> [log ...]
+      Per-family table of the leg rows (`{"leg"...}` lines) that Bench
+      prints: wall seconds, spill and shuffle write per family, the
+      slowest legs and the failed ones. A later row of a leg wins, so a
+      clean re-measure in a later log supersedes an earlier error.
+
 The query -> family mapping is parsed from the operator sources (each
 operators/*.scala registers its own queries), so new gates land in the
 right family without touching this script.
@@ -208,6 +214,55 @@ def cmd_minmerge(out_path, paths):
     print(f"min-merged {len(paths)} runs -> {out_path}")
 
 
+def cmd_rows(paths):
+    fams = family_map()
+    byleg = {}
+    for path in paths:
+        with open(path) as f:
+            for line in f:
+                line = line.strip()
+                if line.startswith('{"leg"'):
+                    try:
+                        d = json.loads(line)
+                    except json.JSONDecodeError:
+                        continue
+                    byleg[d["leg"]] = d
+    rows = [d for d in byleg.values() if "error" not in d]
+    errors = [d for d in byleg.values() if "error" in d]
+    agg = {}
+    for r in rows:
+        leg = r["leg"]
+        fam = fams.get(leg, "build" if leg.endswith("_build")
+                       else "tensor" if leg in ("cpals", "nnhals", "tucker") else "?")
+        a = agg.setdefault(fam, dict(n=0, sec=0.0, spill=0.0, shuf=0.0, worst=(0.0, "")))
+        a["n"] += 1
+        a["sec"] += r["sec"]
+        a["spill"] += r["spill_mem_mb"] + r["spill_disk_mb"]
+        a["shuf"] += r["shuffle_write_mb"]
+        if r["sec"] > a["worst"][0]:
+            a["worst"] = (r["sec"], leg)
+    print("| family | legs | total s | spill GB | shuffle-w GB | slowest leg |")
+    print("|---|---|---|---|---|---|")
+    for fam in sorted(agg):
+        a = agg[fam]
+        print(f"| {fam} | {a['n']} | {a['sec']:.1f} | {a['spill']/1024:.1f} "
+              f"| {a['shuf']/1024:.1f} | {a['worst'][1]} ({a['worst'][0]:.1f} s) |")
+    tot = sum(a["sec"] for a in agg.values())
+    print(f"| **all** | {sum(a['n'] for a in agg.values())} | **{tot:.1f}** | "
+          f"{sum(a['spill'] for a in agg.values())/1024:.1f} | "
+          f"{sum(a['shuf'] for a in agg.values())/1024:.1f} | |")
+    print()
+    print("Slowest 12 legs:")
+    for r in sorted(rows, key=lambda r: -r["sec"])[:12]:
+        print(f"  {r['leg']} ({fams.get(r['leg'], '?')}): {r['sec']:.1f} s, "
+              f"spill {(r['spill_mem_mb'] + r['spill_disk_mb'])/1024:.1f} GB")
+    if errors:
+        print()
+        print("Errored legs:")
+        for d in errors:
+            print(f"  {d['leg']}: {d['error'][:110]}")
+
+
 def main():
     if len(sys.argv) < 2:
         print(__doc__)
@@ -221,6 +276,8 @@ def main():
         cmd_check(sys.argv[2], sys.argv[3])
     elif mode == "minmerge":
         cmd_minmerge(sys.argv[2], sys.argv[3:])
+    elif mode == "rows":
+        cmd_rows(sys.argv[2:])
     else:
         print(__doc__)
         sys.exit(2)

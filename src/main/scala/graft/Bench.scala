@@ -1,11 +1,21 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** BENCH harness (BASELINE.md protocol): warm-up, 3 timed runs per query,
-  * median reported; results fully materialized via the no-op sink (every
-  * operator runs, nothing collects to the driver); CP-ALS timed separately
-  * on the Q43 tensor. Prints exactly one JSON line.
+/** BENCH harness (BASELINE.md protocol) and the tools' one leg runner:
+  * warm-up, 3 timed runs per query, median reported; results fully
+  * materialized via the no-op sink (every operator runs, nothing collects
+  * to the driver); each artifact build and each tensor leg (CP-ALS,
+  * NN-HALS and Tucker on the Q43 tensor) timed once.
+  *
+  *   SPARK_GRAFT_SF_DIR=<sfDir> sbt "runMain graft.Bench [leg ...]"
+  *
+  * With no argument it runs every leg. Otherwise each argument names one
+  * leg: a query id, a `Derived.buildLegs` name, or `cpals`, `nnhals` or
+  * `tucker`; the named legs run in the same sequence as a full run. As
+  * each leg finishes, its [[Harness.Leg.row]] is printed (a query's from
+  * its median run); then the full JSON line, then the summary line last.
   */
 object Bench {
   /** Locale-pinned decimal format: the f interpolator uses the JVM default
@@ -21,7 +31,7 @@ object Bench {
     * (nonnegative CP via HALS; the Q43 values are sums of nonnegative
     * event values, so the NN model is meaningful here), rank 8, a fixed
     * 10 iterations, one slab per core. */
-  private[graft] def cpFit(leg: String, coo: DataFrame, cpus: Int): tensor.CPALS.CPModel =
+  private def cpFit(leg: String, coo: DataFrame, cpus: Int): tensor.CPALS.CPModel =
     leg match {
       case "cpals" =>
         tensor.CPALS.fit(coo, rank = 8, seed = 42, tol = 0.0, maxIter = 10, numSlabs = cpus)
@@ -31,6 +41,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val tensorLegs = Seq("cpals", "nnhals", "tucker")
+    val buildLegs = operators.Derived.buildLegs
+    val unknown = args.filterNot(a =>
+      SparkEntry.queries.contains(a) || buildLegs.exists(_._1 == a) || tensorLegs.contains(a))
+    require(unknown.isEmpty, s"unknown legs ${unknown.mkString(" ")}: a leg is a query id, " +
+      s"one of ${buildLegs.map(_._1).mkString(", ")}, or one of ${tensorLegs.mkString(", ")}")
+    // The driver passes no args, so its runs always time every leg.
+    def selected(leg: String): Boolean = args.isEmpty || args.contains(leg)
     val cpus = Harness.cpus(32)
     def newSession(): SparkSession = Harness.session(cpus, cpus)
     var spark = newSession()
@@ -39,15 +57,19 @@ object Bench {
     // first failure. A failed leg is left out of the timed sums, so it is
     // published as `n_failed`/`failed` and can never pass for a fast one.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def run[T](leg: String)(body: => T): Option[(Double, T)] = {
+    def run[T](leg: String)(body: => T): Harness.Leg[T] = {
       val l = Harness.leg(spark, leg)(body)
       l.error.foreach { e =>
         failed += leg
         System.err.println(s"[bench] $leg failed: $e")
       }
-      l.result.toOption.map(l.sec -> _)
+      l
     }
-    def timeLeg(leg: String)(body: => Unit): Double = run(leg)(body).fold(-1.0)(_._1)
+    // A leg's row goes to stdout as the leg finishes, so an interrupted
+    // run keeps every row it finished. Warm-ups, recycle heads and
+    // sentinels print none.
+    def report[T](l: Harness.Leg[T]): Harness.Leg[T] = { println(l.row); l }
+    def sec(l: Harness.Leg[_]): Double = if (l.error.isEmpty) l.sec else -1.0
 
     // Harness.leg drops the caches and checkpoint blocks a run leaves
     // behind, so the 2nd/3rd timed runs of a query can never read cached
@@ -56,7 +78,7 @@ object Bench {
     // deferred full GC otherwise lands on an arbitrary query and can span
     // all of its timed runs (observed: a 9x one-off on Q98 that
     // re-measured at 1x in the next session and in isolation).
-    def materialize(name: String): Double = timeLeg(name) {
+    def materialize(name: String): Harness.Leg[Unit] = run(name) {
       SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
     }
@@ -76,24 +98,18 @@ object Bench {
     // Warm-up: JVM/codegen/parquet-footer caches.
     materialize("Q01")
 
-    // Derived artifacts: force a FRESH build of each and time it as its
-    // own leg. The consumers (the graph family, the near-dup gates, the
-    // daily-grid spine) then bench as pure readers of the bucketed
-    // artifacts, and stale /tmp state from a previous run can never
-    // flatter the query timings.
-    val builds = operators.Derived.buildLegs.map { case (leg, artifacts) =>
-      leg -> timeLeg(leg)(artifacts.foreach(_.rebuild(spark, sfDir)))
+    // Derived artifacts: force a FRESH build of each selected one and time
+    // it as its own leg. The consumers (the graph family, the near-dup
+    // gates, the daily-grid spine) then bench as pure readers of the
+    // bucketed artifacts, and stale /tmp state from a previous run can
+    // never flatter the query timings. A subset run rebuilds only the
+    // builds it names; its queries get or build the rest through
+    // `Derived.Artifact`.
+    val builds = buildLegs.filter(b => selected(b._1)).map { case (leg, artifacts) =>
+      leg -> sec(report(run(leg)(artifacts.foreach(_.rebuild(spark, sfDir)))))
     }
 
-    // Dev-only subset: `runMain graft.Bench Q102 Q103`, or
-    // `runMain graft.Bench tensors` for the tensor legs alone (isolates
-    // them from end-of-session registry pressure). The driver passes no
-    // args, so its runs always time the full registry.
-    val tensorsOnly = args.sameElements(Array("tensors"))
-    val names =
-      if (tensorsOnly) Seq.empty
-      else if (args.nonEmpty) args.toSeq.sorted
-      else SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(selected)
     // Runs stay back-to-back per query (NOT interleaved across the
     // registry): with >100 codegen units live, interleaving makes every
     // run miss the bounded generated-class cache and re-pay compilation —
@@ -131,28 +147,38 @@ object Bench {
     // session position (protocol in docs/BENCH_NOTES.md). Mid/end
     // sentinels run immediately AFTER a chunk finishes (before its
     // recycle), where accumulated session debt is at its local maximum.
-    def median3(name: String): Double = {
-      val runs = (1 to 3).map(_ => materialize(name)).filter(_ >= 0).sorted
-      if (runs.isEmpty) -1.0 else runs(runs.length / 2)
+    //
+    // A query's time is the median of its successful runs. Its leg is the
+    // median run, or its first failed run if any failed, so that a leg
+    // named in `failed` always has a row with its `error`.
+    def median3(name: String): (Double, Harness.Leg[Unit]) = {
+      val runs = (1 to 3).map(_ => materialize(name))
+      val ok = runs.filter(_.error.isEmpty).sortBy(_.sec)
+      val median = ok.lift(ok.length / 2)
+      (median.fold(-1.0)(_.sec), runs.find(_.error.nonEmpty).orElse(median).get)
     }
     def sentinel(): String =
-      Seq("Q01", "Q13").map(q => "\"" + q + "\":" + d("%.3f", median3(q)))
+      Seq("Q01", "Q13").map(q => "\"" + q + "\":" + d("%.3f", median3(q)._1))
         .mkString("{", ",", "}")
     val sentinels = scala.collection.mutable.LinkedHashMap[String, String]()
     val chunks = names.grouped(RECYCLE).toSeq
     if (names.nonEmpty) sentinels("start") = sentinel()
     val results = chunks.zipWithIndex.flatMap { case (chunk, ci) =>
       if (chunk.head != names.head) recycle(chunk.head)
-      val timed = chunk.map(name => name -> median3(name))
+      val timed = chunk.map { name =>
+        val (s, l) = median3(name)
+        report(l)
+        name -> s
+      }
       if (ci == (chunks.length - 1) / 2) sentinels("mid") = sentinel()
       if (ci == chunks.length - 1) sentinels("end") = sentinel()
       timed
     }
 
-    // Tensor legs on the Q43 events tensor, skipped on dev subset runs —
-    // they time the tensor loop, not a query. None when skipped or failed.
+    // Tensor legs on the Q43 events tensor, one run each. None when not
+    // selected or failed.
     def tensorLeg(leg: String)(fit: => TensorFit): Option[TensorFit] =
-      if (args.nonEmpty && !tensorsOnly) None else run(leg)(fit).map(_._2)
+      if (!selected(leg)) None else report(run(leg)(fit)).result.toOption
     def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
     // CP-ALS and NN-HALS (see cpFit), timed from after the Q43 tensor's
@@ -243,17 +269,18 @@ object Bench {
     if (args.isEmpty && sfDir.split('/').last == "sf0.1") {
       val full = line(v => if (v < 0) "-1" else d("%.4f", v), sfDir,
         tensorObjects = true) + "\n"
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get("docs/BENCH_LAST.json"), full.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      def save(path: String): Unit =
+        try java.nio.file.Files.write(java.nio.file.Paths.get(path), full.getBytes("UTF-8"))
+        catch {
+          case NonFatal(e) =>
+            System.err.println(s"[bench] could not write $path: ${Harness.causeChain(e)}")
+        }
+      save("docs/BENCH_LAST.json")
       // Per-core archive (r14, VERDICT r13 item 6): the driver re-runs the
       // bench at a lower core count AFTER its main run, which used to
       // clobber BENCH_LAST.json and lose the 32-core per-query map. A
       // core-count-suffixed copy preserves every map of the round.
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"docs/BENCH_LAST_c$cpus.json"),
-        full.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      save(s"docs/BENCH_LAST_c$cpus.json")
     }
     Harness.stop(spark)
   }

@@ -49,14 +49,39 @@ object Harness {
   final case class Job(id: Int, ms: Double, description: String)
 
   /** One leg: its wall time, its value or the throwable it raised, and the
-    * counters of the jobs and tasks that ran inside it. */
+    * counters of the jobs and tasks that ran inside it. `executorCpuNs` and
+    * `gcMs` sum the tasks' `executorCpuTime` and `jvmGCTime`. */
   final case class Leg[T](name: String, sec: Double, result: Either[Throwable, T],
       jobs: Seq[Job], tasks: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
-      spillMemBytes: Long, spillDiskBytes: Long, peakTaskMemBytes: Long) {
+      spillMemBytes: Long, spillDiskBytes: Long, peakTaskMemBytes: Long,
+      executorCpuNs: Long, gcMs: Long) {
     def error: Option[String] = result.left.toOption.map(causeChain)
     /** This leg, or the throwable its body raised. */
     def orThrow: Leg[T] = result.fold(e => throw e, _ => this)
+
+    /** This leg as one JSON line: `leg`, `sec`, `spill_mem_mb`,
+      * `spill_disk_mb`, `shuffle_write_mb`, `shuffle_read_mb`,
+      * `peak_task_mem_mb`, `tasks`, `executor_cpu_s`, `gc_s` and `jobs`
+      * (`id`, `ms`, `description`), plus `error` (the cause chain) for a
+      * failed leg. Numbers are rounded to 3 decimals. Jackson does the
+      * escaping and the number format, so neither depends on the locale. */
+    def row: String = {
+      def r(x: Double): Double = math.round(x * 1000) / 1000.0
+      def mb(bytes: Long): Double = r(bytes / 1048576.0)
+      val o = rowMapper.createObjectNode()
+        .put("leg", name).put("sec", r(sec))
+        .put("spill_mem_mb", mb(spillMemBytes)).put("spill_disk_mb", mb(spillDiskBytes))
+        .put("shuffle_write_mb", mb(shuffleWriteBytes)).put("shuffle_read_mb", mb(shuffleReadBytes))
+        .put("peak_task_mem_mb", mb(peakTaskMemBytes)).put("tasks", tasks)
+        .put("executor_cpu_s", r(executorCpuNs / 1e9)).put("gc_s", r(gcMs / 1e3))
+      val js = o.putArray("jobs")
+      jobs.foreach(j => js.addObject().put("id", j.id).put("ms", r(j.ms)).put("description", j.description))
+      error.foreach(e => o.put("error", e))
+      rowMapper.writeValueAsString(o)
+    }
   }
+
+  private val rowMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Run `body` as one leg. Before it, unless `gc` is off: an untimed
     * `System.gc()`, so a deferred collection of earlier legs' garbage
@@ -109,7 +134,7 @@ object Harness {
   private final class Meter extends SparkListener {
     private val starts = mutable.Map[Int, (Long, String)]()
     private val jobs = mutable.ArrayBuffer[Job]()
-    private var tasks, shuffleRead, shuffleWrite, spillMem, spillDisk, peakTaskMem = 0L
+    private var tasks, shuffleRead, shuffleWrite, spillMem, spillDisk, peakTaskMem, cpuNs, gcMs = 0L
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val desc = Option(e.properties)
@@ -131,17 +156,20 @@ object Harness {
         spillMem += m.memoryBytesSpilled
         spillDisk += m.diskBytesSpilled
         peakTaskMem = math.max(peakTaskMem, m.peakExecutionMemory)
+        cpuNs += m.executorCpuTime
+        gcMs += m.jvmGCTime
       }
     }
 
     def reset(): Unit = synchronized {
       starts.clear(); jobs.clear()
       tasks = 0; shuffleRead = 0; shuffleWrite = 0; spillMem = 0; spillDisk = 0; peakTaskMem = 0
+      cpuNs = 0; gcMs = 0
     }
 
     def leg[T](name: String, sec: Double, result: Either[Throwable, T]): Leg[T] = synchronized {
       Leg(name, sec, result, jobs.toList, tasks, shuffleRead, shuffleWrite,
-        spillMem, spillDisk, peakTaskMem)
+        spillMem, spillDisk, peakTaskMem, cpuNs, gcMs)
     }
   }
 }

@@ -309,8 +309,9 @@ object Derived {
         .repartition(32, col("sig"))
     }
 
-  /** The build legs Bench and Sf10Rehearsal time, in run order: a leg
-    * rebuilds its artifacts in sequence, after every leg it reads from. */
+  /** The build legs Bench times, in run order; `runMain graft.Bench
+    * <leg>` selects one by name. A leg rebuilds its artifacts in
+    * sequence, after every leg it reads from. */
   val buildLegs: Seq[(String, Seq[Artifact])] = Seq(
     "derived_build" -> Seq(coOrderPairCounts),
     "tri_build" -> Seq(triangleCounts),

@@ -953,7 +953,7 @@ object Graphs {
   def q334(spark: SparkSession, dir: String): DataFrame = {
     // q334 never constructs Catalog (it reads the Derived artifact), so
     // register the graft_* functions itself — idempotent; required by
-    // graft_hex32 in single-query sessions (JobProfile/PlanDump).
+    // graft_hex32 in single-query sessions (a one-leg Bench, PlanDump).
     graft.plans.GraftExtensions.registerRuntime(spark)
     // Deliberately NOT checkpointed: the md5 tag is row-local codegen
     // over the bucketed artifact scan, so each rate's filter pass costs
