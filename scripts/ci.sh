@@ -46,8 +46,9 @@ python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 
 # Leg rows: every leg of the full line (each query, each `*_build` key,
 # cpals, nnhals and tucker) must have printed exactly one error-free row,
-# and `scaling.py rows` must read them, so a renamed row key fails here
-# and not in a later sweep.
+# with `gc_s` no larger than `sec` and a non-empty `description` on every
+# job, and `scaling.py rows` must read them, so a renamed row key fails
+# here and not in a later sweep.
 python3 - "$BENCH_OUT" "$BENCH_RAW" <<'EOF'
 import collections, json, sys
 full = json.load(open(sys.argv[1]))
@@ -58,9 +59,13 @@ count = collections.Counter(row["leg"] for row in rows)
 bad = [f"{leg}: {count[leg]} rows" for leg in legs if count[leg] != 1]
 bad += [f"{leg}: a row for a leg not in the full line" for leg in count if leg not in legs]
 bad += [f"{row['leg']}: {row['error']}" for row in rows if "error" in row]
+bad += [f"{row['leg']}: gc_s {row['gc_s']} > sec {row['sec']}" for row in rows
+        if row["gc_s"] > row["sec"]]
+bad += [f"{row['leg']}: job {job['id']} has an empty description" for row in rows
+        for job in row["jobs"] if not job["description"]]
 if bad:
     sys.exit("bench rows:\n" + "\n".join(bad))
-print(f"bench rows: {len(rows)} legs, one error-free row each")
+print(f"bench rows: {len(rows)} legs, one error-free row each, gc_s <= sec, every job described")
 EOF
 python3 scripts/scaling.py rows "$BENCH_RAW"
 

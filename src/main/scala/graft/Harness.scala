@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.{GraftListenerBus, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -49,8 +50,13 @@ object Harness {
   final case class Job(id: Int, ms: Double, description: String)
 
   /** One leg: its wall time, its value or the throwable it raised, and the
-    * counters of the jobs and tasks that ran inside it. `executorCpuNs` and
-    * `gcMs` sum the tasks' `executorCpuTime` and `jvmGCTime`. */
+    * counters of the jobs and tasks that ran inside it. `executorCpuNs`
+    * sums the tasks' `executorCpuTime`; `gcMs` is the driver JVM's
+    * collection time over the timed body (in `local[N]` the tasks run in
+    * that JVM, and a per-task `jvmGCTime` sum would count one pause once
+    * per task running across it). A job's `description` is its
+    * `spark.job.description`, else its result stage's name (the call
+    * site, `<method> at <File>.scala:<line>`). */
   final case class Leg[T](name: String, sec: Double, result: Either[Throwable, T],
       jobs: Seq[Job], tasks: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
       spillMemBytes: Long, spillDiskBytes: Long, peakTaskMemBytes: Long,
@@ -102,9 +108,11 @@ object Harness {
     val before = sc.getPersistentRDDs.keySet
     val setup = attempt(GraftListenerBus.drain(sc))
     m.reset()
+    val gc0 = gcMillis()
     val t0 = System.nanoTime()
     val run = attempt(body)
     val sec = (System.nanoTime() - t0) / 1e9
+    val gcMs = gcMillis() - gc0
     val cleanup = attempt {
       GraftListenerBus.drain(sc)
       spark.catalog.clearCache()
@@ -112,8 +120,13 @@ object Harness {
         .filterNot { case (id, _) => before.contains(id) }
         .values.foreach(_.unpersist(blocking = false))
     }
-    m.leg(name, sec, for (v <- run; _ <- setup; _ <- cleanup) yield v)
+    m.leg(name, sec, gcMs, for (v <- run; _ <- setup; _ <- cleanup) yield v)
   }
+
+  /** The collection time this JVM's collectors report so far, in ms. */
+  private def gcMillis(): Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).filter(_ > 0).sum
 
   private def attempt[A](a: => A): Either[Throwable, A] =
     try Right(a) catch { case e: Throwable => Left(e) }
@@ -134,11 +147,13 @@ object Harness {
   private final class Meter extends SparkListener {
     private val starts = mutable.Map[Int, (Long, String)]()
     private val jobs = mutable.ArrayBuffer[Job]()
-    private var tasks, shuffleRead, shuffleWrite, spillMem, spillDisk, peakTaskMem, cpuNs, gcMs = 0L
+    private var tasks, shuffleRead, shuffleWrite, spillMem, spillDisk, peakTaskMem, cpuNs = 0L
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        .flatMap(p => Option(p.getProperty("spark.job.description"))).filter(_.nonEmpty)
+        .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
+        .getOrElse("")
       starts(e.jobId) = (System.nanoTime(), desc)
     }
 
@@ -157,17 +172,16 @@ object Harness {
         spillDisk += m.diskBytesSpilled
         peakTaskMem = math.max(peakTaskMem, m.peakExecutionMemory)
         cpuNs += m.executorCpuTime
-        gcMs += m.jvmGCTime
       }
     }
 
     def reset(): Unit = synchronized {
       starts.clear(); jobs.clear()
       tasks = 0; shuffleRead = 0; shuffleWrite = 0; spillMem = 0; spillDisk = 0; peakTaskMem = 0
-      cpuNs = 0; gcMs = 0
+      cpuNs = 0
     }
 
-    def leg[T](name: String, sec: Double, result: Either[Throwable, T]): Leg[T] = synchronized {
+    def leg[T](name: String, sec: Double, gcMs: Long, result: Either[Throwable, T]): Leg[T] = synchronized {
       Leg(name, sec, result, jobs.toList, tasks, shuffleRead, shuffleWrite,
         spillMem, spillDisk, peakTaskMem, cpuNs, gcMs)
     }

@@ -50,9 +50,19 @@ object Bpe {
         s"regexp_extract_all(lower($textCol), '[a-z]+', 0)")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
 
-  /** Wrap every character of a word as an individual token. */
+  /** Every character — every code point, since Java's `.` matches a
+    * whole surrogate pair — wrapped as an individual token, by the same
+    * regex replace Spark's `regexp_replace` and the local path run. */
+  private val CharPattern = "(.)"
+  private val CharWrap = s"$SOT$$1$EOT"
+
   private def charWrapped(wordCol: Column): Column =
-    regexp_replace(wordCol, "(.)", s"$SOT$$1$EOT")
+    regexp_replace(wordCol, CharPattern, CharWrap)
+
+  /** Spark's string order: UTF-8 bytes, unsigned — which is code point
+    * order, not the UTF-16 order of `String.compareTo`. */
+  private val Utf8Order: Ordering[String] = (x, y) =>
+    java.util.Arrays.compare(x.codePoints().toArray, y.codePoints().toArray)
 
   /** Token array of a wrapped symbol string. */
   private def toks(sCol: Column): Column =
@@ -76,9 +86,9 @@ object Bpe {
     * 51 jobs / 2.8 s for the 20-round gate, nearly all job-launch fixed
     * cost). When one count probe shows the word table inside
     * [[DriverBpeWordBudget]], collect it and replay the identical rounds
-    * locally — same weighted adjacent-pair counts, same (n DESC, a, b)
-    * lexicographic argmax (tokens are [a-z]+ so Java and UTF8 binary
-    * order agree), same left-to-right non-overlapping literal replace —
+    * locally — same code point tokens, same weighted adjacent-pair
+    * counts, same (n DESC, a, b) argmax in Spark's UTF-8 byte order, same
+    * left-to-right non-overlapping literal replace —
     * so the merge table is byte-identical (BpeSpec pins local ==
     * distributed with the distributed path forced via budget = 0).
     */
@@ -131,9 +141,10 @@ object Bpe {
 
   /** Driver-local replay of the identical merge rounds over a collected
     * (word, cnt) vocabulary. Semantics mirrored operation by operation:
-    * tokens = split(trim(s, SOT+EOT), EOT+SOT) with empties kept (Spark
-    * split keeps trailing empties), pair counts weighted by cnt, argmax
-    * = max n then lexicographically smallest (a, b), merge = literal
+    * the same code point wrap, tokens = split(trim(s, SOT+EOT), EOT+SOT)
+    * with empties kept (Spark split keeps trailing empties), pair counts
+    * weighted by cnt, argmax = max n then the smallest (a, b) in UTF-8
+    * byte order, merge = literal
     * left-to-right non-overlapping replace (String.replace == Spark
     * replace for literal patterns).
     */
@@ -153,7 +164,7 @@ object Bpe {
       s.substring(lo, hi).split(sep, -1)
     }
     var state: Array[(String, Long)] = rows.map { case (w, c) =>
-      (w.flatMap(ch => s"$SOT$ch$EOT"), c)
+      (w.replaceAll(CharPattern, CharWrap), c)
     }
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var step = 1
@@ -171,7 +182,8 @@ object Bpe {
       }
       if (counts.isEmpty) done = true
       else {
-        val ((a, b), n) = counts.minBy { case ((a, b), n) => (-n, a, b) }
+        val ((a, b), n) = counts.minBy { case ((a, b), n) => (-n, a, b) }(
+          Ordering.Tuple3(Ordering.Long, Utf8Order, Utf8Order))
         merges += ((step, a, b, n))
         val pattern = SOT + a + EOT + SOT + b + EOT
         val repl = SOT + a + b + EOT

@@ -3,7 +3,7 @@ package graft.tensor
 import scala.util.Random
 
 import breeze.linalg.{pinv, DenseMatrix}
-import org.apache.spark.TaskContext
+import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
@@ -16,7 +16,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Distribution layout (the PARAslice design, re-expressed Spark-first):
   *  - The COO tensor is partitioned along mode 1 into load-balanced slabs
-  *    ([[SlabPartitioner]]); each Spark partition holds one slab as
+  *    ([[SlabAssignment]]); Spark partition s holds slab s as
   *    fiber-compressed primitive arrays ([[Slab]]): nonzeros sorted by
   *    (row, j, k) with duplicate coordinates summed, so a pack of the same
   *    rows is the same slab whatever order the shuffle delivered them in,
@@ -47,10 +47,11 @@ import org.apache.spark.storage.StorageLevel
   *    bounds J·R and K·R, and packing fails loudly (with the remedy in
   *    the message) instead of OOMing the driver when a vocabulary-sized
   *    mode lands on 2/3.
-  *  - The slice→slab histogram is collected exactly only while I fits the
-  *    driver (`maxDriverSlices`); above that the partitioner switches to
-  *    [[SlabPartitioner.balancedSketched]] — top-k heavy slices + hashed
-  *    tail, O(k + numSlabs) driver state regardless of I.
+  *  - The slice histogram is collected whole only while I fits the driver
+  *    (`maxDriverSlices`); above that only its top k heavy slices are
+  *    LPT-placed and the tail is hashed — O(k + numSlabs) driver state
+  *    regardless of I. Either way [[pack]] builds one [[SlabAssignment]],
+  *    used once, map-side, by the slab shuffle.
   *
   * Scale notes: per iteration the driver receives every slab's partial:
   * numSlabs × (J·R + R²) doubles for mode 2 and numSlabs × K·R for mode 3
@@ -235,10 +236,19 @@ object CPALS {
   private[graft] val DefaultMaxDriverFactorElems: Long = 1L << 26
 
   /** Partition, pack, and persist the COO rows into fiber-compressed
-    * slabs. Reads `rows` twice: once for the per-slice histogram, which
-    * also yields the dims, and once for the slab shuffle. ‖X‖² is summed
-    * over the packed (duplicate-merged) values by the job that
-    * materializes the slabs. Fails loudly (with the remedy) when the
+    * slabs. Reads `rows` twice: once for the per-slice histogram, and once
+    * for the slab shuffle. Three jobs: one over the histogram for the dims
+    * and the per-residue loads (Σ nonzeros of the slices with
+    * i % numSlabs == s), one that fetches the slices to place — all of
+    * them while I ≤ `maxDriverSlices`, else the `maxDriverSlices` heaviest
+    * by a distributed bounded heap — and the one that materializes the
+    * slabs and sums ‖X‖² over their packed (duplicate-merged) values. The
+    * placed slices are LPT-assigned ([[SlabAssignment]]) onto slabs
+    * preloaded with the residue loads less the placed slices' share (zero
+    * when every slice is placed). The shuffle is keyed by slab id under a
+    * plain `HashPartitioner`, so partition s is slab s and the assignment
+    * lives only in the map-side function, which a task reading the slabs
+    * never deserializes. Fails loudly (with the remedy) when the
     * small-mode assumption J·R, K·R ≤ `maxDriverFactorElems` is violated —
     * the guard that turns a driver OOM into an actionable error, checked
     * before the slab shuffle.
@@ -255,10 +265,19 @@ object CPALS {
     val slices = rows
       .map { case (i, j, k, _) => (i, (1L, j, k)) }
       .reduceByKey((x, y) => (x._1 + y._1, x._2 max y._2, x._3 max y._3))
-    val (maxI, maxJ, maxK) = slices
-      .map { case (i, (_, j, k)) => (i, j, k) }
-      .fold((0L, 0L, 0L))((x, y) => (x._1 max y._1, x._2 max y._2, x._3 max y._3))
-    val (ni, nj, nk) = ((maxI + 1).toInt, (maxJ + 1).toInt, (maxK + 1).toInt)
+    // Max i, j, k, then the load of each residue s = i % numSlabs.
+    val summary = slices.aggregate(new Array[Long](3 + numSlabs))(
+      { case (acc, (i, (w, j, k))) =>
+        acc(0) = acc(0) max i; acc(1) = acc(1) max j; acc(2) = acc(2) max k
+        acc(3 + (i % numSlabs).toInt) += w
+        acc
+      },
+      { (x, y) =>
+        for (n <- 0 until 3) x(n) = x(n) max y(n)
+        for (n <- 3 until x.length) x(n) += y(n)
+        x
+      })
+    val (ni, nj, nk) = ((summary(0) + 1).toInt, (summary(1) + 1).toInt, (summary(2) + 1).toInt)
 
     // Small-mode guard: B (J×R) and C (K×R) are driver-resident by design
     // (mode 1 is the scale mode). A huge J or K silently breaks that
@@ -274,20 +293,21 @@ object CPALS {
     checkMode("3 (C)", nk)
 
     val sliceWeights = slices.mapValues(_._1)
-    val partitioner =
-      if (ni <= maxDriverSlices)
-        SlabPartitioner.balanced(sliceWeights.collect().toSeq, numSlabs)
-      else
-        SlabPartitioner.balancedSketched(sliceWeights, numSlabs, maxDriverSlices)
+    val placed =
+      if (ni <= maxDriverSlices) sliceWeights.collect()
+      else sliceWeights.top(maxDriverSlices)(Ordering.by { case (i, w) => (w, i) })
+    val loads = summary.drop(3)
+    placed.foreach { case (i, w) => loads((i % numSlabs).toInt) -= w }
+    val assignment = SlabAssignment.lpt(placed.toSeq, loads)
 
     // C13: slab-partitioned, fiber-compressed, persisted once.
     val slabRdd: RDD[Slab] = rows
-      .map { case (i, j, k, v) => (i, (j, k, v)) }
-      .partitionBy(partitioner)
+      .map { case (i, j, k, v) => (assignment.slabOf(i), (i, j, k, v)) }
+      .partitionBy(new HashPartitioner(numSlabs))
       .mapPartitions { it =>
         val is = Array.newBuilder[Int]; val js = Array.newBuilder[Int]
         val ks = Array.newBuilder[Int]; val vs = Array.newBuilder[Double]
-        it.foreach { case (i, (j, k, v)) =>
+        it.foreach { case (_, (i, j, k, v)) =>
           is += i.toInt; js += j.toInt; ks += k.toInt; vs += v
         }
         Iterator.single(Slab.of(is.result(), js.result(), ks.result(), vs.result()))

@@ -35,6 +35,19 @@ class BpeSpec extends SparkSpec {
     } finally { words.unpersist() }
   }
 
+  test("driver-local training equals the distributed loop on non-ASCII words") {
+    import spark.implicits._
+    // Astral (a surrogate pair in UTF-16) and fullwidth words tie on
+    // their pair counts: UTF-16 order puts U+1F600 first, UTF-8 byte
+    // order (Spark's) puts U+FF21 first.
+    val words = Seq(("😀😀", 5L), ("ＡＡ", 5L), ("éé", 3L), ("éß", 2L), ("ßa", 1L))
+      .toDF("word", "cnt")
+    val local = Bpe.train(words, 4)
+    val dist = Bpe.train(words, 4, budget = 0L)
+    assert(local == dist, s"local/distributed merge tables diverge:\n$local\nvs\n$dist")
+    assert(local.head == ((1, "Ａ", "Ａ", 5L)), local)
+  }
+
   test("segment o merges round-trips: concatenated subwords reproduce every word") {
     val c = Catalog(spark, sf("sf0.001"))
     val words = Bpe.wordTable(c.documents, "text").cache()

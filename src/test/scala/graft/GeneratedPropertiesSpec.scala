@@ -24,15 +24,15 @@ object GeneratedPropertiesSpec extends Properties("graft") {
       math.abs(viaAgg - xs.product) / xs.product < 1e-9
     }
 
-  property("SlabPartitioner: in-range assignment, LPT load bound") =
+  property("SlabAssignment.lpt: in-range assignment, LPT load bound") =
     Prop.forAll(
       Gen.nonEmptyListOf(Gen.zip(Gen.chooseNum(0L, 1000L), Gen.chooseNum(1L, 100L))),
       Gen.chooseNum(1, 16)) { (raw, slabs) =>
       val weights = raw.toMap.toSeq // dedupe slice ids
-      val p = graft.tensor.SlabPartitioner.balanced(weights, slabs)
+      val p = graft.tensor.SlabAssignment.lpt(weights, new Array[Long](slabs))
       val loads = new Array[Long](slabs)
       val inRange = weights.forall { case (i, w) =>
-        val s = p.getPartition(i)
+        val s = p.slabOf(i)
         if (s >= 0 && s < slabs) { loads(s) += w; true } else false
       }
       val ideal = weights.map(_._2).sum.toDouble / slabs

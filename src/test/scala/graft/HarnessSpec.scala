@@ -50,6 +50,23 @@ class HarnessSpec extends SparkSpec {
     assert(plain.shuffleWriteBytes == 0)
   }
 
+  test("gc_s counts a pause once, not once per task running across it") {
+    // 4 concurrent tasks in this JVM, each forcing collections: every
+    // task's jvmGCTime covers the pauses the others caused too.
+    val leg = Harness.leg(spark, "gc") {
+      spark.sparkContext.parallelize(0 until 4, 4).foreach(_ => (1 to 3).foreach(_ => System.gc()))
+    }
+    assert(leg.error.isEmpty, leg.error)
+    assert(leg.gcMs > 0)
+    assert(leg.gcMs / 1e3 <= leg.sec, s"gc_s ${leg.gcMs / 1e3} > sec ${leg.sec}")
+  }
+
+  test("a job without a set description is named by its call site") {
+    val leg = Harness.leg(spark, "count") { spark.range(1000).groupBy(col("id") % 7).count().count() }
+    assert(leg.jobs.nonEmpty)
+    leg.jobs.foreach(j => assert(j.description.contains(" at "), leg.jobs))
+  }
+
   test("a throw in the cleanup fails the leg, but never hides the body's") {
     // An RDD whose first unpersist throws, as the cleanup does once a body
     // has killed the context.

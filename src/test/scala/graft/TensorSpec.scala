@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 
 import graft.operators.EventTime
-import graft.tensor.{CPALS, NnHals, SlabPartitioner}
+import graft.tensor.{CPALS, NnHals, SlabAssignment}
 
 /** C12/C13/C14 property tests (SURVEY.md §5.3): exact recovery of a
   * synthetic rank-R tensor, monotone fit, slab load balance, and the
@@ -122,9 +123,9 @@ class TensorSpec extends SparkSpec {
     // One huge slice + many small ones: max slab load must be within
     // 4/3 of ideal (LPT bound), and far better than naive modulo.
     val weights = (0L until 64L).map(i => (i, if (i == 0) 1000L else 10L))
-    val p = SlabPartitioner.balanced(weights, 8)
+    val p = SlabAssignment.lpt(weights, Array.fill(8)(0L))
     val loads = Array.fill(8)(0L)
-    weights.foreach { case (i, w) => loads(p.getPartition(i)) += w }
+    weights.foreach { case (i, w) => loads(p.slabOf(i)) += w }
     // Always-valid greedy bound (see GeneratedPropertiesSpec): the
     // eventual max slab was least-loaded — at or below the mean — when it
     // received its final slice, so max ≤ ideal + largest.
@@ -142,10 +143,16 @@ class TensorSpec extends SparkSpec {
     // 4096 slices, far more than the sketch budget: 4 heavy outliers +
     // a uniform weight-2 tail. Only 64 heavy slices may reach the driver.
     val weights = (0L until 4096L).map(i => (i, if (i < 4L) 5000L else 2L))
-    val rdd = spark.sparkContext.parallelize(weights, 8)
-    val p = SlabPartitioner.balancedSketched(rdd, numSlabs = 8, maxHeavy = 64)
-    val loads = Array.fill(8)(0L)
-    weights.foreach { case (i, w) => loads(p.getPartition(i)) += w }
+    // w nonzeros at distinct coordinates per slice, so a slab's packed
+    // nonzero count is its load.
+    val rows = spark.sparkContext.parallelize(weights, 8).flatMap { case (i, w) =>
+      (0L until w).map(n => (i, n / 100, n % 100, 1.0))
+    }
+    val packed = CPALS.pack(rows, rank = 2, numSlabs = 8, maxDriverSlices = 64)
+    val slabs = try packed.slabRdd.map(s => (s.vs.length.toLong, s.localIs)).collect()
+      finally packed.unpersist()
+    val loads = slabs.map(_._1)
+    val slabOf = slabs.zipWithIndex.flatMap { case ((_, is), s) => is.map(_.toLong -> s) }.toMap
     // Greedy bound, sketched form: each heavy slice lands on the slab that
     // was lightest INCLUDING the hashed tail's preloads, so
     // max ≤ max(tail preload imbalance, ideal) + largest heavy slice.
@@ -159,8 +166,36 @@ class TensorSpec extends SparkSpec {
     assert(rest.max - rest.min <= largest, s"unbalanced rest: ${loads.mkString(",")}")
     // Bounded-memory path must agree with the exact path on which slabs
     // carry the outliers (both LPT the same heavy set).
-    assert((0L until 4L).map(p.getPartition).distinct.size == 4,
+    assert((0L until 4L).map(slabOf).distinct.size == 4,
       "heavy slices not spread across distinct slabs")
+  }
+
+  /** One nonzero per slice 0 until `ni`, in 4 partitions. */
+  private def oneNonzeroPerSlice(ni: Int): RDD[(Long, Long, Long, Double)] =
+    spark.sparkContext.parallelize(0 until ni, 4).map(i => (i.toLong, 0L, 0L, 1.0))
+
+  test("C13: a fit's tasks do not carry the slice assignment: the slab RDD's size is flat in I") {
+    // Every iteration task deserializes the slab RDD and its lineage up
+    // to the shuffle; the slice→slab assignment must stay map-side.
+    def serializedBytes(ni: Int): Int = {
+      val packed = CPALS.pack(oneNonzeroPerSlice(ni), rank = 4, numSlabs = 4)
+      try SparkEnv.get.closureSerializer.newInstance().serialize(packed.slabRdd).limit()
+      finally packed.unpersist()
+    }
+    val small = serializedBytes(128)
+    val large = serializedBytes(1 << 14)
+    assert(math.abs(large - small) <= 2048, s"$small B at 128 slices, $large B at 2^14")
+  }
+
+  test("C13: a pack runs 3 jobs, with every slice placed and with only the heaviest") {
+    for (maxDriverSlices <- Seq(1 << 20, 64)) {
+      val leg = Harness.leg(spark, "pack") {
+        CPALS.pack(oneNonzeroPerSlice(4096), rank = 2, numSlabs = 8,
+          maxDriverSlices = maxDriverSlices).unpersist()
+      }
+      assert(leg.error.isEmpty, leg.error)
+      assert(leg.jobs.size == 3, s"maxDriverSlices=$maxDriverSlices: ${leg.jobs}")
+    }
   }
 
   test("small-mode guard: J >> driver budget fails loudly, not with an OOM") {
@@ -175,13 +210,11 @@ class TensorSpec extends SparkSpec {
     assert(err.getMessage.contains("scale mode"), err.getMessage)
   }
 
-  test("fitBest packs the slab RDD once and shares it across starts") {
+  test("one pack serves several seeded fits") {
     val coo = syntheticCoo(8, 7, 6, 2, seed = 5)
     val sc = spark.sparkContext
-    val before = sc.statusTracker.getJobIdsForGroup(null).length
-    // Count shuffle-inducing pack jobs indirectly: pack() runs exactly one
-    // partitionBy + count() materialization. With 3 starts sharing one
-    // pack, the persisted-RDD count must be 1 (not 3) while fitting.
+    // pack() persists one slab RDD; three seeded fits read it and must
+    // leave it persisted under the same id.
     val packed = CPALS.pack(coo, rank = 2, numSlabs = 4)
     val persistedId = packed.slabRdd.id
     val m = (0 until 3)
@@ -194,7 +227,6 @@ class TensorSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.contains(persistedId),
       "shared slab RDD was unpersisted by a start")
     packed.unpersist()
-    val _ = before // silence unused warning on older scalac flags
   }
 
   test("Q43 COO feeds CP-ALS end-to-end and converges") {
