@@ -46,9 +46,10 @@ python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 
 # Leg rows: every leg of the full line (each query, each `*_build` key,
 # cpals, nnhals and tucker) must have printed exactly one error-free row,
-# with `gc_s` no larger than `sec` and a non-empty `description` on every
-# job, and `scaling.py rows` must read them, so a renamed row key fails
-# here and not in a later sweep.
+# with `gc_s` no larger than `sec`, and on every job a non-empty
+# `description` that names its query, not Spark's pool thread
+# (`CompletableFuture.java`); and `scaling.py rows` must read them, so a
+# renamed row key fails here and not in a later sweep.
 python3 - "$BENCH_OUT" "$BENCH_RAW" <<'EOF'
 import collections, json, sys
 full = json.load(open(sys.argv[1]))
@@ -63,9 +64,11 @@ bad += [f"{row['leg']}: gc_s {row['gc_s']} > sec {row['sec']}" for row in rows
         if row["gc_s"] > row["sec"]]
 bad += [f"{row['leg']}: job {job['id']} has an empty description" for row in rows
         for job in row["jobs"] if not job["description"]]
+bad += [f"{row['leg']}: job {job['id']} is named {job['description']!r}" for row in rows
+        for job in row["jobs"] if "CompletableFuture.java" in job["description"]]
 if bad:
     sys.exit("bench rows:\n" + "\n".join(bad))
-print(f"bench rows: {len(rows)} legs, one error-free row each, gc_s <= sec, every job described")
+print(f"bench rows: {len(rows)} legs, one error-free row each, gc_s <= sec, every job described by its query")
 EOF
 python3 scripts/scaling.py rows "$BENCH_RAW"
 

@@ -3,8 +3,10 @@ package graft
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.{GraftListenerBus, SparkContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** The tools' one way to a SparkSession and to a measured leg.
   *
@@ -55,8 +57,11 @@ object Harness {
     * collection time over the timed body (in `local[N]` the tasks run in
     * that JVM, and a per-task `jvmGCTime` sum would count one pause once
     * per task running across it). A job's `description` is its
-    * `spark.job.description`, else its result stage's name (the call
-    * site, `<method> at <File>.scala:<line>`). */
+    * `spark.job.description`; else, for a job of a SQL execution, the
+    * execution's description (the query's call site) and the plan
+    * operator that ran the job, `collect at Q.scala:12 (BroadcastExchange)`;
+    * else its result stage's name (the call site, `<method> at
+    * <File>.scala:<line>`). */
   final case class Leg[T](name: String, sec: Double, result: Either[Throwable, T],
       jobs: Seq[Job], tasks: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
       spillMemBytes: Long, spillDiskBytes: Long, peakTaskMemBytes: Long,
@@ -146,14 +151,36 @@ object Harness {
   /** Job wall times and task counters since the last `reset`. */
   private final class Meter extends SparkListener {
     private val starts = mutable.Map[Int, (Long, String)]()
+    /** The description of each running SQL execution, by execution id. */
+    private val sqlExecutions = mutable.Map[Long, String]()
     private val jobs = mutable.ArrayBuffer[Job]()
     private var tasks, shuffleRead, shuffleWrite, spillMem, spillDisk, peakTaskMem, cpuNs = 0L
 
+    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+      e match {
+        case s: SparkListenerSQLExecutionStart => sqlExecutions(s.executionId) = s.description
+        case s: SparkListenerSQLExecutionEnd => sqlExecutions.remove(s.executionId)
+        case _ =>
+      }
+    }
+
+    /** A SQL execution submits most of its jobs from Spark's pool threads
+      * (the broadcast exchange, adaptive query stages, the write), so
+      * their result stage's call site is `... at
+      * CompletableFuture.java:<line>`. Such a job is named by its
+      * execution's description (the query's call site) and by the plan
+      * operator that ran it (its RDD scope, such as `BroadcastExchange`),
+      * where it has one. */
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description"))).filter(_.nonEmpty)
-        .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
-        .getOrElse("")
+      def prop(key: String): Option[String] =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).filter(_.nonEmpty)
+      val site = e.stageInfos.maxByOption(_.stageId).map(_.name)
+      val operator = prop("spark.rdd.scope")
+        .flatMap(json => scala.util.Try(rowMapper.readTree(json).path("name").asText("")).toOption)
+        .filter(_.nonEmpty)
+      val sql = prop("spark.sql.execution.id").flatMap(_.toLongOption).flatMap(sqlExecutions.get)
+        .map(query => query + operator.fold("")(op => s" ($op)"))
+      val desc = prop("spark.job.description").orElse(sql).orElse(site).getOrElse("")
       starts(e.jobId) = (System.nanoTime(), desc)
     }
 

@@ -51,7 +51,9 @@ import org.apache.spark.storage.StorageLevel
   *    (`maxDriverSlices`); above that only its top k heavy slices are
   *    LPT-placed and the tail is hashed — O(k + numSlabs) driver state
   *    regardless of I. Either way [[pack]] builds one [[SlabAssignment]],
-  *    used once, map-side, by the slab shuffle.
+  *    used once, map-side, by the slab shuffle. That shuffle moves
+  *    column blocks — up to 2¹⁶ of one slab's nonzeros as primitive
+  *    arrays per record — not one boxed record per nonzero.
   *
   * Scale notes: per iteration the driver receives every slab's partial:
   * numSlabs × (J·R + R²) doubles for mode 2 and numSlabs × K·R for mode 3
@@ -245,13 +247,19 @@ object CPALS {
     * slabs and sums ‖X‖² over their packed (duplicate-merged) values. The
     * placed slices are LPT-assigned ([[SlabAssignment]]) onto slabs
     * preloaded with the residue loads less the placed slices' share (zero
-    * when every slice is placed). The shuffle is keyed by slab id under a
-    * plain `HashPartitioner`, so partition s is slab s and the assignment
-    * lives only in the map-side function, which a task reading the slabs
-    * never deserializes. Fails loudly (with the remedy) when the
-    * small-mode assumption J·R, K·R ≤ `maxDriverFactorElems` is violated —
-    * the guard that turns a driver OOM into an actionable error, checked
-    * before the slab shuffle.
+    * when every slice is placed). Each map task of the slab shuffle fills
+    * per-slab primitive columns and emits them as (slab, [[Block]])
+    * records of up to [[BlockSize]] nonzeros ([[slabBlocks]]): about
+    * nnz / 2¹⁶ records, plus at most numSlabs per source partition, where
+    * one record per nonzero would be nnz. The reduce side joins a slab's
+    * blocks and sorts them into its layout ([[Slab.of]]), so the slabs do
+    * not depend on the order the blocks arrive in. The shuffle is keyed
+    * by slab id under a plain `HashPartitioner`, so partition s is slab s
+    * and the assignment lives only in the map-side function, which a task
+    * reading the slabs never deserializes. Fails loudly (with the remedy)
+    * when the small-mode assumption J·R, K·R ≤ `maxDriverFactorElems` is
+    * violated — the guard that turns a driver OOM into an actionable
+    * error, checked before the slab shuffle.
     */
   private[graft] def pack(
       rows: RDD[(Long, Long, Long, Double)],
@@ -300,21 +308,76 @@ object CPALS {
     placed.foreach { case (i, w) => loads((i % numSlabs).toInt) -= w }
     val assignment = SlabAssignment.lpt(placed.toSeq, loads)
 
-    // C13: slab-partitioned, fiber-compressed, persisted once.
+    // C13: slab-partitioned, fiber-compressed, persisted once. The
+    // shuffle's records are column blocks ([[slabBlocks]]).
     val slabRdd: RDD[Slab] = rows
-      .map { case (i, j, k, v) => (assignment.slabOf(i), (i, j, k, v)) }
+      .mapPartitions(slabBlocks(assignment, numSlabs))
       .partitionBy(new HashPartitioner(numSlabs))
-      .mapPartitions { it =>
-        val is = Array.newBuilder[Int]; val js = Array.newBuilder[Int]
-        val ks = Array.newBuilder[Int]; val vs = Array.newBuilder[Double]
-        it.foreach { case (_, (i, j, k, v)) =>
-          is += i.toInt; js += j.toInt; ks += k.toInt; vs += v
-        }
-        Iterator.single(Slab.of(is.result(), js.result(), ks.result(), vs.result()))
-      }
+      .mapPartitions(joinBlocks)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val normX2 = sumSlabPartials(slabRdd, SlabNormX2, 1)(0)
     PackedTensor(slabRdd, ni, nj, nk, normX2)
+  }
+
+  /** Nonzeros bound for one slab, as columns: the record of [[pack]]'s
+    * slab shuffle. */
+  private final case class Block(is: Array[Int], js: Array[Int], ks: Array[Int], vs: Array[Double])
+
+  /** The most nonzeros a [[Block]] holds: 2¹⁶, 1.25 MB of columns. */
+  private[graft] val BlockSize = 1 << 16
+
+  /** A map task's nonzeros as (slab, [[Block]]) records. Each slab's
+    * nonzeros fill a buffer of their own, which is emitted as a block as
+    * soon as it holds [[BlockSize]]; once the input ends, every slab's
+    * partly filled buffer follows. A task holds at most one buffer per
+    * slab, whatever the size of its partition, and emits at most
+    * ⌈its nonzeros / BlockSize⌉ + numSlabs records.
+    */
+  private def slabBlocks(assignment: SlabAssignment, numSlabs: Int)(
+      rows: Iterator[(Long, Long, Long, Double)]): Iterator[(Int, Block)] = {
+    import java.util.Arrays.copyOf
+    val is, js, ks = Array.fill(numSlabs)(Array.emptyIntArray)
+    val vs = Array.fill(numSlabs)(Array.emptyDoubleArray)
+    val fill = new Array[Int](numSlabs)
+
+    // Doubles slab s's buffer, from 1,024 nonzeros up to BlockSize.
+    def grow(s: Int): Unit = {
+      val cap = math.max(1024, 2 * vs(s).length)
+      is(s) = copyOf(is(s), cap); js(s) = copyOf(js(s), cap); ks(s) = copyOf(ks(s), cap)
+      vs(s) = copyOf(vs(s), cap)
+    }
+    // Slab s's buffered nonzeros as a block of their own; the buffer is
+    // emptied for reuse.
+    def emit(s: Int): (Int, Block) = {
+      val n = fill(s); fill(s) = 0
+      (s, Block(copyOf(is(s), n), copyOf(js(s), n), copyOf(ks(s), n), copyOf(vs(s), n)))
+    }
+
+    rows.flatMap { case (i, j, k, v) =>
+      val s = assignment.slabOf(i); val n = fill(s)
+      if (n == vs(s).length) grow(s)
+      is(s)(n) = i.toInt; js(s)(n) = j.toInt; ks(s)(n) = k.toInt; vs(s)(n) = v
+      fill(s) = n + 1
+      if (n + 1 == BlockSize) Some(emit(s)) else None
+    } ++ Iterator.range(0, numSlabs).filter(fill(_) > 0).map(emit)
+  }
+
+  /** One slab's blocks, in whatever order the shuffle delivers them,
+    * joined into one set of columns and packed by [[Slab.of]], whose
+    * layout does not depend on that order. */
+  private def joinBlocks(blocks: Iterator[(Int, Block)]): Iterator[Slab] = {
+    val bs = blocks.map(_._2).toArray
+    val n = bs.iterator.map(_.vs.length).sum
+    val is, js, ks = new Array[Int](n)
+    val vs = new Array[Double](n)
+    var at = 0
+    for (b <- bs) {
+      val len = b.vs.length
+      System.arraycopy(b.is, 0, is, at, len); System.arraycopy(b.js, 0, js, at, len)
+      System.arraycopy(b.ks, 0, ks, at, len); System.arraycopy(b.vs, 0, vs, at, len)
+      at += len
+    }
+    Iterator.single(Slab.of(is, js, ks, vs))
   }
 
   // ---- The update rules ----
@@ -573,24 +636,29 @@ object CPALS {
   }
 
   /** t(tOff + p) = Σ v·f(fOff + k·R + p) over the nonzeros [n0, n1) of
-    * one fiber, for every rank p. Four ranks at a time are summed in
+    * one fiber, for every rank p. Eight ranks at a time are summed in
     * registers, so a nonzero costs one multiply-add per rank and no
-    * store; the last R mod 4 ranks go one at a time.
+    * store; the last R mod 8 ranks go one at a time. Each rank adds its
+    * nonzeros in fiber order whatever the blocking.
     */
   private def sumFiber(
       ks: Array[Int], vs: Array[Double], n0: Int, n1: Int,
       f: Array[Double], fOff: Int, t: Array[Double], tOff: Int, r: Int): Unit = {
     var p = 0
-    while (p + 4 <= r) {
+    while (p + 8 <= r) {
       var t0 = 0.0; var t1 = 0.0; var t2 = 0.0; var t3 = 0.0
+      var t4 = 0.0; var t5 = 0.0; var t6 = 0.0; var t7 = 0.0
       var n = n0
       while (n < n1) {
         val v = vs(n); val c = fOff + ks(n) * r + p
         t0 += v * f(c); t1 += v * f(c + 1); t2 += v * f(c + 2); t3 += v * f(c + 3)
+        t4 += v * f(c + 4); t5 += v * f(c + 5); t6 += v * f(c + 6); t7 += v * f(c + 7)
         n += 1
       }
-      t(tOff + p) = t0; t(tOff + p + 1) = t1; t(tOff + p + 2) = t2; t(tOff + p + 3) = t3
-      p += 4
+      val o = tOff + p
+      t(o) = t0; t(o + 1) = t1; t(o + 2) = t2; t(o + 3) = t3
+      t(o + 4) = t4; t(o + 5) = t5; t(o + 6) = t6; t(o + 7) = t7
+      p += 8
     }
     while (p < r) {
       var sum = 0.0; var n = n0
@@ -601,22 +669,24 @@ object CPALS {
   }
 
   /** acc(k·R + p) += v·w(p) over the nonzeros [n0, n1) of one fiber, for
-    * every rank p: four ranks of w at a time held in registers, then the
-    * last R mod 4 one at a time.
+    * every rank p: eight ranks of w at a time held in registers, then the
+    * last R mod 8 one at a time.
     */
   private def scatterFiber(
       ks: Array[Int], vs: Array[Double], n0: Int, n1: Int,
       w: Array[Double], acc: Array[Double], r: Int): Unit = {
     var p = 0
-    while (p + 4 <= r) {
+    while (p + 8 <= r) {
       val w0 = w(p); val w1 = w(p + 1); val w2 = w(p + 2); val w3 = w(p + 3)
+      val w4 = w(p + 4); val w5 = w(p + 5); val w6 = w(p + 6); val w7 = w(p + 7)
       var n = n0
       while (n < n1) {
         val v = vs(n); val k = ks(n) * r + p
         acc(k) += v * w0; acc(k + 1) += v * w1; acc(k + 2) += v * w2; acc(k + 3) += v * w3
+        acc(k + 4) += v * w4; acc(k + 5) += v * w5; acc(k + 6) += v * w6; acc(k + 7) += v * w7
         n += 1
       }
-      p += 4
+      p += 8
     }
     while (p < r) {
       val wp = w(p); var n = n0

@@ -202,13 +202,19 @@ object Tucker {
       .rdd.map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      require(!rdd.isEmpty(), "Tucker.hosvd/hooi: the COO tensor is empty")
-      val (di, dj, dk) = {
-        val (mi, mj, mk) = rdd
-          .map { case (i, j, k, _) => (i, j, k) }
-          .reduce((a, b) => (math.max(a._1, b._1), math.max(a._2, b._2), math.max(a._3, b._3)))
-        (mi + 1, mj + 1, mk + 1)
-      }
+      // One job sizes the input: (nonzeros, max i, max j, max k).
+      val size = rdd.aggregate(Array(0L, -1L, -1L, -1L))(
+        { case (acc, (i, j, k, _)) =>
+          acc(0) += 1; acc(1) = acc(1) max i; acc(2) = acc(2) max j; acc(3) = acc(3) max k
+          acc
+        },
+        { (x, y) =>
+          x(0) += y(0); for (n <- 1 to 3) x(n) = x(n) max y(n)
+          x
+        })
+      val nnz = size(0)
+      require(nnz > 0, "Tucker.hosvd/hooi: the COO tensor is empty")
+      val (di, dj, dk) = ((size(1) + 1).toInt, (size(2) + 1).toInt, (size(3) + 1).toInt)
       val (r1, r2, r3) = ranks
       require(r1 >= 1 && r1 <= di && r2 >= 1 && r2 <= dj && r3 >= 1 && r3 <= dk,
         s"ranks $ranks out of range for dims ($di,$dj,$dk)")
@@ -223,7 +229,6 @@ object Tucker {
       // partition) and cap at the core count; the per-fiber outer
       // products still parallelize across whatever partitions remain,
       // and at corpus scale the count climbs back to defaultParallelism.
-      val nnz = rdd.count()
       val gramParts = math.max(2, math.min(
         rdd.sparkContext.defaultParallelism.toLong, nnz / 200000L + 1)).toInt
 

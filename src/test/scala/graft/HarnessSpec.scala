@@ -67,6 +67,21 @@ class HarnessSpec extends SparkSpec {
     leg.jobs.foreach(j => assert(j.description.contains(" at "), leg.jobs))
   }
 
+  test("a broadcast join's jobs are named by their query, not by Spark's pool thread") {
+    import org.apache.spark.sql.functions.broadcast
+    val leg = Harness.leg(spark, "broadcast join") {
+      val small = spark.range(100).toDF("y")
+      spark.range(1000).toDF("x").join(broadcast(small), col("x") === col("y"))
+        .groupBy(col("x") % 3).count().collect()
+    }
+    assert(leg.error.isEmpty, leg.error)
+    assert(leg.jobs.exists(_.description.contains("BroadcastExchange")), leg.jobs)
+    leg.jobs.foreach { j =>
+      assert(!j.description.contains("CompletableFuture.java"), leg.jobs)
+      assert(j.description.contains("HarnessSpec.scala"), leg.jobs)
+    }
+  }
+
   test("a throw in the cleanup fails the leg, but never hides the body's") {
     // An RDD whose first unpersist throws, as the cleanup does once a body
     // has killed the context.

@@ -198,6 +198,68 @@ class TensorSpec extends SparkSpec {
     }
   }
 
+  /** 200,000 nonzeros over 5 slices, 150,000 distinct coordinates (every
+    * coordinate below 50,000 comes twice, with two values), in `parts`
+    * partitions, in reverse order if `reversed`. Each nonzero is a
+    * function of its index alone, so every variant holds the same rows. */
+  private def blockRows(parts: Int, reversed: Boolean = false): RDD[(Long, Long, Long, Double)] = {
+    val idx = 0 until 200000
+    spark.sparkContext.parallelize(if (reversed) idx.reverse else idx, parts).map { n =>
+      val c = n % 150000
+      ((c % 5).toLong, (c / 5 % 100).toLong, (c / 500).toLong, (n * 2654435761L % 1000) / 7.0 - 50.0)
+    }
+  }
+
+  test("C13: the slab shuffle moves column blocks, not one record per nonzero") {
+    // Records written by the slab shuffle's map stage: the one holding the
+    // map-side parent of the slab RDD's ShuffledRDD.
+    val (parts, numSlabs, nnz) = (3, 4, 200000)
+    val written = scala.collection.mutable.Map[Int, (Seq[Int], Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        written.synchronized {
+          written(e.stageInfo.stageId) = (e.stageInfo.rddInfos.map(_.id),
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (mapSide, records) =
+      try {
+        val packed = CPALS.pack(blockRows(parts), rank = 2, numSlabs = numSlabs)
+        try {
+          org.apache.spark.GraftListenerBus.drain(sc)
+          val mapSide = packed.slabRdd.dependencies.head.rdd.dependencies.head.rdd.id
+          (mapSide, written.synchronized(written.values.collect { case (ids, n) if ids.contains(mapSide) => n }.sum))
+        } finally packed.unpersist()
+      } finally sc.removeSparkListener(listener)
+    val bound = parts * numSlabs + (nnz + CPALS.BlockSize - 1) / CPALS.BlockSize
+    assert(records > 0 && records <= bound,
+      s"the slab shuffle (map side RDD $mapSide) wrote $records records for $nnz nonzeros; bound $bound")
+  }
+
+  test("C13: every slab array is the same however the rows are partitioned and ordered") {
+    // 2 slabs of 80,000 and 120,000 rows: as 1 partition each slab is more
+    // than one block; as 7 partitions each is a block from every partition.
+    def slabs(rows: RDD[(Long, Long, Long, Double)]) = {
+      val packed = CPALS.pack(rows, rank = 2, numSlabs = 2)
+      try (packed.slabRdd.collect().toSeq, packed.normX2) finally packed.unpersist()
+    }
+    def bits(s: CPALS.Slab): Seq[Seq[Long]] =
+      Seq(s.localIs, s.rowPtr, s.fiberJ, s.fiberPtr, s.ks).map(_.toSeq.map(_.toLong)) :+
+        s.vs.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val (want, wantNorm) = slabs(blockRows(7))
+    assert(want.map(_.vs.length).sum == 150000, "duplicate coordinates are summed")
+    // A third of the coordinates come twice, so a slab's rows are 4/3 of
+    // its packed nonzeros.
+    assert(want.forall(_.vs.length * 4 / 3 > CPALS.BlockSize), want.map(_.vs.length))
+    for ((name, rows) <- Seq("1 partition" -> blockRows(1), "1 partition, reversed" -> blockRows(1, reversed = true))) {
+      val (got, norm) = slabs(rows)
+      assert(got.map(bits) == want.map(bits), name)
+      assert(java.lang.Double.doubleToRawLongBits(norm) == java.lang.Double.doubleToRawLongBits(wantNorm), name)
+    }
+  }
+
   test("small-mode guard: J >> driver budget fails loudly, not with an OOM") {
     // A tensor whose mode-2 extent would put a multi-GB factor on the
     // driver must be rejected at pack time with the remedy in the message.
@@ -387,39 +449,43 @@ class TensorSpec extends SparkSpec {
 
     // The first ALS iteration against a dense driver-side reference: B
     // then C drawn from Random(seed), A from zeros, explicit residual.
-    val (ni, r, seed) = (7, 5, 5L)
+    // Rank 5 runs the single-rank path only; rank 13 is an 8-rank block
+    // and five singles.
+    val (ni, seed) = (7, 5L)
     val x = Array.ofDim[Double](ni, nj, nk)
     coo.foreach { case (i, j, k, v) => x(i.toInt)(j.toInt)(k.toInt) += v }
-    val init = new scala.util.Random(seed)
-    val b = Array.fill(nj, r)(init.nextGaussian())
-    val c = Array.fill(nk, r)(init.nextGaussian())
-    val a = Array.ofDim[Double](ni, r)
-    import breeze.linalg.{pinv, DenseMatrix}
-    def gram(f: Array[Array[Double]]) =
-      DenseMatrix.tabulate(r, r)((p, q) => f.map(row => row(p) * row(q)).sum)
-    // f ← M·pinv(G1∘G2), M(row, p) = Σ x · u(·, p) · w(·, p) over the other two modes.
-    def solve(f: Array[Array[Double]], g1: DenseMatrix[Double], g2: DenseMatrix[Double])(
-        m: (Int, Int) => Double): Unit = {
-      val s = pinv(g1 *:* g2)
-      for (row <- f.indices; q <- 0 until r)
-        f(row)(q) = (0 until r).map(p => m(row, p) * s(p, q)).sum
-    }
-    def sum3(f: (Int, Int, Int) => Double) =
-      (for (i <- 0 until ni; j <- 0 until nj; k <- 0 until nk) yield f(i, j, k)).sum
-    solve(a, gram(b), gram(c))((i, p) =>
-      (for (j <- 0 until nj; k <- 0 until nk) yield x(i)(j)(k) * b(j)(p) * c(k)(p)).sum)
-    solve(b, gram(a), gram(c))((j, p) =>
-      (for (i <- 0 until ni; k <- 0 until nk) yield x(i)(j)(k) * a(i)(p) * c(k)(p)).sum)
-    solve(c, gram(a), gram(b))((k, p) =>
-      (for (i <- 0 until ni; j <- 0 until nj) yield x(i)(j)(k) * a(i)(p) * b(j)(p)).sum)
-    val resid2 = sum3 { (i, j, k) =>
-      val d = x(i)(j)(k) - (0 until r).map(p => a(i)(p) * b(j)(p) * c(k)(p)).sum
-      d * d
-    }
-    val want = 1.0 - math.sqrt(resid2 / sum3((i, j, k) => x(i)(j)(k) * x(i)(j)(k)))
-    for (slabs <- Seq(1, 3, 8)) {
-      val got = withPacked(rdd, r, slabs)(CPALS.fitPacked(_, r, seed, 0.0, 1)).fits.head
-      assert(math.abs(got - want) <= 1e-9, s"$slabs slabs: first fit $got, dense reference $want")
+    for (r <- Seq(5, 13)) {
+      val init = new scala.util.Random(seed)
+      val b = Array.fill(nj, r)(init.nextGaussian())
+      val c = Array.fill(nk, r)(init.nextGaussian())
+      val a = Array.ofDim[Double](ni, r)
+      import breeze.linalg.{pinv, DenseMatrix}
+      def gram(f: Array[Array[Double]]) =
+        DenseMatrix.tabulate(r, r)((p, q) => f.map(row => row(p) * row(q)).sum)
+      // f ← M·pinv(G1∘G2), M(row, p) = Σ x · u(·, p) · w(·, p) over the other two modes.
+      def solve(f: Array[Array[Double]], g1: DenseMatrix[Double], g2: DenseMatrix[Double])(
+          m: (Int, Int) => Double): Unit = {
+        val s = pinv(g1 *:* g2)
+        for (row <- f.indices; q <- 0 until r)
+          f(row)(q) = (0 until r).map(p => m(row, p) * s(p, q)).sum
+      }
+      def sum3(f: (Int, Int, Int) => Double) =
+        (for (i <- 0 until ni; j <- 0 until nj; k <- 0 until nk) yield f(i, j, k)).sum
+      solve(a, gram(b), gram(c))((i, p) =>
+        (for (j <- 0 until nj; k <- 0 until nk) yield x(i)(j)(k) * b(j)(p) * c(k)(p)).sum)
+      solve(b, gram(a), gram(c))((j, p) =>
+        (for (i <- 0 until ni; k <- 0 until nk) yield x(i)(j)(k) * a(i)(p) * c(k)(p)).sum)
+      solve(c, gram(a), gram(b))((k, p) =>
+        (for (i <- 0 until ni; j <- 0 until nj) yield x(i)(j)(k) * a(i)(p) * b(j)(p)).sum)
+      val resid2 = sum3 { (i, j, k) =>
+        val d = x(i)(j)(k) - (0 until r).map(p => a(i)(p) * b(j)(p) * c(k)(p)).sum
+        d * d
+      }
+      val want = 1.0 - math.sqrt(resid2 / sum3((i, j, k) => x(i)(j)(k) * x(i)(j)(k)))
+      for (slabs <- Seq(1, 3, 8)) {
+        val got = withPacked(rdd, r, slabs)(CPALS.fitPacked(_, r, seed, 0.0, 1)).fits.head
+        assert(math.abs(got - want) <= 1e-9, s"rank $r, $slabs slabs: first fit $got, dense reference $want")
+      }
     }
   }
 

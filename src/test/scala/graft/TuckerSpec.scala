@@ -135,6 +135,14 @@ class TuckerSpec extends SparkSpec {
     assert(math.abs(first.fit - exact.fit) <= 1e-9, s"Lanczos ${first.fit} vs exact ${exact.fit}")
   }
 
+  test("one job sizes the input; an empty tensor still fails with its message") {
+    val empty = intercept[IllegalArgumentException](Tucker.hosvd(cooDf(Seq.empty), (1, 1, 1)))
+    assert(empty.getMessage.contains("Tucker.hosvd/hooi: the COO tensor is empty"), empty.getMessage)
+    // One sizing job, then a Gram per mode and the core.
+    val leg = Harness.leg(spark, "hosvd")(Tucker.hosvd(cooDf(entries), (3, 3, 3))).orThrow
+    assert(leg.jobs.size == 1 + 3 + 1, leg.jobs)
+  }
+
   test("factors are orthonormal in every mode") {
     val m = Tucker.hosvd(cooDf(entries), (3, 3, 3))
     m.factors.foreach { basis =>
