@@ -48,7 +48,8 @@ python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 # cpals, nnhals and tucker) must have printed exactly one error-free row,
 # with `gc_s` no larger than `sec`, and on every job a non-empty
 # `description` that names its query, not Spark's pool thread
-# (`CompletableFuture.java`); and `scaling.py rows` must read them, so a
+# (`CompletableFuture.java`), and a `tucker` row whose `fallbacks` (Lanczos
+# solves that dsyev answered) is 0; and `scaling.py rows` must read them, so a
 # renamed row key fails here and not in a later sweep.
 python3 - "$BENCH_OUT" "$BENCH_RAW" <<'EOF'
 import collections, json, sys
@@ -66,9 +67,11 @@ bad += [f"{row['leg']}: job {job['id']} has an empty description" for row in row
         for job in row["jobs"] if not job["description"]]
 bad += [f"{row['leg']}: job {job['id']} is named {job['description']!r}" for row in rows
         for job in row["jobs"] if "CompletableFuture.java" in job["description"]]
+bad += [f"tucker: fallbacks {row.get('fallbacks')}" for row in rows
+        if row["leg"] == "tucker" and "error" not in row and row.get("fallbacks") != 0]
 if bad:
     sys.exit("bench rows:\n" + "\n".join(bad))
-print(f"bench rows: {len(rows)} legs, one error-free row each, gc_s <= sec, every job described by its query")
+print(f"bench rows: {len(rows)} legs, one error-free row each, gc_s <= sec, every job described by its query, no Tucker fallback")
 EOF
 python3 scripts/scaling.py rows "$BENCH_RAW"
 

@@ -24,8 +24,10 @@ object Bench {
   private def d(pattern: String, v: Double): String =
     String.format(java.util.Locale.ROOT, pattern, Double.box(v))
 
-  /** One tensor leg's fit: wall seconds, iterations and final fit. */
-  private final case class TensorFit(sec: Double, iters: Int, fit: Double)
+  /** One tensor leg's fit: wall seconds, iterations and final fit, plus
+    * the fields its row adds (Tucker's Lanczos `fallbacks`). */
+  private final case class TensorFit(sec: Double, iters: Int, fit: Double,
+      rowFields: Seq[(String, Long)] = Nil)
 
   /** The CP legs' fit of the Q43 tensor: `cpals` (CP-ALS) or `nnhals`
     * (nonnegative CP via HALS; the Q43 values are sums of nonnegative
@@ -178,7 +180,12 @@ object Bench {
     // Tensor legs on the Q43 events tensor, one run each. None when not
     // selected or failed.
     def tensorLeg(leg: String)(fit: => TensorFit): Option[TensorFit] =
-      if (!selected(leg)) None else report(run(leg)(fit)).result.toOption
+      if (!selected(leg)) None
+      else {
+        val l = run(leg)(fit)
+        println(l.rowWith(l.result.fold(_ => Nil, _.rowFields): _*))
+        l.result.toOption
+      }
     def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
     // CP-ALS and NN-HALS (see cpFit), timed from after the Q43 tensor's
@@ -205,7 +212,7 @@ object Bench {
         math.min(16, dims.getLong(2).toInt + 1))
       val t0 = System.nanoTime()
       val m = tensor.Tucker.hosvd(coo, ranks)
-      TensorFit(since(t0), 1, m.fit)
+      TensorFit(since(t0), 1, m.fit, Seq("fallbacks" -> m.fallbacks.toLong))
     }
 
     // The driver's bench artifact retains only a ~2000-char stdout tail

@@ -74,9 +74,11 @@ object Harness {
       * `spill_disk_mb`, `shuffle_write_mb`, `shuffle_read_mb`,
       * `peak_task_mem_mb`, `tasks`, `executor_cpu_s`, `gc_s` and `jobs`
       * (`id`, `ms`, `description`), plus `error` (the cause chain) for a
-      * failed leg. Numbers are rounded to 3 decimals. Jackson does the
-      * escaping and the number format, so neither depends on the locale. */
-    def row: String = {
+      * failed leg, then `extra`'s fields. Numbers are rounded to 3
+      * decimals. Jackson does the escaping and the number format, so
+      * neither depends on the locale. */
+    def row: String = rowWith()
+    def rowWith(extra: (String, Long)*): String = {
       def r(x: Double): Double = math.round(x * 1000) / 1000.0
       def mb(bytes: Long): Double = r(bytes / 1048576.0)
       val o = rowMapper.createObjectNode()
@@ -88,6 +90,7 @@ object Harness {
       val js = o.putArray("jobs")
       jobs.foreach(j => js.addObject().put("id", j.id).put("ms", r(j.ms)).put("description", j.description))
       error.foreach(e => o.put("error", e))
+      extra.foreach { case (k, v) => o.put(k, v) }
       rowMapper.writeValueAsString(o)
     }
   }

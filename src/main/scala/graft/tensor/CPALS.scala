@@ -207,6 +207,14 @@ object CPALS {
   private[tensor] def fitCoo(
       coo: DataFrame, rank: Int, seed: Long, tol: Double, maxIter: Int,
       numSlabs: Int, rule: UpdateRule): CPModel = {
+    val packed = packCoo(coo, rank, numSlabs)
+    try fitPacked(packed, rank, seed, tol, maxIter, rule)
+    finally packed.unpersist()
+  }
+
+  /** [[pack]] of a COO DataFrame with columns (i,j,k,v) into `numSlabs`
+    * slabs, or one per core (at least 2) when `numSlabs` is 0. */
+  private[tensor] def packCoo(coo: DataFrame, width: Int, numSlabs: Int): PackedTensor = {
     import org.apache.spark.sql.functions.col
     val rows: RDD[(Long, Long, Long, Double)] = coo
       .select(col("i").cast("long"), col("j").cast("long"), col("k").cast("long"),
@@ -215,9 +223,7 @@ object CPALS {
     val slabs =
       if (numSlabs > 0) numSlabs
       else math.max(2, coo.sparkSession.sparkContext.defaultParallelism)
-    val packed = pack(rows, rank, slabs)
-    try fitPacked(packed, rank, seed, tol, maxIter, rule)
-    finally packed.unpersist()
+    pack(rows, width, slabs)
   }
 
   /** The packed, persisted slab tensor — everything a seeded fit needs,
@@ -227,7 +233,9 @@ object CPALS {
   private[graft] final case class PackedTensor(
       slabRdd: RDD[Slab],
       ni: Int, nj: Int, nk: Int,
-      normX2: Double) {
+      normX2: Double,
+      /** Nonzeros of the source rows, before duplicate coordinates are summed. */
+      nnz: Long) {
     def unpersist(): Unit = slabRdd.unpersist(blocking = false)
   }
 
@@ -244,8 +252,10 @@ object CPALS {
     * i % numSlabs == s), one that fetches the slices to place — all of
     * them while I ≤ `maxDriverSlices`, else the `maxDriverSlices` heaviest
     * by a distributed bounded heap — and the one that materializes the
-    * slabs and sums ‖X‖² over their packed (duplicate-merged) values. The
-    * placed slices are LPT-assigned ([[SlabAssignment]]) onto slabs
+    * slabs and sums ‖X‖² over their packed (duplicate-merged) values. Each
+    * map task of the histogram counts its nonzeros per slice in primitive
+    * arrays ([[sliceHistogram]]) and emits one record per distinct slice.
+    * The placed slices are LPT-assigned ([[SlabAssignment]]) onto slabs
     * preloaded with the residue loads less the placed slices' share (zero
     * when every slice is placed). Each map task of the slab shuffle fills
     * per-slab primitive columns and emits them as (slab, [[Block]])
@@ -257,22 +267,27 @@ object CPALS {
     * by slab id under a plain `HashPartitioner`, so partition s is slab s
     * and the assignment lives only in the map-side function, which a task
     * reading the slabs never deserializes. Fails loudly (with the remedy)
-    * when the small-mode assumption J·R, K·R ≤ `maxDriverFactorElems` is
-    * violated — the guard that turns a driver OOM into an actionable
-    * error, checked before the slab shuffle.
+    * when the small-mode assumption J·W, K·W ≤ `maxDriverFactorElems` is
+    * violated, W being `width`, the widest factor the caller keeps on the
+    * driver for modes 2 and 3 (the CP rank; Tucker's larger mode-2/3
+    * rank) — the guard that turns a driver OOM into an actionable error,
+    * checked before the slab shuffle.
     */
   private[graft] def pack(
       rows: RDD[(Long, Long, Long, Double)],
-      rank: Int,
+      width: Int,
       numSlabs: Int,
       maxDriverSlices: Int = 1 << 20,
       maxDriverFactorElems: Long = DefaultMaxDriverFactorElems): PackedTensor = {
     // Per slice: (nonzeros, max j, max k). The slice histogram stays
     // distributed; only a bounded summary reaches the driver once I
-    // outgrows `maxDriverSlices`.
+    // outgrows `maxDriverSlices`. A map task's records are already one per
+    // slice, so they are merged on the reduce side only, into numSlabs
+    // partitions.
     val slices = rows
-      .map { case (i, j, k, _) => (i, (1L, j, k)) }
-      .reduceByKey((x, y) => (x._1 + y._1, x._2 max y._2, x._3 max y._3))
+      .mapPartitions(sliceHistogram)
+      .combineByKeyWithClassTag[(Long, Long, Long)]((c: (Long, Long, Long)) => c, mergeCounts,
+        mergeCounts, new HashPartitioner(numSlabs), mapSideCombine = false)
     // Max i, j, k, then the load of each residue s = i % numSlabs.
     val summary = slices.aggregate(new Array[Long](3 + numSlabs))(
       { case (acc, (i, (w, j, k))) =>
@@ -287,24 +302,25 @@ object CPALS {
       })
     val (ni, nj, nk) = ((summary(0) + 1).toInt, (summary(1) + 1).toInt, (summary(2) + 1).toInt)
 
-    // Small-mode guard: B (J×R) and C (K×R) are driver-resident by design
-    // (mode 1 is the scale mode). A huge J or K silently breaks that
-    // assumption — fail with the fix, not an OOM mid-iteration.
-    def checkMode(name: String, dim: Int): Unit =
-      require(dim.toLong * rank <= maxDriverFactorElems,
-        s"CP-ALS mode-$name factor ($dim rows × rank $rank = " +
-          s"${dim.toLong * rank} elements) exceeds the driver budget of " +
+    // Small-mode guard: the mode-2 and mode-3 factors are driver-resident
+    // by design (mode 1 is the scale mode). A huge J or K silently breaks
+    // that assumption — fail with the fix, not an OOM mid-iteration.
+    def checkMode(mode: Int, dim: Int): Unit =
+      require(dim.toLong * width <= maxDriverFactorElems,
+        s"mode-$mode factor ($dim rows × width $width = " +
+          s"${dim.toLong * width} elements) exceeds the driver budget of " +
           s"$maxDriverFactorElems. Mode 1 is the distributed scale mode: " +
           "pass the largest mode as column i, reduce the rank, or raise " +
           "maxDriverFactorElems if the driver truly has room.")
-    checkMode("2 (B)", nj)
-    checkMode("3 (C)", nk)
+    checkMode(2, nj)
+    checkMode(3, nk)
 
     val sliceWeights = slices.mapValues(_._1)
     val placed =
       if (ni <= maxDriverSlices) sliceWeights.collect()
       else sliceWeights.top(maxDriverSlices)(Ordering.by { case (i, w) => (w, i) })
     val loads = summary.drop(3)
+    val nnz = loads.sum
     placed.foreach { case (i, w) => loads((i % numSlabs).toInt) -= w }
     val assignment = SlabAssignment.lpt(placed.toSeq, loads)
 
@@ -316,7 +332,45 @@ object CPALS {
       .mapPartitions(joinBlocks)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val normX2 = sumSlabPartials(slabRdd, SlabNormX2, 1)(0)
-    PackedTensor(slabRdd, ni, nj, nk, normX2)
+    PackedTensor(slabRdd, ni, nj, nk, normX2, nnz)
+  }
+
+  private val mergeCounts = (x: (Long, Long, Long), y: (Long, Long, Long)) =>
+    (x._1 + y._1, x._2 max y._2, x._3 max y._3)
+
+  /** A map task's slice histogram: one (i, (nonzeros, max j, max k))
+    * record per distinct slice i of its partition, counted in primitive
+    * arrays by open addressing on i, so no record is made per nonzero. */
+  private def sliceHistogram(
+      rows: Iterator[(Long, Long, Long, Double)]): Iterator[(Long, (Long, Long, Long))] = {
+    val Free = Long.MinValue
+    var ids = Array.fill(1024)(Free)
+    var w, mj, mk = new Array[Long](1024)
+    var size = 0
+    // The slot of slice i in a table of ids.length slots, a power of two.
+    def slot(i: Long): Int = {
+      val mask = ids.length - 1
+      var s = java.lang.Long.hashCode(i * 0x9E3779B97F4A7C15L) & mask
+      while (ids(s) != Free && ids(s) != i) s = (s + 1) & mask
+      s
+    }
+    // Doubles the table, keeping it at most half full.
+    def grow(): Unit = {
+      val (oldIds, oldW, oldJ, oldK) = (ids, w, mj, mk)
+      ids = Array.fill(2 * oldIds.length)(Free)
+      w = new Array[Long](ids.length); mj = new Array[Long](ids.length); mk = new Array[Long](ids.length)
+      for (o <- oldIds.indices if oldIds(o) != Free) {
+        val s = slot(oldIds(o))
+        ids(s) = oldIds(o); w(s) = oldW(o); mj(s) = oldJ(o); mk(s) = oldK(o)
+      }
+    }
+    rows.foreach { case (i, j, k, _) =>
+      if (2 * (size + 1) > ids.length) grow()
+      val s = slot(i)
+      if (ids(s) == Free) { ids(s) = i; size += 1 }
+      w(s) += 1; mj(s) = mj(s) max j; mk(s) = mk(s) max k
+    }
+    Iterator.range(0, ids.length).filter(ids(_) != Free).map(s => (ids(s), (w(s), mj(s), mk(s))))
   }
 
   /** Nonzeros bound for one slab, as columns: the record of [[pack]]'s
@@ -452,7 +506,7 @@ object CPALS {
       tol: Double,
       maxIter: Int,
       rule: UpdateRule = AlsRule()): CPModel = {
-    val PackedTensor(slabRdd, ni, nj, nk, normX2) = packed
+    val PackedTensor(slabRdd, ni, nj, nk, normX2, _) = packed
     val sc = slabRdd.sparkContext
     val r = rank
     def flat(m: DenseMatrix[Double]): Array[Double] = Array.tabulate(r * r)(n => m(n / r, n % r))
@@ -641,7 +695,7 @@ object CPALS {
     * store; the last R mod 8 ranks go one at a time. Each rank adds its
     * nonzeros in fiber order whatever the blocking.
     */
-  private def sumFiber(
+  private[tensor] def sumFiber(
       ks: Array[Int], vs: Array[Double], n0: Int, n1: Int,
       f: Array[Double], fOff: Int, t: Array[Double], tOff: Int, r: Int): Unit = {
     var p = 0
@@ -672,7 +726,7 @@ object CPALS {
     * every rank p: eight ranks of w at a time held in registers, then the
     * last R mod 8 one at a time.
     */
-  private def scatterFiber(
+  private[tensor] def scatterFiber(
       ks: Array[Int], vs: Array[Double], n0: Int, n1: Int,
       w: Array[Double], acc: Array[Double], r: Int): Unit = {
     var p = 0
@@ -739,7 +793,7 @@ object CPALS {
     * order is the partition order whatever order the tasks finish in, and
     * a seeded fit over one packed tensor is bit-reproducible.
     */
-  private def sumSlabPartials[T](
+  private[tensor] def sumSlabPartials[T](
       slabs: RDD[T], partial: (TaskContext, Iterator[T]) => Array[Double], len: Int): Array[Double] = {
     val numSlabs = slabs.getNumPartitions
     val sum = new Array[Double](len)

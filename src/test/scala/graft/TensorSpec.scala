@@ -148,7 +148,7 @@ class TensorSpec extends SparkSpec {
     val rows = spark.sparkContext.parallelize(weights, 8).flatMap { case (i, w) =>
       (0L until w).map(n => (i, n / 100, n % 100, 1.0))
     }
-    val packed = CPALS.pack(rows, rank = 2, numSlabs = 8, maxDriverSlices = 64)
+    val packed = CPALS.pack(rows, width = 2, numSlabs = 8, maxDriverSlices = 64)
     val slabs = try packed.slabRdd.map(s => (s.vs.length.toLong, s.localIs)).collect()
       finally packed.unpersist()
     val loads = slabs.map(_._1)
@@ -178,7 +178,7 @@ class TensorSpec extends SparkSpec {
     // Every iteration task deserializes the slab RDD and its lineage up
     // to the shuffle; the slice→slab assignment must stay map-side.
     def serializedBytes(ni: Int): Int = {
-      val packed = CPALS.pack(oneNonzeroPerSlice(ni), rank = 4, numSlabs = 4)
+      val packed = CPALS.pack(oneNonzeroPerSlice(ni), width = 4, numSlabs = 4)
       try SparkEnv.get.closureSerializer.newInstance().serialize(packed.slabRdd).limit()
       finally packed.unpersist()
     }
@@ -190,7 +190,7 @@ class TensorSpec extends SparkSpec {
   test("C13: a pack runs 3 jobs, with every slice placed and with only the heaviest") {
     for (maxDriverSlices <- Seq(1 << 20, 64)) {
       val leg = Harness.leg(spark, "pack") {
-        CPALS.pack(oneNonzeroPerSlice(4096), rank = 2, numSlabs = 8,
+        CPALS.pack(oneNonzeroPerSlice(4096), width = 2, numSlabs = 8,
           maxDriverSlices = maxDriverSlices).unpersist()
       }
       assert(leg.error.isEmpty, leg.error)
@@ -226,7 +226,7 @@ class TensorSpec extends SparkSpec {
     sc.addSparkListener(listener)
     val (mapSide, records) =
       try {
-        val packed = CPALS.pack(blockRows(parts), rank = 2, numSlabs = numSlabs)
+        val packed = CPALS.pack(blockRows(parts), width = 2, numSlabs = numSlabs)
         try {
           org.apache.spark.GraftListenerBus.drain(sc)
           val mapSide = packed.slabRdd.dependencies.head.rdd.dependencies.head.rdd.id
@@ -242,7 +242,7 @@ class TensorSpec extends SparkSpec {
     // 2 slabs of 80,000 and 120,000 rows: as 1 partition each slab is more
     // than one block; as 7 partitions each is a block from every partition.
     def slabs(rows: RDD[(Long, Long, Long, Double)]) = {
-      val packed = CPALS.pack(rows, rank = 2, numSlabs = 2)
+      val packed = CPALS.pack(rows, width = 2, numSlabs = 2)
       try (packed.slabRdd.collect().toSeq, packed.normX2) finally packed.unpersist()
     }
     def bits(s: CPALS.Slab): Seq[Seq[Long]] =
@@ -266,7 +266,7 @@ class TensorSpec extends SparkSpec {
     val rows = spark.sparkContext.parallelize(
       Seq((0L, 0L, 0L, 1.0), (1L, 5000L, 1L, 2.0)), 2)
     val err = intercept[IllegalArgumentException] {
-      CPALS.pack(rows, rank = 4, numSlabs = 2, maxDriverFactorElems = 1000L)
+      CPALS.pack(rows, width = 4, numSlabs = 2, maxDriverFactorElems = 1000L)
     }
     assert(err.getMessage.contains("mode-2"), err.getMessage)
     assert(err.getMessage.contains("scale mode"), err.getMessage)
@@ -277,7 +277,7 @@ class TensorSpec extends SparkSpec {
     val sc = spark.sparkContext
     // pack() persists one slab RDD; three seeded fits read it and must
     // leave it persisted under the same id.
-    val packed = CPALS.pack(coo, rank = 2, numSlabs = 4)
+    val packed = CPALS.pack(coo, width = 2, numSlabs = 4)
     val persistedId = packed.slabRdd.id
     val m = (0 until 3)
       .map(s => CPALS.fitPacked(packed, 2, seed = 40 + s, tol = 1e-9, maxIter = 30))
@@ -376,7 +376,7 @@ class TensorSpec extends SparkSpec {
     // Each iteration also makes 2 explicit broadcasts (B, C and the
     // A-solve matrix as one array, then the updated B) and, per job, one
     // of its task binary. Broadcast ids count up by one per broadcast.
-    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 21), rank = 2, numSlabs = 8)
+    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 21), width = 2, numSlabs = 8)
     def nextBroadcastId(): Long = { val b = spark.sparkContext.broadcast(()); b.destroy(); b.id }
     try packedFits.foreach { case (name, fit) =>
       def leg(iters: Int) = {
@@ -398,7 +398,7 @@ class TensorSpec extends SparkSpec {
   }
 
   test("CP-ALS and NN-HALS: a seeded fit over one packed tensor is bit-reproducible") {
-    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 22), rank = 2, numSlabs = 8)
+    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 22), width = 2, numSlabs = 8)
     try packedFits.foreach { case (name, fit) =>
       assertSameBits(name, fit(packed, 9L, 6), fit(packed, 9L, 6))
     } finally packed.unpersist()

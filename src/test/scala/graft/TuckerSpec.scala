@@ -6,8 +6,9 @@ import graft.tensor.Tucker
 
 /** Tucker/HOSVD properties: orthonormal factors, exact reconstruction at
   * full ranks, energy monotonicity in rank, the fit identity checked
-  * against an explicit dense reconstruction, and the Lanczos eigensolver
-  * on both sides of its exact fallback.
+  * against an explicit dense reconstruction, duplicate coordinates summed,
+  * a rank-deficient mode 1, and the Lanczos eigensolver on both sides of
+  * its exact fallback.
   */
 class TuckerSpec extends SparkSpec {
 
@@ -66,24 +67,23 @@ class TuckerSpec extends SparkSpec {
     u.map(_.toSeq).toSeq == v.map(_.toSeq).toSeq
 
   test("Lanczos eig path matches the exact dsyev fit and subspace at d > 512") {
-    // Mode-0 dim 600 > the 512 exact fence, so the default run takes the
-    // ARPACK Lanczos path while exactEigDim = 1024 forces full dsyev on
-    // the identical Gram.
+    // Mode 1's Gram is its J·K side, 30 × 20 = 600 > the 512 exact fence,
+    // so the default run takes the ARPACK Lanczos path while
+    // exactEigDim = 1024 forces full dsyev on the identical Gram.
     val rnd = new scala.util.Random(31)
     val big = for {
-      i <- 0 until 600; j <- 0 until 6; k <- 0 until 5
+      i <- 0 until 40; j <- 0 until 30; k <- 0 until 20
       if rnd.nextDouble() < 0.1
     } yield (i, j, k, math.rint(rnd.nextDouble() * 100) / 10.0)
     val df = cooDf(big)
     val lanczos = Tucker.hosvd(df, (4, 3, 3))
     val exact = Tucker.hosvd(df, (4, 3, 3), exactEigDim = 1024)
+    assert(lanczos.fallbacks == 0, "the 600-dimensional solve fell back to dsyev")
     assert(lanczos.fit >= 0.0 && exact.fit >= 0.0)
-    assert(math.abs(lanczos.fit - exact.fit) <= 1e-4,
-      s"Lanczos fit ${lanczos.fit} vs exact ${exact.fit}")
     assert(math.abs(lanczos.fit - exact.fit) <= 1e-9,
       s"Lanczos fit ${lanczos.fit} vs exact ${exact.fit}")
     val ov = overlap(lanczos.factors(0), exact.factors(0))
-    assert(ov >= 4 - 1e-8, s"mode-0 subspace overlap $ov of 4")
+    assert(ov >= 4 - 1e-8, s"mode-1 subspace overlap $ov of 4")
   }
 
   test("Lanczos solver matches eigSym when it converges and falls back loudly when capped") {
@@ -122,25 +122,65 @@ class TuckerSpec extends SparkSpec {
     concurrent.zipWithIndex.foreach { case ((v, _), x) =>
       assert(same(v, sequential(x % 2)._1), s"concurrent solve $x differs")
     }
-    // hosvd: two modes above the 512 exact fence solve concurrently. The
-    // Grams come from Spark reduces whose merge order may move their last
-    // bits, so factors are compared to 1e-12 rather than bit for bit.
+    // hosvd: two Grams above the 512 exact fence, mode 1's J·K side (1,560)
+    // and mode 2 (520). Each call packs the rows afresh and sums every
+    // partial in slab order, so two calls agree bit for bit.
     val df = cooDf(plantedSparse((600, 520, 3), fill = 0.02, seed = 5))
     val first = Tucker.hosvd(df, (3, 3, 2))
     val second = Tucker.hosvd(df, (3, 3, 2))
-    for (m <- 0 until 3; (u, v) <- first.factors(m).zip(second.factors(m)))
-      assert(u.zip(v).forall { case (p, q) => math.abs(p - q) <= 1e-12 },
-        s"mode-$m factors differ between calls")
+    assert(first.fallbacks == 0 && second.fallbacks == 0)
+    for (m <- 0 until 3) assert(same(first.factors(m), second.factors(m)), s"mode-${m + 1} factors differ")
+    assert(first.core.toSeq == second.core.toSeq, "cores differ")
+    assert(first.fit == second.fit)
     val exact = Tucker.hosvd(df, (3, 3, 2), exactEigDim = 1024)
     assert(math.abs(first.fit - exact.fit) <= 1e-9, s"Lanczos ${first.fit} vs exact ${exact.fit}")
+  }
+
+  test("fallbacks counts a Lanczos-band solve that dsyev answered") {
+    // Mode 2 is 520 wide, in the Lanczos band, but r2 = 300 leaves ARPACK
+    // no room (ncv would reach d), so dsyev answers it; mode 1's J·K side
+    // (520) converges under Lanczos at r1 = 1.
+    val rnd = new scala.util.Random(41)
+    val df = cooDf(for (i <- 0 until 2; j <- 0 until 520) yield (i, j, 0, 1.0 + rnd.nextInt(9)))
+    val forced = Tucker.hosvd(df, (1, 300, 1))
+    assert(forced.fallbacks == 1, forced.fallbacks)
+    val exact = Tucker.hosvd(df, (1, 300, 1), exactEigDim = 1024)
+    assert(exact.fallbacks == 0)
+    assert(math.abs(forced.fit - exact.fit) <= 1e-9, s"${forced.fit} vs ${exact.fit}")
   }
 
   test("one job sizes the input; an empty tensor still fails with its message") {
     val empty = intercept[IllegalArgumentException](Tucker.hosvd(cooDf(Seq.empty), (1, 1, 1)))
     assert(empty.getMessage.contains("Tucker.hosvd/hooi: the COO tensor is empty"), empty.getMessage)
-    // One sizing job, then a Gram per mode and the core.
+    // The pack's 3 jobs (the first sizes the input), then one job for the
+    // three Grams and one for mode 1's rows and the core.
     val leg = Harness.leg(spark, "hosvd")(Tucker.hosvd(cooDf(entries), (3, 3, 3))).orThrow
-    assert(leg.jobs.size == 1 + 3 + 1, leg.jobs)
+    assert(leg.jobs.size == 3 + 2, leg.jobs)
+  }
+
+  test("a coordinate given twice is summed: halves give the same normX, fit and core") {
+    val halves = entries.flatMap { case (i, j, k, v) => Seq((i, j, k, v / 2), (i, j, k, v / 2)) }
+    val whole = Tucker.hosvd(cooDf(entries), (3, 2, 2))
+    val split = Tucker.hosvd(cooDf(halves), (3, 2, 2))
+    assert(math.abs(split.normX - whole.normX) <= 1e-12, s"normX ${split.normX} vs ${whole.normX}")
+    assert(math.abs(split.fit - whole.fit) <= 1e-12, s"fit ${split.fit} vs ${whole.fit}")
+    assert(split.core.zip(whole.core).forall { case (p, q) => math.abs(p - q) <= 1e-12 },
+      s"core ${split.core.toSeq} vs ${whole.core.toSeq}")
+  }
+
+  test("rank-deficient mode 1: two identical slices at r1 = I keep orthonormal factors") {
+    // Slice 7 repeats slice 0, so X₍₁₎ has rank 7 and one of the 8
+    // requested mode-1 singular values is 0.
+    val twin = entries.filter(_._1 != 7) ++ entries.filter(_._1 == 0).map(e => e.copy(_1 = 7))
+    val m = Tucker.hosvd(cooDf(twin), (8, 3, 3))
+    for (basis <- m.factors; a <- basis.indices; b <- basis.indices) {
+      val dot = basis(a).zip(basis(b)).map { case (x, y) => x * y }.sum
+      assert(math.abs(dot - (if (a == b) 1.0 else 0.0)) < 1e-9, s"U($a)·U($b) = $dot")
+    }
+    assert(m.factors(0).forall(_.forall(!_.isNaN)))
+    // U₁ spans all of R⁸, so the fit is the (3, 3) fit of modes 2 and 3 alone.
+    val full = Tucker.hosvd(cooDf(twin), (7, 3, 3))
+    assert(math.abs(m.fit - full.fit) <= 1e-9, s"fit ${m.fit} at r1 = 8 vs ${full.fit} at r1 = 7")
   }
 
   test("factors are orthonormal in every mode") {
