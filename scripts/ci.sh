@@ -48,11 +48,14 @@ python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 # cpals, nnhals and tucker) must have printed exactly one error-free row,
 # with `gc_s` no larger than `sec`, and on every job a non-empty
 # `description` that names its query, not Spark's pool thread
-# (`CompletableFuture.java`), and a `tucker` row whose `fallbacks` (Lanczos
-# solves that dsyev answered) is 0; and `scaling.py rows` must read them, so a
-# renamed row key fails here and not in a later sweep.
+# (`CompletableFuture.java`), a `tucker` row whose `fallbacks` (Lanczos
+# solves that dsyev answered) is 0, and `cpals` and `nnhals` rows with at most
+# 4 jobs described by a bare `CPALS.scala` call site (the pack's 3 and the
+# fit's one; the Q43 query's jobs carry their plan operator as well); and
+# `scaling.py rows` must read them, so a renamed row key fails here and not in
+# a later sweep.
 python3 - "$BENCH_OUT" "$BENCH_RAW" <<'EOF'
-import collections, json, sys
+import collections, json, re, sys
 full = json.load(open(sys.argv[1]))
 legs = (list(full["queries"]) + [k for k in full if k.endswith("_build")]
         + ["cpals", "nnhals", "tucker"])
@@ -69,11 +72,31 @@ bad += [f"{row['leg']}: job {job['id']} is named {job['description']!r}" for row
         for job in row["jobs"] if "CompletableFuture.java" in job["description"]]
 bad += [f"tucker: fallbacks {row.get('fallbacks')}" for row in rows
         if row["leg"] == "tucker" and "error" not in row and row.get("fallbacks") != 0]
+for row in rows:
+    cp_jobs = [job["description"] for job in row["jobs"]
+               if re.fullmatch(r"\S+ at CPALS\.scala:\d+", job["description"])]
+    if row["leg"] in ("cpals", "nnhals") and len(cp_jobs) > 4:
+        bad.append(f"{row['leg']}: {len(cp_jobs)} CPALS.scala jobs (pack 3 + fit 1): {cp_jobs}")
 if bad:
     sys.exit("bench rows:\n" + "\n".join(bad))
-print(f"bench rows: {len(rows)} legs, one error-free row each, gc_s <= sec, every job described by its query, no Tucker fallback")
+print(f"bench rows: {len(rows)} legs, one error-free row each, gc_s <= sec, every job described by its query, no Tucker fallback, one job per CP fit")
 EOF
 python3 scripts/scaling.py rows "$BENCH_RAW"
+
+# A subset run that selects no build leg still prints a full line and a
+# summary line that parse as JSON.
+SUBSET_RAW=$(mktemp /tmp/graft-ci-subset.XXXXXX.log)
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt -batch "runMain graft.Bench cpals nnhals tucker" \
+  > "$SUBSET_RAW"
+python3 - "$SUBSET_RAW" <<'EOF'
+import json, sys
+lines = [line for line in open(sys.argv[1]) if line.startswith('{"metric"')]
+if len(lines) != 2:
+    sys.exit(f"bench subset: {len(lines)} total lines, want the full and the summary line")
+for line in lines:
+    json.loads(line)
+print("bench subset: full and summary lines parse as JSON")
+EOF
 
 # Benchmark build and tensor fits: perfbench compiles against the engine's
 # private[graft] tensor API, so a signature change fails here and not first

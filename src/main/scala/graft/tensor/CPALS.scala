@@ -1,10 +1,11 @@
 package graft.tensor
 
+import scala.concurrent.{Await, ExecutionContext}
+import scala.concurrent.duration.Duration
 import scala.util.Random
 
 import breeze.linalg.{pinv, DenseMatrix}
-import org.apache.spark.{HashPartitioner, TaskContext}
-import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.{GraftSlabExchange, HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
@@ -21,26 +22,31 @@ import org.apache.spark.storage.StorageLevel
   *    (row, j, k) with duplicate coordinates summed, so a pack of the same
   *    rows is the same slab whatever order the shuffle delivered them in,
   *    and a seeded fit is bit-identical across packs.
+  *  - A fit is ONE Spark job: one task per slab, launched in barrier mode
+  *    so that all of them run at once (nothing calls `barrier()` or
+  *    `allGather`), so numSlabs must not exceed the session's task slots.
+  *    Each task trades partials and factors with the driver over a small
+  *    RPC endpoint ([[GraftSlabExchange]]), twice per iteration: no
+  *    broadcast, no persisted state and no job per iteration.
   *  - Mode 1 is the scale mode: factor A (I×R) NEVER visits the driver
   *    during the loop. Each slab owns its i-rows exclusively, so the
-  *    A-update is row-local: a row's MTTKRP × the broadcast R×R solve
-  *    matrix, persisted beside the slab as one primitive array. AᵀA (R×R
-  *    per slab) rides in the mode-2 MTTKRP's partial, and A is collected
-  *    exactly once, after convergence, to build the returned model (at
-  *    true scale the caller would keep it as a relation; the loop itself
-  *    never needs it centralized).
+  *    A-update is row-local: a row's MTTKRP × the R×R solve matrix, kept
+  *    in the slab's task as one primitive array for the whole fit. AᵀA
+  *    (R×R per slab) rides in the mode-2 MTTKRP's partial, and A comes back
+  *    once, as the job's result, to build the returned model (at true
+  *    scale the caller would keep it as a relation; the loop itself never
+  *    needs it centralized).
   *  - B (J×R), C (K×R) are driver-resident (modes 2/3 are the small
   *    modes in the slab design); each slab's J×R / K×R MTTKRP partial is
   *    sent to the driver, which sums them in slab order; the R×R Gram
   *    solves (Hadamard of Gramians, pseudo-inverted via breeze) happen on
-  *    the driver too. Per iteration: 2 passes over the nonzeros, each one
-  *    single-stage job with no shuffle at any slab count, and 2
-  *    broadcasts. Job 1 reads B, C and the R×R A-solve matrix from one
-  *    broadcast and fuses the A update with the mode-2 MTTKRP: per fiber
+  *    the driver too. Per iteration: 2 passes over the nonzeros, each
+  *    ending in one exchange. Pass 1 reads B, C and the R×R A-solve
+  *    matrix and fuses the A update with the mode-2 MTTKRP: per fiber
   *    (i, j) it sums t = Σ_k v·c_k once, which serves both a_i's MTTKRP
-  *    row and, after the row's update, mode-2 row j. Job 2 reads the
-  *    updated B from the second broadcast for the mode-3 MTTKRP, one
-  *    w = a_i∘b_j per fiber. Either way one multiply-add per rank per
+  *    row and, after the row's update, mode-2 row j. Pass 2 reads the
+  *    updated B, the answer to pass 1's exchange, for the mode-3 MTTKRP,
+  *    one w = a_i∘b_j per fiber. Either way one multiply-add per rank per
   *    nonzero. Every function a task runs is a named object, not a lambda
   *    (see [[OnePerSlab]]).
   *    The small-mode assumption is ENFORCED: `maxDriverFactorElems`
@@ -58,12 +64,15 @@ import org.apache.spark.storage.StorageLevel
   * Scale notes: per iteration the driver receives every slab's partial:
   * numSlabs × (J·R + R²) doubles for mode 2 and numSlabs × K·R for mode 3
   * (a tree reduction above 5 slabs would send about √numSlabs of each,
-  * at the price of a shuffle). Every caller uses one slab per core, so
-  * numSlabs is the core count. The driver adds each partial into one
-  * running sum and drops it, holding at most the partials that arrive
-  * ahead of a slower lower-numbered slab. The tensor is read from the
-  * persisted slab RDD and A from its per-slab state. Nothing
-  * driver-side grows with I or nnz.
+  * at the price of a shuffle). It answers each slab: numSlabs copies of B
+  * after mode 2, and numSlabs copies of B, C and the A-solve matrix after
+  * mode 3, where a broadcast would send one copy per executor but cost a
+  * job per iteration to read. Every caller uses one slab per task slot, so numSlabs is the core
+  * count, and a fit of more slabs than task slots fails before it starts.
+  * The driver sums the partials of one exchange once all have arrived,
+  * holding numSlabs of them. The tensor is read from the persisted slab
+  * RDD and A stays in the slab tasks. Nothing driver-side grows with I or
+  * nnz.
   *
   * One loop, [[fitPacked]], serves both CP fits: an [[UpdateRule]]
   * supplies only the init and the per-row factor update — the ALS pinv
@@ -213,17 +222,15 @@ object CPALS {
   }
 
   /** [[pack]] of a COO DataFrame with columns (i,j,k,v) into `numSlabs`
-    * slabs, or one per core (at least 2) when `numSlabs` is 0. */
+    * slabs, or one per task slot of the session when `numSlabs` is 0. */
   private[tensor] def packCoo(coo: DataFrame, width: Int, numSlabs: Int): PackedTensor = {
     import org.apache.spark.sql.functions.col
     val rows: RDD[(Long, Long, Long, Double)] = coo
       .select(col("i").cast("long"), col("j").cast("long"), col("k").cast("long"),
         col("v").cast("double"))
       .rdd.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val slabs =
-      if (numSlabs > 0) numSlabs
-      else math.max(2, coo.sparkSession.sparkContext.defaultParallelism)
-    pack(rows, width, slabs)
+    pack(rows, width,
+      if (numSlabs > 0) numSlabs else GraftSlabExchange.slots(coo.sparkSession.sparkContext))
   }
 
   /** The packed, persisted slab tensor — everything a seeded fit needs,
@@ -497,7 +504,10 @@ object CPALS {
 
   /** One seeded CP run over an already-packed slab tensor: ALS unless
     * another `rule` is given. The run stops once an iteration raises the
-    * fit by less than `tol`, or after `maxIter` iterations.
+    * fit by less than `tol`, or after `maxIter` iterations. It is one job
+    * of one [[SlabFit]] task per slab. A failure of a task or of this loop
+    * fails the run once, with its cause: the exchange fails every pending
+    * message, the job is cancelled and the endpoint stopped.
     */
   private[graft] def fitPacked(
       packed: PackedTensor,
@@ -508,185 +518,198 @@ object CPALS {
       rule: UpdateRule = AlsRule()): CPModel = {
     val PackedTensor(slabRdd, ni, nj, nk, normX2, _) = packed
     val sc = slabRdd.sparkContext
+    val numSlabs = slabRdd.getNumPartitions
+    val slots = GraftSlabExchange.slots(sc)
+    require(numSlabs <= slots, s"a CP fit runs its $numSlabs slabs as concurrent tasks of one " +
+      s"stage, but the session has $slots task slots: pack into at most $slots slabs, or give " +
+      "the session more cores")
     val r = rank
-    def flat(m: DenseMatrix[Double]): Array[Double] = Array.tabulate(r * r)(n => m(n / r, n % r))
-    def update(f: Array[Double], m: Array[Double], n: Int, h: DenseMatrix[Double]): Unit =
-      rule.update(f, 0, m, flat(rule.solveMatrix(h)), 0, n, r)
-
-    // Seeded init: B, C on the driver; A beside its slab, one primitive
-    // array per partition aligned with slabRdd by zipPartitions, drawn
-    // with a per-slab seed — deterministic because the pack partitioning is.
+    // Seeded init: B, C here; each slab task draws its A rows with a
+    // per-slab seed — deterministic because the pack partitioning is.
     val rng = new Random(seed)
     val bMat = Array.fill(nj * r)(rule.draw(rng))
     val cMat = Array.fill(nk * r)(rule.draw(rng))
-    var state: RDD[SlabState] = slabRdd.mapPartitionsWithIndex(new InitA(rule, seed, r))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    def flat(m: DenseMatrix[Double]): Array[Double] = Array.tabulate(r * r)(n => m(n / r, n % r))
+    def update(f: Array[Double], m: Array[Double], n: Int, h: DenseMatrix[Double]): Unit =
+      rule.update(f, 0, m, flat(rule.solveMatrix(h)), 0, n, r)
+    var gC = gram(cMat, nk, r)
+    // What a slab task reads for its next iteration: B, C and the R×R
+    // A-solve matrix, as a fresh array; or nothing, which stops it.
+    def next(stop: Boolean): Array[Double] =
+      if (stop) Array.emptyDoubleArray
+      else Array.concat(bMat, cMat, flat(rule.solveMatrix(hadamard(gram(bMat, nj, r), gC, r))))
 
-    var fits = Vector.empty[Double]
-    var converged = false
-    while (fits.length < maxIter && !converged) {
-      // --- Job 1: update A slab-local (mode-1 ownership, no reduce, NO
-      // collect) and, in the same pass, the MTTKRP against mode 2 with
-      // AᵀA appended. One broadcast carries B, C and the A-solve matrix.
-      val gC = gram(cMat, nk, r)
-      val bcs = sc.broadcast(Array.concat(bMat, cMat,
-        flat(rule.solveMatrix(hadamard(gram(bMat, nj, r), gC, r)))))
-      val prevState = state
-      state = slabRdd.zipPartitions(prevState)(new UpdateAModeTwo(rule, bcs, nj, nk, r))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val mB = sumSlabPartials(state, ModeTwoPartial, nj * r + r * r)
-      val gramA = DenseMatrix.tabulate(r, r)((p, q) => mB(nj * r + p * r + q))
-      prevState.unpersist(blocking = false)
-      // unpersist, NOT destroy: the new state's (cached) lineage still
-      // captures this broadcast, and task serialization validates it even
-      // when the cache makes recompute unreachable. unpersist drops the
-      // executor copies now; the ContextCleaner reaps the rest once the
-      // iteration's state is replaced.
-      bcs.unpersist()
-      update(bMat, mB, nj, hadamard(gramA, gC, r))
-
-      // --- Job 2: the MTTKRP against mode 3 over (A, B), A read from the
-      // state job 1 left; no cached RDD captures bcB.
-      val bcB = sc.broadcast(bMat)
-      val mC = sumSlabPartials(slabRdd.zipPartitions(state)(new ModeThree(bcB, nk, r)),
-        new OnePerSlab[Array[Double]], nk * r)
-      bcB.destroy()
-      val gB = gram(bMat, nj, r)
-      update(cMat, mC, nk, hadamard(gramA, gB, r))
-
-      // --- fit via the CP identities (mC was computed against the current
-      // A and B, so vec(mC)·vec(C) = ⟨X, X̂⟩ — no reconstruction).
-      val cross = { var s = 0.0; var n = 0; while (n < mC.length) { s += mC(n) * cMat(n); n += 1 }; s }
-      val gAll = hadamard(hadamard(gramA, gB, r), gram(cMat, nk, r), r)
-      val model2 = {
-        var s = 0.0; var p = 0
-        while (p < r) { var q = 0; while (q < r) { s += gAll(p, q); q += 1 }; p += 1 }
-        s
-      }
-      val resid2 = math.max(0.0, normX2 - 2.0 * cross + model2)
-      val fit = 1.0 - math.sqrt(resid2) / math.sqrt(normX2)
-      converged = fits.nonEmpty && fit - fits.last < tol
-      fits :+= fit
-    }
-
-    // ONE collect, after convergence, to build the returned dense model
-    // (the loop itself never centralized A). A caller at true scale would
-    // keep (i, row) as a relation.
     val aMat = new Array[Double](ni * r)
-    sc.runJob(slabRdd.zipPartitions(state)(SlabRows), new OnePerSlab[(Array[Int], Array[Double])],
-      (_: Int, rows: (Array[Int], Array[Double])) => {
-        val (localIs, aLoc) = rows
-        var li = 0
-        while (li < localIs.length) { System.arraycopy(aLoc, li * r, aMat, localIs(li) * r, r); li += 1 }
-      })
-    state.unpersist(blocking = false)
+    val exchange = GraftSlabExchange.open(sc, numSlabs)
+    var fits = Vector.empty[Double]
+    try {
+      // The first iteration's factors ride in the task closure.
+      val job = sc.submitJob(
+        slabRdd.barrier().mapPartitionsWithIndex(
+          new SlabFit(exchange.name, rule, seed, next(maxIter <= 0), nj, nk, r)),
+        new OnePerSlab[(Array[Int], Array[Double])], 0 until numSlabs,
+        (_: Int, rows: (Array[Int], Array[Double])) => {
+          val (localIs, aLoc) = rows
+          var li = 0
+          while (li < localIs.length) { System.arraycopy(aLoc, li * r, aMat, localIs(li) * r, r); li += 1 }
+        }, ())
+      job.onComplete(_.failed.foreach(exchange.fail))(ExecutionContext.parasitic)
+      try {
+        var stop = maxIter <= 0
+        while (!stop) {
+          // --- Exchange 1: every slab has updated its A rows and sends its
+          // mode-2 MTTKRP partial with its AᵀA appended; it gets back B.
+          val mB = sumInSlabOrder(exchange.gather(), nj * r + r * r)
+          val gramA = DenseMatrix.tabulate(r, r)((p, q) => mB(nj * r + p * r + q))
+          update(bMat, mB, nj, hadamard(gramA, gC, r))
+          exchange.answer(bMat.clone())
+
+          // --- Exchange 2: the mode-3 MTTKRP partials over (A, B); each
+          // slab gets back the next iteration's factors, or stops.
+          val mC = sumInSlabOrder(exchange.gather(), nk * r)
+          val gB = gram(bMat, nj, r)
+          update(cMat, mC, nk, hadamard(gramA, gB, r))
+
+          // --- fit via the CP identities (mC was computed against the
+          // current A and B, so vec(mC)·vec(C) = ⟨X, X̂⟩ — no reconstruction).
+          val cross = { var s = 0.0; var n = 0; while (n < mC.length) { s += mC(n) * cMat(n); n += 1 }; s }
+          gC = gram(cMat, nk, r)
+          val gAll = hadamard(hadamard(gramA, gB, r), gC, r)
+          val model2 = {
+            var s = 0.0; var p = 0
+            while (p < r) { var q = 0; while (q < r) { s += gAll(p, q); q += 1 }; p += 1 }
+            s
+          }
+          val resid2 = math.max(0.0, normX2 - 2.0 * cross + model2)
+          val fit = 1.0 - math.sqrt(resid2) / math.sqrt(normX2)
+          stop = fits.nonEmpty && fit - fits.last < tol || fits.length + 1 >= maxIter
+          fits :+= fit
+          exchange.answer(next(stop))
+        }
+        Await.result(job, Duration.Inf)
+      } catch {
+        case e: Throwable =>
+          exchange.fail(e)
+          job.cancel()
+          Await.ready(job, Duration.Inf)
+          throw e
+      }
+    } finally exchange.close()
     // slabRdd stays persisted: its lifecycle belongs to the pack() caller.
     val lambda = normalizeColumns(Seq((aMat, ni), (bMat, nj), (cMat, nk)), r)
     CPModel(lambda, aMat, bMat, cMat, (ni, nj, nk), r, fits)
   }
 
+  /** The element-wise sum of `parts` in slab order, from zeros. */
+  private def sumInSlabOrder(parts: Array[Array[Double]], len: Int): Array[Double] = {
+    val sum = new Array[Double](len)
+    for (y <- parts) { var n = 0; while (n < len) { sum(n) += y(n); n += 1 } }
+    sum
+  }
+
   // ---- What the tasks run: named objects, not lambdas (see OnePerSlab) ----
 
-  /** What a fit keeps beside each slab between jobs: the slab's A rows
-    * (local row-major, R wide) and the mode-2 MTTKRP partial of the pass
-    * that made them (J×R, then AᵀA). */
-  private final case class SlabState(a: Array[Double], modeTwo: Array[Double])
-
-  /** A slab's initial A rows, seeded per slab. */
-  private final class InitA(rule: UpdateRule, seed: Long, r: Int)
-      extends ((Int, Iterator[Slab]) => Iterator[SlabState]) with Serializable {
-    def apply(idx: Int, slabs: Iterator[Slab]): Iterator[SlabState] = {
+  /** A slab's task for a whole fit. It draws the slab's A rows, seeded per
+    * slab, and keeps them. Per iteration it reads B, C and the A-solve
+    * matrix, sends its mode-2 partial ([[updateAModeTwo]]), reads the new
+    * B, and sends its mode-3 partial ([[modeThree]]); the answer is the
+    * next iteration's factors, or empty once the fit stops. `first` is the
+    * first iteration's. Its result is the slab's row ids and A rows.
+    */
+  private final class SlabFit(
+      exchange: String, rule: UpdateRule, seed: Long, first: Array[Double], nj: Int, nk: Int, r: Int)
+      extends ((Int, Iterator[Slab]) => Iterator[(Array[Int], Array[Double])]) with Serializable {
+    def apply(idx: Int, slabs: Iterator[Slab]): Iterator[(Array[Int], Array[Double])] = {
+      val slab = slabs.next()
+      val link = new GraftSlabExchange.Link(exchange, idx)
       val rng = new Random(seed ^ (0x9E3779B97F4A7C15L * (idx + 1)))
-      Iterator.single(SlabState(rule.initA(slabs.next().numRows * r, rng), Array.emptyDoubleArray))
+      val a = rule.initA(slab.numRows * r, rng)
+      var f = first
+      while (f.nonEmpty) {
+        val b = link.trade(updateAModeTwo(slab, a, f, rule, nj, nk, r))
+        f = link.trade(modeThree(slab, a, b, nk, r))
+      }
+      Iterator.single((slab.localIs, a))
     }
   }
 
-  /** Job 1's pass over a slab: the A update fused with the mode-2 MTTKRP.
-    * B, C and the A-solve matrix come from the iteration's one broadcast
-    * `bcs` (B at 0, C at J·R, the R×R matrix after C). For each local row
-    * i and each of its fibers (i, j), t_ij = Σ_k v·c_k (one multiply-add
-    * per rank per nonzero) is kept in a scratch of the row's fibers, and
-    * the row's mode-1 MTTKRP is m_i = Σ_j t_ij ∘ b_j. The rule turns m_i
-    * into the new a_i; then each fiber adds a_i ∘ t_ij to mode-2 row j,
-    * and the row adds a_i a_iᵀ to the appended AᵀA. Row-local to the slab
-    * (mode-1 ownership) — no shuffle, no reduce.
+  /** A slab's first pass of an iteration: the A update fused with the
+    * mode-2 MTTKRP. `f` holds B at 0, C at J·R and the R×R A-solve matrix
+    * after C. For each local row i and each of its fibers (i, j),
+    * t_ij = Σ_k v·c_k (one multiply-add per rank per nonzero) is kept in a
+    * scratch of the row's fibers, and the row's mode-1 MTTKRP is
+    * m_i = Σ_j t_ij ∘ b_j. The rule turns m_i into the new a_i, in place in
+    * `a`; then each fiber adds a_i ∘ t_ij to mode-2 row j, and the row adds
+    * a_i a_iᵀ to the appended AᵀA. Returns that J·R + R² partial. Row-local
+    * to the slab (mode-1 ownership) — no shuffle, no reduce.
     */
-  private final class UpdateAModeTwo(
-      rule: UpdateRule, bcs: Broadcast[Array[Double]], nj: Int, nk: Int, r: Int)
-      extends ((Iterator[Slab], Iterator[SlabState]) => Iterator[SlabState]) with Serializable {
-    def apply(slabs: Iterator[Slab], states: Iterator[SlabState]): Iterator[SlabState] = {
-      val slab = slabs.next(); val f = bcs.value
-      val Slab(_, rowPtr, fiberJ, fiberPtr, ks, vs) = slab
-      val cOff = nj * r; val sOff = (nj + nk) * r; val gramOff = nj * r
-      val a = states.next().a.clone()
-      val acc = new Array[Double](nj * r + r * r)
-      var maxFibers = 0
-      var li = 0
-      while (li < slab.numRows) { maxFibers = math.max(maxFibers, rowPtr(li + 1) - rowPtr(li)); li += 1 }
-      val t = new Array[Double](maxFibers * r)
-      val m = new Array[Double](r)
-      li = 0
-      while (li < slab.numRows) {
-        val f0 = rowPtr(li); val f1 = rowPtr(li + 1)
-        java.util.Arrays.fill(m, 0.0)
-        var fb = f0
-        while (fb < f1) {
-          val tRow = (fb - f0) * r
-          sumFiber(ks, vs, fiberPtr(fb), fiberPtr(fb + 1), f, cOff, t, tRow, r)
-          val bRow = fiberJ(fb) * r
-          var p = 0
-          while (p < r) { m(p) += t(tRow + p) * f(bRow + p); p += 1 }
-          fb += 1
-        }
-        val aRow = li * r
-        rule.update(a, aRow, m, f, sOff, 1, r)
-        fb = f0
-        while (fb < f1) {
-          val tRow = (fb - f0) * r; val jRow = fiberJ(fb) * r
-          var p = 0
-          while (p < r) { acc(jRow + p) += a(aRow + p) * t(tRow + p); p += 1 }
-          fb += 1
-        }
+  private def updateAModeTwo(
+      slab: Slab, a: Array[Double], f: Array[Double], rule: UpdateRule, nj: Int, nk: Int, r: Int)
+      : Array[Double] = {
+    val Slab(_, rowPtr, fiberJ, fiberPtr, ks, vs) = slab
+    val cOff = nj * r; val sOff = (nj + nk) * r; val gramOff = nj * r
+    val acc = new Array[Double](nj * r + r * r)
+    var maxFibers = 0
+    var li = 0
+    while (li < slab.numRows) { maxFibers = math.max(maxFibers, rowPtr(li + 1) - rowPtr(li)); li += 1 }
+    val t = new Array[Double](maxFibers * r)
+    val m = new Array[Double](r)
+    li = 0
+    while (li < slab.numRows) {
+      val f0 = rowPtr(li); val f1 = rowPtr(li + 1)
+      java.util.Arrays.fill(m, 0.0)
+      var fb = f0
+      while (fb < f1) {
+        val tRow = (fb - f0) * r
+        sumFiber(ks, vs, fiberPtr(fb), fiberPtr(fb + 1), f, cOff, t, tRow, r)
+        val bRow = fiberJ(fb) * r
         var p = 0
-        while (p < r) {
-          val vp = a(aRow + p)
-          var q = 0
-          while (q < r) { acc(gramOff + p * r + q) += vp * a(aRow + q); q += 1 }
-          p += 1
-        }
-        li += 1
+        while (p < r) { m(p) += t(tRow + p) * f(bRow + p); p += 1 }
+        fb += 1
       }
-      Iterator.single(SlabState(a, acc))
+      val aRow = li * r
+      rule.update(a, aRow, m, f, sOff, 1, r)
+      fb = f0
+      while (fb < f1) {
+        val tRow = (fb - f0) * r; val jRow = fiberJ(fb) * r
+        var p = 0
+        while (p < r) { acc(jRow + p) += a(aRow + p) * t(tRow + p); p += 1 }
+        fb += 1
+      }
+      var p = 0
+      while (p < r) {
+        val vp = a(aRow + p)
+        var q = 0
+        while (q < r) { acc(gramOff + p * r + q) += vp * a(aRow + q); q += 1 }
+        p += 1
+      }
+      li += 1
     }
+    acc
   }
 
-  /** Job 2's pass over a slab: the mode-3 MTTKRP partial (K×R) from the
-    * slab-local A rows and the broadcast updated B. Each fiber (i, j)
+  /** A slab's second pass of an iteration: the mode-3 MTTKRP partial
+    * (K×R) from the slab's A rows and the updated B. Each fiber (i, j)
     * forms w = a_i ∘ b_j once; each of its nonzeros adds v·w to row k.
-    * Never ships A.
     */
-  private final class ModeThree(bcB: Broadcast[Array[Double]], nk: Int, r: Int)
-      extends ((Iterator[Slab], Iterator[SlabState]) => Iterator[Array[Double]]) with Serializable {
-    def apply(slabs: Iterator[Slab], states: Iterator[SlabState]): Iterator[Array[Double]] = {
-      val slab = slabs.next(); val a = states.next().a; val b = bcB.value
-      val Slab(_, rowPtr, fiberJ, fiberPtr, ks, vs) = slab
-      val acc = new Array[Double](nk * r)
-      val w = new Array[Double](r)
-      var li = 0
-      while (li < slab.numRows) {
-        val aRow = li * r
-        var fb = rowPtr(li)
-        while (fb < rowPtr(li + 1)) {
-          val bRow = fiberJ(fb) * r
-          var p = 0
-          while (p < r) { w(p) = a(aRow + p) * b(bRow + p); p += 1 }
-          scatterFiber(ks, vs, fiberPtr(fb), fiberPtr(fb + 1), w, acc, r)
-          fb += 1
-        }
-        li += 1
+  private def modeThree(slab: Slab, a: Array[Double], b: Array[Double], nk: Int, r: Int): Array[Double] = {
+    val Slab(_, rowPtr, fiberJ, fiberPtr, ks, vs) = slab
+    val acc = new Array[Double](nk * r)
+    val w = new Array[Double](r)
+    var li = 0
+    while (li < slab.numRows) {
+      val aRow = li * r
+      var fb = rowPtr(li)
+      while (fb < rowPtr(li + 1)) {
+        val bRow = fiberJ(fb) * r
+        var p = 0
+        while (p < r) { w(p) = a(aRow + p) * b(bRow + p); p += 1 }
+        scatterFiber(ks, vs, fiberPtr(fb), fiberPtr(fb + 1), w, acc, r)
+        fb += 1
       }
-      Iterator.single(acc)
+      li += 1
     }
+    acc
   }
 
   /** t(tOff + p) = Σ v·f(fOff + k·R + p) over the nonzeros [n0, n1) of
@@ -749,13 +772,6 @@ object CPALS {
     }
   }
 
-  /** A slab's mode-2 partial, as the result of job 1's task: A itself
-    * stays in the cached state. */
-  private object ModeTwoPartial
-      extends ((TaskContext, Iterator[SlabState]) => Array[Double]) with Serializable {
-    def apply(ctx: TaskContext, it: Iterator[SlabState]): Array[Double] = it.next().modeTwo
-  }
-
   /** A slab's Σ v² over its packed values, as the result of a task. */
   private object SlabNormX2 extends ((TaskContext, Iterator[Slab]) => Array[Double]) with Serializable {
     def apply(ctx: TaskContext, it: Iterator[Slab]): Array[Double] = {
@@ -766,50 +782,26 @@ object CPALS {
     }
   }
 
-  /** A slab's global row ids beside its A rows, for the one collect. */
-  private object SlabRows
-      extends ((Iterator[Slab], Iterator[SlabState]) => Iterator[(Array[Int], Array[Double])])
-      with Serializable {
-    def apply(slabs: Iterator[Slab], states: Iterator[SlabState]): Iterator[(Array[Int], Array[Double])] =
-      Iterator.single((slabs.next().localIs, states.next().a))
-  }
-
   /** A slab's one result, as the result of its task. A named class, not a
     * lambda: Spark's ClosureCleaner re-reads and parses the class file
     * that declares each lambda it is given, on every job, and passes over
     * an object that is not a closure without reading any. For the same
-    * reason a job takes the `(TaskContext, Iterator)` function that
-    * `runJob` runs as it is, not the `Iterator` one it wraps in a lambda,
-    * and every function above is a named class too.
+    * reason every function above that a task runs is a named class too.
     */
-  private final class OnePerSlab[T]
-      extends ((TaskContext, Iterator[T]) => T) with Serializable {
-    def apply(ctx: TaskContext, it: Iterator[T]): T = it.next()
+  private final class OnePerSlab[T] extends (Iterator[T] => T) with Serializable {
+    def apply(it: Iterator[T]): T = it.next()
   }
 
   /** The element-wise sum of the `len`-long partial that `partial` takes
-    * from each partition, in ONE single-stage job. The driver adds
-    * partial s as soon as partitions 0..s have all arrived, so the sum
-    * order is the partition order whatever order the tasks finish in, and
-    * a seeded fit over one packed tensor is bit-reproducible.
+    * from each partition, in ONE single-stage job, summed in partition
+    * order whatever order the tasks finish in ([[sumInSlabOrder]]), so a
+    * seeded run over one packed tensor is bit-reproducible.
     */
   private[tensor] def sumSlabPartials[T](
       slabs: RDD[T], partial: (TaskContext, Iterator[T]) => Array[Double], len: Int): Array[Double] = {
-    val numSlabs = slabs.getNumPartitions
-    val sum = new Array[Double](len)
-    val arrived = new Array[Array[Double]](numSlabs)
-    var next = 0
-    slabs.sparkContext.runJob(slabs, partial,
-      (slab: Int, x: Array[Double]) => {
-        arrived(slab) = x
-        while (next < numSlabs && arrived(next) != null) {
-          val y = arrived(next)
-          var n = 0; while (n < len) { sum(n) += y(n); n += 1 }
-          arrived(next) = null
-          next += 1
-        }
-      })
-    sum
+    val parts = new Array[Array[Double]](slabs.getNumPartitions)
+    slabs.sparkContext.runJob(slabs, partial, (slab: Int, x: Array[Double]) => parts(slab) = x)
+    sumInSlabOrder(parts, len)
   }
 
   // ---- Dense driver-side kernels ----

@@ -22,12 +22,14 @@ import graft.tensor.CPALS.CPModel
   *
   * Distribution: the inputs of a HALS sweep are exactly the ALS MTTKRP +
   * Gramians, so HALS is one [[CPALS.UpdateRule]] of the one CP loop,
-  * [[CPALS.fitPacked]], and shares its layout, jobs and broadcasts:
+  * [[CPALS.fitPacked]], and shares its layout, its one job per fit and
+  * its two exchanges per iteration:
   *  - mode 1 (the scale mode): the sweep is ROW-LOCAL (column p of row i
-  *    touches only row i's other columns, M's row i, and the broadcast
-  *    R×R G), so the fused pass sweeps each row of A beside its slab as
-  *    soon as the row's MTTKRP is summed, never visiting the driver; the
-  *    per-slab cost is the same fiber pass plus an O(rows·R²) sweep.
+  *    touches only row i's other columns, M's row i, and the R×R G the
+  *    slab's task was sent), so the fused pass sweeps each row of A in
+  *    its slab's task as soon as the row's MTTKRP is summed, never
+  *    visiting the driver; the per-slab cost is the same fiber pass plus
+  *    an O(rows·R²) sweep.
   *  - modes 2/3: the per-slab MTTKRP partials summed on the driver in
   *    slab order, then a driver-side sweep over the small J×R / K×R
   *    factors.

@@ -370,12 +370,13 @@ class TensorSpec extends SparkSpec {
     "NN-HALS" -> ((p, seed, iters) =>
       CPALS.fitPacked(p, 2, seed, tol = Double.NegativeInfinity, maxIter = iters, NnHals.HalsRule)))
 
-  test("CP-ALS and NN-HALS: each iteration is 2 single-stage jobs at 8 slabs") {
-    // 8 slabs is above the 5 at which a tree reduction of the MTTKRP
-    // partials adds a shuffle level; summing them in one job never does.
-    // Each iteration also makes 2 explicit broadcasts (B, C and the
-    // A-solve matrix as one array, then the updated B) and, per job, one
-    // of its task binary. Broadcast ids count up by one per broadcast.
+  test("CP-ALS and NN-HALS: a fit is one job whatever its iteration count") {
+    // The slab tasks keep A and trade partials and factors with the
+    // driver's exchange, so neither the job count nor the broadcasts grow
+    // with the iterations, and nothing is shuffled. A job broadcasts its
+    // task binary; every other broadcast would be an explicit one. The
+    // probe makes one broadcast of its own, and broadcast ids count up by
+    // one per broadcast.
     val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 21), width = 2, numSlabs = 8)
     def nextBroadcastId(): Long = { val b = spark.sparkContext.broadcast(()); b.destroy(); b.id }
     try packedFits.foreach { case (name, fit) =>
@@ -383,17 +384,57 @@ class TensorSpec extends SparkSpec {
         val l = Harness.leg(spark, s"$name x$iters") {
           val first = nextBroadcastId()
           val m = fit(packed, 5L, iters)
-          (m, nextBroadcastId() - first)
+          (m, nextBroadcastId() - first - 1)
         }.orThrow
-        assert(l.result.toOption.get._1.iterations == iters)
+        val (m, broadcasts) = l.result.toOption.get
+        assert(m.iterations == iters)
+        assert(broadcasts == l.jobs.size, s"$name x$iters: $broadcasts broadcasts in ${l.jobs}")
+        assert(l.shuffleWriteBytes == 0L, s"$name x$iters: ${l.shuffleWriteBytes} shuffle bytes")
         l
       }
       val one = leg(1); val three = leg(3)
-      assert(three.jobs.size - one.jobs.size == 2 * 2, s"$name jobs: ${one.jobs} vs ${three.jobs}")
-      assert(three.shuffleWriteBytes - one.shuffleWriteBytes == 0L,
-        s"$name shuffle write: ${one.shuffleWriteBytes} vs ${three.shuffleWriteBytes} bytes")
-      val (b1, b3) = (one.result.toOption.get._2, three.result.toOption.get._2)
-      assert(b3 - b1 == 2 * (2 + 2), s"$name broadcasts: $b1 at 1 iteration vs $b3 at 3")
+      assert(one.jobs.size == 1 && three.jobs.size == 1, s"$name jobs: ${one.jobs} vs ${three.jobs}")
+    } finally packed.unpersist()
+  }
+
+  test("a fit of more slabs than task slots fails at once, naming both and the remedy") {
+    val slots = org.apache.spark.GraftSlabExchange.slots(spark.sparkContext)
+    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 23), width = 2, numSlabs = slots + 1)
+    try {
+      val t0 = System.nanoTime()
+      val err = intercept[IllegalArgumentException](CPALS.fitPacked(packed, 2, 5L, 0.0, 3))
+      val sec = (System.nanoTime() - t0) / 1e9
+      assert(sec < 5.0, s"took $sec s")
+      for (want <- Seq(s"${slots + 1} slabs", s"$slots task slots", s"at most $slots slabs"))
+        assert(err.getMessage.contains(want), err.getMessage)
+    } finally packed.unpersist()
+  }
+
+  test("CP fit: a failure in a slab task or on the driver fails the fit once and leaves nothing running") {
+    val sc = spark.sparkContext
+    val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 24), width = 2, numSlabs = 8)
+    try {
+      val want = CPALS.fitPacked(packed, 2, 5L, Double.NegativeInfinity, 4)
+      for ((onDriver, message) <- Seq(false -> "planted failure in slab 1", true -> "planted failure on the driver")) {
+        val t0 = System.nanoTime()
+        val err = intercept[Throwable](
+          CPALS.fitPacked(packed, 2, 5L, Double.NegativeInfinity, 4, TensorSpec.FailingRule(onDriver)))
+        val sec = (System.nanoTime() - t0) / 1e9
+        assert(sec < 30.0, s"onDriver=$onDriver: took $sec s")
+        assert(Harness.causeChain(err).contains(message), Harness.causeChain(err))
+        // Killed tasks end shortly after their job, and the job's end
+        // reaches the status tracker shortly after the fit sees it; none
+        // may be left behind.
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        def running = sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
+        def jobs = sc.statusTracker.getActiveJobIds.toSeq
+        while ((running > 0 || jobs.nonEmpty) && System.nanoTime() < deadline) Thread.sleep(20)
+        assert(running == 0, s"onDriver=$onDriver: $running tasks still running")
+        assert(jobs.isEmpty, s"onDriver=$onDriver: jobs $jobs still active")
+        assert(org.apache.spark.GraftSlabExchange.registered(sc).isEmpty,
+          s"endpoints left: ${org.apache.spark.GraftSlabExchange.registered(sc)}")
+      }
+      assertSameBits("after the failures", want, CPALS.fitPacked(packed, 2, 5L, Double.NegativeInfinity, 4))
     } finally packed.unpersist()
   }
 
@@ -554,6 +595,34 @@ class TensorSpec extends SparkSpec {
       val n1 = (BigInt(m1) * h00 - BigInt(m0) * h01).toDouble
       assert(math.abs(r.getAs[Double]("a0") - r6(n0 / det)) <= 1e-6, s"$i: a0")
       assert(math.abs(r.getAs[Double]("a1") - r6(n1 / det)) <= 1e-6, s"$i: a1")
+    }
+  }
+}
+
+object TensorSpec {
+  /** ALS, except that its update throws in the second iteration: in slab
+    * 1's task, or on the driver. A task's copy of the rule counts the
+    * iterations by the factor arrays it is handed (a fresh one each
+    * iteration); the driver updates B, then C, once per iteration. */
+  private final case class FailingRule(onDriver: Boolean) extends CPALS.UpdateRule {
+    private val als = CPALS.AlsRule()
+    private var seen: Array[Double] = null
+    private var iteration, driverUpdates = 0
+    def draw(rng: scala.util.Random): Double = als.draw(rng)
+    def initA(n: Int, rng: scala.util.Random): Array[Double] = als.initA(n, rng)
+    def solveMatrix(h: breeze.linalg.DenseMatrix[Double]): breeze.linalg.DenseMatrix[Double] = als.solveMatrix(h)
+    def update(a: Array[Double], aOff: Int, m: Array[Double], s: Array[Double], sOff: Int,
+        n: Int, r: Int): Unit = {
+      val task = org.apache.spark.TaskContext.get()
+      if (task == null) {
+        driverUpdates += 1
+        if (onDriver && driverUpdates == 3) throw new IllegalStateException("planted failure on the driver")
+      } else {
+        if (s ne seen) { seen = s; iteration += 1 }
+        if (!onDriver && task.partitionId == 1 && iteration == 2)
+          throw new IllegalStateException("planted failure in slab 1")
+      }
+      als.update(a, aOff, m, s, sOff, n, r)
     }
   }
 }
