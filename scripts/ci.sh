@@ -51,7 +51,8 @@ python3 scripts/scaling.py check "$BENCH_OUT" golden/bench_budget_sf0.001.json
 # (`CompletableFuture.java`), a `tucker` row whose `fallbacks` (Lanczos
 # solves that dsyev answered) is 0, and `cpals` and `nnhals` rows with at most
 # 4 jobs described by a bare `CPALS.scala` call site (the pack's 3 and the
-# fit's one; the Q43 query's jobs carry their plan operator as well); and
+# fit's one; the Q43 query runs once, into the leg's `localCheckpoint`, so its
+# jobs are named by Bench's call site); and
 # `scaling.py rows` must read them, so a renamed row key fails here and not in
 # a later sweep.
 python3 - "$BENCH_OUT" "$BENCH_RAW" <<'EOF'

@@ -12,10 +12,13 @@ Usage: python3 scripts/leakcheck.py <round> [outFile]
 """
 import datetime, json, re, subprocess, sys
 
-# Public namespaces this project may import from (build.sbt's world).
+# Public namespaces this project may import from (build.sbt's world). Jackson
+# and the two netlib ARPACK packages ship in Spark's own jars/
+# (jackson-databind, arpack, arpack_combined_all).
 PUBLIC_IMPORT = re.compile(
     r"^\s*import\s+(?!(?:org\.apache\.|org\.scalatest|org\.scalacheck|"
-    r"scala\.|java\.|javax\.|breeze\.|graft\b|graft\.))(\S+)", re.M)
+    r"scala\.|java\.|javax\.|breeze\.|graft\b|graft\.|"
+    r"com\.fasterxml\.jackson\.|dev\.ludovic\.netlib\.|org\.netlib\.util\.))(\S+)", re.M)
 # Session-value imports (`spark.implicits._`, `ds.sparkSession.implicits._`)
 # are local identifiers, not packages.
 VALUE_IMPORT = re.compile(r"\bimplicits\b")

@@ -24,10 +24,10 @@ object Bench {
   private def d(pattern: String, v: Double): String =
     String.format(java.util.Locale.ROOT, pattern, Double.box(v))
 
-  /** One tensor leg's fit: wall seconds, iterations and final fit, plus
-    * the fields its row adds (Tucker's Lanczos `fallbacks`). */
-  private final case class TensorFit(sec: Double, iters: Int, fit: Double,
-      rowFields: Seq[(String, Long)] = Nil)
+  /** One tensor leg's fit: iterations and final fit, the fields its row
+    * adds (Tucker's Lanczos `fallbacks`) and wall seconds (set by the leg). */
+  private final case class TensorFit(iters: Int, fit: Double,
+      rowFields: Seq[(String, Long)] = Nil, sec: Double = 0.0)
 
   /** The CP legs' fit of the Q43 tensor: `cpals` (CP-ALS) or `nnhals`
     * (nonnegative CP via HALS; the Q43 values are sums of nonnegative
@@ -178,33 +178,31 @@ object Bench {
     }
 
     // Tensor legs on the Q43 events tensor, one run each. None when not
-    // selected or failed.
-    def tensorLeg(leg: String)(fit: => TensorFit): Option[TensorFit] =
+    // selected or failed. Each builds the query's DataFrame, then, timed,
+    // runs it once into a checkpoint that `fit` reads: the query's jobs
+    // are named by this call site, the fit's by the tensor code's.
+    def tensorLeg(leg: String)(fit: DataFrame => TensorFit): Option[TensorFit] =
       if (!selected(leg)) None
       else {
-        val l = run(leg)(fit)
+        val l = run(leg) {
+          val q43 = operators.EventTime.q43(spark, sfDir).selectExpr("i", "j", "k", "v")
+          val t0 = System.nanoTime()
+          fit(q43.localCheckpoint()).copy(sec = (System.nanoTime() - t0) / 1e9)
+        }
         println(l.rowWith(l.result.fold(_ => Nil, _.rowFields): _*))
         l.result.toOption
       }
-    def since(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
-    // CP-ALS and NN-HALS (see cpFit), timed from after the Q43 tensor's
-    // DataFrame is built.
-    def cpLeg(leg: String): Option[TensorFit] = tensorLeg(leg) {
-      val coo = operators.EventTime.q43(spark, sfDir)
-      val t0 = System.nanoTime()
+    // CP-ALS and NN-HALS (see cpFit).
+    def cpLeg(leg: String): Option[TensorFit] = tensorLeg(leg) { coo =>
       val m = cpFit(leg, coo, cpus)
-      TensorFit(since(t0), m.iterations, m.finalFit)
+      TensorFit(m.iterations, m.finalFit)
     }
     val cpals = cpLeg("cpals")
     val nnhals = cpLeg("nnhals")
 
     // Tucker/HOSVD on the same tensor, one decomposition.
-    val tucker = tensorLeg("tucker") {
-      val q43 = operators.EventTime.q43(spark, sfDir).selectExpr("i", "j", "k", "v")
-      val t0 = System.nanoTime()
-      // The query runs once: the rank clamp and the pack read its checkpoint.
-      val coo = q43.localCheckpoint()
+    val tucker = tensorLeg("tucker") { coo =>
       // Clamp target ranks to the tier's tensor dims (rank <= dim is
       // Tucker's loud contract; at sf0.001 mode 1 is only 15 wide).
       val dims = coo.selectExpr(
@@ -214,7 +212,7 @@ object Bench {
         math.min(4, dims.getLong(1).toInt + 1),
         math.min(16, dims.getLong(2).toInt + 1))
       val m = tensor.Tucker.hosvd(coo, ranks)
-      TensorFit(since(t0), 1, m.fit, Seq("fallbacks" -> m.fallbacks.toLong))
+      TensorFit(1, m.fit, Seq("fallbacks" -> m.fallbacks.toLong))
     }
 
     // The driver's bench artifact retains only a ~2000-char stdout tail

@@ -25,10 +25,12 @@ final class Catalog(val spark: SparkSession, val dir: String) {
   // The ns convention is UTC-anchored; the NTZ→instant cast in normalizeTs
   // is only the identity on the stored micros under a UTC session.
   spark.conf.set("spark.sql.session.timeZone", "UTC")
-  // Engine-native functions (codegen'd expressions). The driver harness
-  // owns the session builder, so registration happens at runtime here;
-  // deployments that own the builder use
-  // spark.sql.extensions=graft.plans.GraftExtensions instead.
+  // The engine's SQL functions (GraftExtensions' one table, with their
+  // usage text), the as-of join strategy and the dot-product rewrite. The
+  // driver harness owns the session builder, so registration happens at
+  // runtime here; deployments that own the builder use
+  // spark.sql.extensions=graft.plans.GraftExtensions, which reads the
+  // same table.
   graft.plans.GraftExtensions.registerRuntime(spark)
 
   def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")

@@ -8,14 +8,8 @@ object Verify {
     val cpus = Harness.cpus(4)
     val spark = Harness.session(cpus, cpus)
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated query names); the driver
-    // never sets it, so its runs always cover the full registry.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       Harness.leg(spark, name, gc = false) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }.error.foreach { e =>

@@ -2,9 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -111,98 +109,29 @@ object CmsState {
   }
 }
 
-/** `graft_cms_sketch(col, depth, width)` — Count-Min sketch of a string
-  * column as binary. */
-case class CmsBuildAgg(
-    child: Expression,
-    depth: Int,
-    width: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CmsState] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): CmsState = new CmsState(depth, width)
-
-  override def update(buffer: CmsState, input: InternalRow): CmsState = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.toString)
-    buffer
+/** The Count-Min aggregates: `graft_cms_sketch(col, depth, width)`, the
+  * sketch of a string column, and `graft_cms_merge(sketch)`, the
+  * elementwise rollup of built sketches. A merge takes its dimensions from
+  * the first non-null sketch, and they must agree (a mismatch is a hard
+  * error — silently mixing geometries would corrupt counts); it returns
+  * NULL when no sketch arrived, so its state is `None` until one does.
+  */
+final case class CmsAgg(op: SketchOp, depth: Int = 0, width: Int = 0)
+    extends Sketch[Option[CmsState]] {
+  protected def family: String = "cms"
+  override def nullable: Boolean = op == SketchOp.Merge
+  def empty(): Option[CmsState] =
+    if (op == SketchOp.Merge) None else Some(new CmsState(depth, width))
+  def add(s: Option[CmsState], value: Any): Option[CmsState] = { s.get.add(value.toString); s }
+  def merge(s: Option[CmsState], other: Option[CmsState]): Option[CmsState] = (s, other) match {
+    case (Some(a), Some(b)) => Some(a.merge(b))
+    case (a, None)          => a
+    case (None, b)          => b
   }
-
-  override def merge(buffer: CmsState, other: CmsState): CmsState =
-    buffer.merge(other)
-
-  override def eval(buffer: CmsState): Any = buffer.serialize()
-  override def serialize(buffer: CmsState): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): CmsState =
-    CmsState.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CmsBuildAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_cms_sketch"
-}
-
-/** `graft_cms_merge(sketch)` — elementwise rollup of already-built CMS
-  * binaries; dimensions are taken from the first non-null input and must
-  * agree (a mismatch is a hard error — silently mixing geometries would
-  * corrupt counts). */
-case class CmsMergeAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[CmsState]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): Option[CmsState] = None
-
-  override def update(buffer: Option[CmsState], input: InternalRow): Option[CmsState] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val incoming = CmsState.deserialize(v.asInstanceOf[Array[Byte]])
-      buffer match {
-        case Some(s) => Some(s.merge(incoming))
-        case None    => Some(incoming)
-      }
-    }
-  }
-
-  override def merge(buffer: Option[CmsState], other: Option[CmsState]): Option[CmsState] =
-    (buffer, other) match {
-      case (Some(a), Some(b)) => Some(a.merge(b))
-      case (Some(a), None)    => Some(a)
-      case (None, b)          => b
-    }
-
-  override def eval(buffer: Option[CmsState]): Any =
-    buffer.map(_.serialize()).orNull
-
-  override def serialize(buffer: Option[CmsState]): Array[Byte] =
-    buffer.map(_.serialize()).getOrElse(Array.emptyByteArray)
-
-  override def deserialize(bytes: Array[Byte]): Option[CmsState] =
+  def toBytes(s: Option[CmsState]): Array[Byte] = s.fold(Array.emptyByteArray)(_.serialize())
+  def fromBytes(bytes: Array[Byte]): Option[CmsState] =
     if (bytes.isEmpty) None else Some(CmsState.deserialize(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CmsMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CmsMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): CmsMergeAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_cms_merge"
+  override def result(s: Option[CmsState]): Any = s.map(_.serialize()).orNull
 }
 
 /** `graft_cms_query(sketch, item)` — frequency estimate for one item;

@@ -1,9 +1,7 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
@@ -108,115 +106,23 @@ object HllSketch {
   }
 }
 
-/** `graft_hll_distinct(col, p)` — distinct-count estimate, 2^p-byte
-  * state. The C05-class aggregate with an explicitly owned sketch
-  * (Spark's approx_count_distinct is also HLL++, but its state is not a
-  * first-class column); approximate by design, so property-checked in
-  * HllSpec rather than DuckDB-hash-declared.
+/** The HLL aggregates: `graft_hll_distinct(col, p)`, the distinct-count
+  * estimate with 2^p-byte state (the C05-class aggregate with an explicitly
+  * owned sketch: Spark's approx_count_distinct is also HLL++, but its state
+  * is not a first-class column); `graft_hll_sketch(col, p)`, the register
+  * file as a binary column, the scan-once half of the sketch-column
+  * pattern; `graft_hll_merge(sketch, p)`, the register-wise-max rollup of
+  * built sketches, whose p must match every input sketch. Approximate by
+  * design, so property-checked in HllSpec rather than DuckDB-hash-declared.
   */
-case class HllDistinct(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllSketch] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-
-  override def createAggregationBuffer(): HllSketch = new HllSketch(p)
-
-  override def update(buffer: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(KmvHash.hash(v))
-    buffer
-  }
-
-  override def merge(buffer: HllSketch, other: HllSketch): HllSketch = buffer.merge(other)
-  override def eval(buffer: HllSketch): Any = buffer.estimate
-  override def serialize(buffer: HllSketch): Array[Byte] = HllSketch.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): HllSketch = HllSketch.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllDistinct =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllDistinct =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): HllDistinct =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_hll_distinct"
-}
-
-/** `graft_hll_sketch(col, p)` — build the register file as a binary
-  * column: the scan-once half of the sketch-column pattern.
-  */
-case class HllSketchAgg(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllSketch] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): HllSketch = new HllSketch(p)
-
-  override def update(buffer: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(KmvHash.hash(v))
-    buffer
-  }
-
-  override def merge(buffer: HllSketch, other: HllSketch): HllSketch = buffer.merge(other)
-  override def eval(buffer: HllSketch): Any = HllSketch.toBytes(buffer)
-  override def serialize(buffer: HllSketch): Array[Byte] = HllSketch.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): HllSketch = HllSketch.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): HllSketchAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_hll_sketch"
-}
-
-/** `graft_hll_merge(sketch, p)` — register-wise-max rollup of built
-  * sketches (binary → binary); p must match every input sketch.
-  */
-case class HllMergeAgg(
-    child: Expression,
-    p: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllSketch] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): HllSketch = new HllSketch(p)
-
-  override def update(buffer: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.merge(HllSketch.fromBytes(v.asInstanceOf[Array[Byte]]))
-    else buffer
-  }
-
-  override def merge(buffer: HllSketch, other: HllSketch): HllSketch = buffer.merge(other)
-  override def eval(buffer: HllSketch): Any = HllSketch.toBytes(buffer)
-  override def serialize(buffer: HllSketch): Array[Byte] = HllSketch.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): HllSketch = HllSketch.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): HllMergeAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_hll_merge"
+final case class HllAgg(op: SketchOp, p: Int) extends Sketch[HllSketch] {
+  protected def family: String = "hll"
+  def empty(): HllSketch = new HllSketch(p)
+  def add(s: HllSketch, value: Any): HllSketch = { s.add(KmvHash.hash(value)); s }
+  def merge(s: HllSketch, other: HllSketch): HllSketch = s.merge(other)
+  override def estimate(s: HllSketch): Long = s.estimate
+  def toBytes(s: HllSketch): Array[Byte] = HllSketch.toBytes(s)
+  def fromBytes(bytes: Array[Byte]): HllSketch = HllSketch.fromBytes(bytes)
 }
 
 /** `graft_hll_estimate(sketch)` — distinct-count readout of a built

@@ -3,9 +3,7 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
@@ -221,90 +219,30 @@ object KllState {
     }
 }
 
-/** `graft_kll_sketch(col, k)` — build a KLL sketch over a numeric column;
-  * returns the serialized sketch (binary). Nulls and NaNs are skipped.
+/** The KLL aggregates: `graft_kll_sketch(col, k)`, the sketch of a
+  * numeric column (nulls and NaNs skipped), and `graft_kll_merge(sketch,
+  * k)`, the rollup of built sketches. Every merge clamps k to the smallest
+  * seen ([[KllState.mergeClamped]]).
   */
-case class KllBuildAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllState] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): KllState = new KllState(k)
-
-  override def update(buffer: KllState, input: InternalRow): KllState = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v match {
+final case class KllAgg(op: SketchOp, k: Int) extends Sketch[KllState] {
+  protected def family: String = "kll"
+  def empty(): KllState = new KllState(k)
+  def add(s: KllState, value: Any): KllState = {
+    s.update(value match {
       case d: Double => d
       case f: Float => f.toDouble
       case l: Long => l.toDouble
       case i: Int => i.toDouble
-      case s: Short => s.toDouble
+      case h: Short => h.toDouble
       case b: Byte => b.toDouble
       case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case other => throw new IllegalArgumentException(
-        s"graft_kll_sketch: non-numeric input $other")
+      case other => throw new IllegalArgumentException(s"$name: non-numeric input $other")
     })
-    buffer
+    s
   }
-
-  override def merge(buffer: KllState, other: KllState): KllState =
-    KllState.mergeClamped(buffer, other)
-  override def eval(buffer: KllState): Any = KllState.toBytes(buffer)
-  override def serialize(buffer: KllState): Array[Byte] = KllState.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): KllState = KllState.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllBuildAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllBuildAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KllBuildAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_kll_sketch"
-}
-
-/** `graft_kll_merge(sketch, k)` — re-aggregate already-built sketches
-  * (binary column → binary): the rollup step of the sketch-column
-  * pattern. Mismatched k clamps to the smallest seen.
-  */
-case class KllMergeAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllState] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): KllState = new KllState(k)
-
-  override def update(buffer: KllState, input: InternalRow): KllState = {
-    val v = child.eval(input)
-    if (v != null)
-      KllState.mergeClamped(buffer, KllState.fromBytes(v.asInstanceOf[Array[Byte]]))
-    else buffer
-  }
-
-  override def merge(buffer: KllState, other: KllState): KllState =
-    KllState.mergeClamped(buffer, other)
-  override def eval(buffer: KllState): Any = KllState.toBytes(buffer)
-  override def serialize(buffer: KllState): Array[Byte] = KllState.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): KllState = KllState.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KllMergeAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_kll_merge"
+  def merge(s: KllState, other: KllState): KllState = KllState.mergeClamped(s, other)
+  def toBytes(s: KllState): Array[Byte] = KllState.toBytes(s)
+  def fromBytes(bytes: Array[Byte]): KllState = KllState.fromBytes(bytes)
 }
 
 /** `graft_kll_quantile(sketch, q)` — quantile probe of a stored sketch.

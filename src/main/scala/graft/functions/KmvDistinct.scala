@@ -1,10 +1,7 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
 /** KMV (k-minimum-values) sketch state: the k smallest 63-bit hashes seen.
@@ -145,46 +142,22 @@ private[functions] object KmvHash {
   }
 }
 
-/** C06-class custom aggregate, imperative-buffer form (SURVEY.md §2.4 —
-  * the TypedImperativeAggregate shape that HLL-class sketches use, with
-  * explicit serialize/deserialize across partial-aggregation shuffles).
-  * Registered as `graft_kmv_distinct(col, k)` by GraftExtensions /
-  * Catalog. Property-checked against exact COUNT(DISTINCT) in
-  * KmvDistinctSpec; approximate by design, so not DuckDB-hash-declared
-  * (same status as C05's HLL).
+/** The KMV aggregates (C06 class): `graft_kmv_distinct(col, k)`, the
+  * distinct-count estimate; `graft_kmv_sketch(col, k)`, the sketch of the
+  * column's distinct values; `graft_kmv_merge(sketch, k)`, the union of
+  * built sketches. Every merge clamps k to the smallest seen (see
+  * [[KmvSketch.mergeClamped]]): a k=128 input sketch merged under
+  * graft_kmv_merge(sk, 256) must yield a k=128 result, not a 256-slot
+  * buffer that never fills and estimates "exactly". Property-checked
+  * against exact COUNT(DISTINCT) in KmvDistinctSpec; approximate by design,
+  * so not DuckDB-hash-declared (same status as C05's HLL).
   */
-case class KmvDistinct(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = LongType
-
-  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  override def update(buffer: KmvSketch, input: InternalRow): KmvSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(KmvHash.hash(v))
-    buffer
-  }
-
-  override def merge(buffer: KmvSketch, other: KmvSketch): KmvSketch = buffer.merge(other)
-
-  override def eval(buffer: KmvSketch): Any = buffer.estimate
-
-  override def serialize(buffer: KmvSketch): Array[Byte] = KmvSketch.toBytes(buffer)
-
-  override def deserialize(bytes: Array[Byte]): KmvSketch = KmvSketch.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvDistinct =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvDistinct =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KmvDistinct =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_kmv_distinct"
+final case class KmvAgg(op: SketchOp, k: Int) extends Sketch[KmvSketch] {
+  protected def family: String = "kmv"
+  def empty(): KmvSketch = new KmvSketch(k)
+  def add(s: KmvSketch, value: Any): KmvSketch = { s.add(KmvHash.hash(value)); s }
+  def merge(s: KmvSketch, other: KmvSketch): KmvSketch = KmvSketch.mergeClamped(s, other)
+  override def estimate(s: KmvSketch): Long = s.estimate
+  def toBytes(s: KmvSketch): Array[Byte] = KmvSketch.toBytes(s)
+  def fromBytes(bytes: Array[Byte]): KmvSketch = KmvSketch.fromBytes(bytes)
 }

@@ -1,16 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 
 /** KMV sketch COLUMNS (SURVEY.md §2.4 sketch family, the multiset-algebra
-  * layer of [[KmvDistinct]], per Beyer et al. SIGMOD 2007):
+  * layer of `graft_kmv_distinct`, per Beyer et al. SIGMOD 2007):
   *
-  *  - `graft_kmv_sketch(col, k)`   → binary  (aggregate: build a sketch)
-  *  - `graft_kmv_merge(sketch, k)` → binary  (aggregate: union sketches)
+  *  - `graft_kmv_sketch(col, k)`   → binary  (aggregate [[KmvAgg]]: build a sketch)
+  *  - `graft_kmv_merge(sketch, k)` → binary  (aggregate [[KmvAgg]]: union sketches)
   *  - `graft_kmv_estimate(sketch)` → bigint  (scalar: distinct estimate)
   *  - `graft_kmv_union(a, b)`      → bigint  (scalar: |A ∪ B| estimate)
   *  - `graft_kmv_intersect(a, b)`  → bigint  (scalar: |A ∩ B| estimate)
@@ -29,81 +27,6 @@ import org.apache.spark.sql.types._
   * (contrast with the per-row `graft_dot`/`graft_bloom_might_contain`,
   * which are full codegen expressions).
   */
-case class KmvSketchAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  override def update(buffer: KmvSketch, input: InternalRow): KmvSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(KmvHash.hash(v))
-    buffer
-  }
-
-  override def merge(buffer: KmvSketch, other: KmvSketch): KmvSketch = buffer.merge(other)
-  override def eval(buffer: KmvSketch): Any = KmvSketch.toBytes(buffer)
-  override def serialize(buffer: KmvSketch): Array[Byte] = KmvSketch.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): KmvSketch = KmvSketch.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KmvSketchAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_kmv_sketch"
-}
-
-/** Re-aggregation of already-built sketches (binary column → binary):
-  * the rollup step of the sketch-column pattern.
-  */
-case class KmvMergeAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  // Both paths clamp the effective k to the smallest seen (see
-  // KmvSketch.mergeClamped): a k=128 input sketch merged under
-  // graft_kmv_merge(sk, 256) must yield a k=128 result, not a 256-slot
-  // buffer that never fills and estimates "exactly".
-  override def update(buffer: KmvSketch, input: InternalRow): KmvSketch = {
-    val v = child.eval(input)
-    if (v != null)
-      KmvSketch.mergeClamped(buffer, KmvSketch.fromBytes(v.asInstanceOf[Array[Byte]]))
-    else buffer
-  }
-
-  override def merge(buffer: KmvSketch, other: KmvSketch): KmvSketch =
-    KmvSketch.mergeClamped(buffer, other)
-  override def eval(buffer: KmvSketch): Any = KmvSketch.toBytes(buffer)
-  override def serialize(buffer: KmvSketch): Array[Byte] = KmvSketch.toBytes(buffer)
-  override def deserialize(bytes: Array[Byte]): KmvSketch = KmvSketch.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): KmvMergeAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "graft_kmv_merge"
-}
-
 case class KmvEstimate(child: Expression)
   extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = LongType

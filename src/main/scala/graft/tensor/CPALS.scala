@@ -506,8 +506,8 @@ object CPALS {
     * another `rule` is given. The run stops once an iteration raises the
     * fit by less than `tol`, or after `maxIter` iterations. It is one job
     * of one [[SlabFit]] task per slab. A failure of a task or of this loop
-    * fails the run once, with its cause: the exchange fails every pending
-    * message, the job is cancelled and the endpoint stopped.
+    * fails the run once, with its cause: the job is cancelled (its tasks
+    * end killed), then the exchange fails and its endpoint stops.
     */
   private[graft] def fitPacked(
       packed: PackedTensor,
@@ -589,9 +589,11 @@ object CPALS {
         Await.result(job, Duration.Inf)
       } catch {
         case e: Throwable =>
-          exchange.fail(e)
+          // Cancel first: a task then ends killed at its next check, where
+          // failing the exchange first would fail every task with `e`.
           job.cancel()
           Await.ready(job, Duration.Inf)
+          exchange.fail(e)
           throw e
       }
     } finally exchange.close()

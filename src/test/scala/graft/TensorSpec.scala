@@ -413,9 +413,23 @@ class TensorSpec extends SparkSpec {
   test("CP fit: a failure in a slab task or on the driver fails the fit once and leaves nothing running") {
     val sc = spark.sparkContext
     val packed = CPALS.pack(nonnegCoo(16, 7, 6, 2, seed = 24), width = 2, numSlabs = 8)
+    // How many tasks of a fit started, and how each ended. The status
+    // tracker's running-task count can lag a task's start, so it could
+    // read 0 while tasks still run.
+    var started = 0
+    val ends = scala.collection.mutable.ArrayBuffer[org.apache.spark.TaskEndReason]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskStart(e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        ends.synchronized { started += 1 }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        ends.synchronized { ends += e.reason; () }
+    }
+    sc.addSparkListener(listener)
     try {
       val want = CPALS.fitPacked(packed, 2, 5L, Double.NegativeInfinity, 4)
       for ((onDriver, message) <- Seq(false -> "planted failure in slab 1", true -> "planted failure on the driver")) {
+        org.apache.spark.GraftListenerBus.drain(sc)
+        ends.synchronized { started = 0; ends.clear() }
         val t0 = System.nanoTime()
         val err = intercept[Throwable](
           CPALS.fitPacked(packed, 2, 5L, Double.NegativeInfinity, 4, TensorSpec.FailingRule(onDriver)))
@@ -426,16 +440,23 @@ class TensorSpec extends SparkSpec {
         // reaches the status tracker shortly after the fit sees it; none
         // may be left behind.
         val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        def running = sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum
+        def running = { org.apache.spark.GraftListenerBus.drain(sc); ends.synchronized(started - ends.size) }
         def jobs = sc.statusTracker.getActiveJobIds.toSeq
         while ((running > 0 || jobs.nonEmpty) && System.nanoTime() < deadline) Thread.sleep(20)
         assert(running == 0, s"onDriver=$onDriver: $running tasks still running")
         assert(jobs.isEmpty, s"onDriver=$onDriver: jobs $jobs still active")
         assert(org.apache.spark.GraftSlabExchange.registered(sc).isEmpty,
           s"endpoints left: ${org.apache.spark.GraftSlabExchange.registered(sc)}")
+        // A fault on the driver is not a slab's: every task ends killed.
+        if (onDriver) {
+          val reasons = ends.synchronized(ends.toList)
+          val failed = reasons.collect { case f: org.apache.spark.ExceptionFailure => f }
+          assert(reasons.nonEmpty && failed.isEmpty,
+            s"${failed.size} of ${reasons.size} slab tasks failed: ${failed.map(_.toErrorString).distinct}")
+        }
       }
       assertSameBits("after the failures", want, CPALS.fitPacked(packed, 2, 5L, Double.NegativeInfinity, 4))
-    } finally packed.unpersist()
+    } finally { sc.removeSparkListener(listener); packed.unpersist() }
   }
 
   test("CP-ALS and NN-HALS: a seeded fit over one packed tensor is bit-reproducible") {
